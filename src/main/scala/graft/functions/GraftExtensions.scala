@@ -68,8 +68,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (org.apache.spark.sql.catalyst.FunctionIdentifier("graft_tokens"),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
           classOf[Kernels.Tokens].getName, "graft_tokens"),
-        (children: Seq[Expression]) => Kernels.Tokens(
-          org.apache.spark.sql.catalyst.expressions.Lower(children.head))))
+        (children: Seq[Expression]) => Kernels.Tokens(children.head)))
     ext.injectFunction(
       (org.apache.spark.sql.catalyst.FunctionIdentifier("hyperplane_signature"),
         new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

@@ -1,7 +1,9 @@
 package graft.functions
 
+import com.ibm.icu.lang.UCharacter
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Shared loop bodies for the custom kernels in [[Kernels]].
   *
@@ -102,20 +104,42 @@ object KernelOps {
 
   private val wsPattern = java.util.regex.Pattern.compile("\\s+")
 
-  /** Split on whitespace runs + drop empties, exactly like
-    * `filter(split(text, "\\s+"), t => length(t) > 0)`: the same Java
-    * regex `Pattern.split` that Spark's `split` compiles to — but as one
-    * compiled call, with no per-element interpreted lambda (higher-order
-    * functions don't support codegen and would knock the whole projection
-    * out of the WholeStageCodegen span). Lowercasing is NOT done here —
-    * the Tokens column wrapper composes Spark's own `Lower` expression
-    * underneath, because reimplementing its case mapping diverges
-    * (ICU contextual final-sigma vs Java simple mapping — caught by the
-    * KernelsSpec equivalence property).
+  /** `spark.sql.icu.caseMappings.enabled` of the active session, which
+    * selects between the two case mappings of [[lower]].
     */
-  def tokens(s: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val parts = wsPattern.split(s.toString, -1)
+  def icuCaseMappings: Boolean =
+    org.apache.spark.sql.internal.SQLConf.get.getConf(
+      org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  /** `lower(.)` of a UTF8_BINARY string, call for call what Catalyst's
+    * `Lower` computes (`CollationSupport.Lower.exec`): with ICU case
+    * mappings (Spark's default) that is
+    * `CollationAwareUTF8String.toLowerCase` — ASCII fast path, else ICU's
+    * `UCharacter.toLowerCase` (contextual final sigma, İ → i̇) on the
+    * valid-UTF-8 form of the bytes; without them the JVM mapping
+    * `UTF8String.toLowerCase`. The call is made here rather than through
+    * `CollationAwareUTF8String` because that class's static initializer
+    * title-cases every one of the 1,114,112 code points: measured with
+    * Spark 4.1.2 on an x86-64 Xeon, 3.2 GB allocated and 1.5 s of CPU on
+    * one thread, with every task thread that reaches `lower` blocked on
+    * its init lock, where the direct ICU call costs 0.8 MB and 25 ms on
+    * first use.
+    */
+  def lower(s: UTF8String, icu: Boolean): UTF8String =
+    if (!icu) s.toLowerCase
+    else if (s.isFullAscii) s.toLowerCaseAscii
+    else UTF8String.fromString(UCharacter.toLowerCase(s.toValidString))
+
+  /** `filter(split(lower(s), "\\s+"), t => length(t) > 0)` as one
+    * compiled call: [[lower]] (Spark's own ICU call, made here so no
+    * tokenization reaches `CollationAwareUTF8String`'s class init), then
+    * the same Java regex `Pattern.split` that Spark's `split` compiles
+    * to, with no per-element interpreted lambda (higher-order functions
+    * don't support codegen and would knock the whole projection out of
+    * the WholeStageCodegen span).
+    */
+  def tokens(s: UTF8String, icu: Boolean): ArrayData = {
+    val parts = wsPattern.split(lower(s, icu).toString, -1)
     var n = 0
     var i = 0
     while (i < parts.length) { if (parts(i).nonEmpty) n += 1; i += 1 }

@@ -33,14 +33,23 @@ object Kernels {
           s"$name requires array<string> input, got $other")
     }
 
-  /** Whitespace tokenizer (split on `\s+` runs, drop empties). Single
-    * codegen'd expression — the composable `filter(split(.))` form is
-    * semantically identical but its higher-order `filter` cannot codegen,
-    * which would push every text scan out of the WholeStageCodegen span.
-    * The `graft_tokens` wrapper composes Spark's own `Lower` underneath
-    * so case mapping is exactly `lower(.)`'s (ICU contextual rules).
+  /** Lowercasing whitespace tokenizer: `lower`, split on `\s+` runs,
+    * drop empties. Single codegen'd expression — the composable
+    * `filter(split(lower(.)))` form is semantically identical but its
+    * higher-order `filter` cannot codegen, which would push every text
+    * scan out of the WholeStageCodegen span. The kernel lowercases
+    * itself with [[KernelOps.lower]], Spark's own ICU call for `lower(.)`,
+    * instead of composing Catalyst's `Lower`: that one routes through
+    * `CollationAwareUTF8String`, whose class init costs 3.2 GB of
+    * allocation and 1.5 s of CPU on first use. `icu` is
+    * `spark.sql.icu.caseMappings.enabled`, read at the same moment
+    * `Lower` reads it (its `useICU` lazy val): on first evaluation or
+    * code generation of this expression instance, not when the Column
+    * is built.
     */
   case class Tokens(child: Expression) extends UnaryExpression {
+    private lazy val icu: Boolean = KernelOps.icuCaseMappings
+
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
     override def prettyName: String = "graft_tokens"
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -53,11 +62,11 @@ object Kernels {
       }
 
     override def nullSafeEval(input: Any): Any =
-      KernelOps.tokens(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+      KernelOps.tokens(input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], icu)
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.KernelOps.tokens($c);")
+        s"${ev.value} = graft.functions.KernelOps.tokens($c, $icu);")
 
     override protected def withNewChildInternal(c: Expression): Tokens = copy(child = c)
   }
@@ -360,8 +369,7 @@ object Kernels {
   // ---- Column wrappers (classic-session Column <-> Expression bridge) ----
   import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
 
-  def graft_tokens(c: Column): Column =
-    column(Tokens(org.apache.spark.sql.catalyst.expressions.Lower(expression(c))))
+  def graft_tokens(c: Column): Column = column(Tokens(expression(c)))
 
   /** Bounded top-k aggregate (Spark's CollectTopK, the engine behind
     * pandas-API nlargest): keeps the k smallest values of `c` in a

@@ -23,27 +23,56 @@ class KernelsSpec extends AnyFunSuite {
   }
 
   test("Tokens kernel is exactly the filter(split(lower)) formulation (property)") {
-    // the kernel replaced the higher-order-function stack for codegen;
-    // semantics must be bit-identical on adversarial inputs — unicode,
-    // ascii/unicode whitespace, empties, case-folding edge cases
+    // the kernel replaced the higher-order-function stack for codegen and
+    // makes Spark's lowercasing call itself; semantics must be
+    // bit-identical on adversarial inputs — unicode, ascii/unicode
+    // whitespace, empties, case-folding edge cases where ICU and JVM
+    // mappings can differ, invalid UTF-8 — under both case-mapping settings
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
+    import org.apache.spark.unsafe.types.UTF8String
+    // capitals of recent Unicode versions (14: U+2C2F, U+A7C0; 16:
+    // U+A7CB, U+1C89, U+10D50) that ICU may lowercase while the running
+    // JDK does not; those that do differ here tell the two settings apart
+    val recent = Seq("\u2C2F", "\uA7C0", "\uA7CB", "\u1C89", "\uD803\uDD50")
+    val sentinels = recent.filter(c =>
+      com.ibm.icu.lang.UCharacter.toLowerCase(c) != UTF8String.fromString(c).toLowerCase.toString)
     val piece = Gen.oneOf(
       Gen.alphaNumStr.map(_.take(8)),
       Gen.oneOf(" ", "\t", "\n", "\r", "\f", "  ", " \t\n"),
-      Gen.oneOf("Ünïcödé", "ΣΊΣΥΦΟΣ", "İstanbul", "ß", "straße", "中文 词语", " ", ""))
+      Gen.oneOf("Ünïcödé", "ΣΊΣΥΦΟΣ", "ΟΔΟΣ", "İstanbul", "İ", "ǅ", "ß", "straße",
+        "中文 词语", " ", "", recent.mkString))
     val gen = Gen.listOfN(12, piece).map(_.mkString)
-    val samples = (0 until 300).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i))) :+
-      "" :+ " " :+ "  " :+ "a b"
-    val df = samples.toDF("t")
-    val both = df.select(
-      graft.functions.Kernels.graft_tokens(col("t")).as("kernel"),
-      filter(split(lower(col("t")), "\\s+"), x => length(x) > 0).as("hof"))
-    val mismatches = both.where(not(col("kernel") === col("hof"))).count()
-    assert(mismatches == 0, {
-      val bad = both.where(not(col("kernel") === col("hof"))).take(3).toSeq
-      s"kernel diverges from HOF formulation: $bad"
-    })
+    val samples = (0 until 300).flatMap(i => gen.apply(Gen.Parameters.default, Seed(i))) ++
+      Seq("", " ", "  ", "a b") ++ recent
+    // bytes no String can hold: a stray continuation byte, a truncated
+    // sequence, an encoded surrogate, an overlong NUL — lower's
+    // toValidString step repairs them
+    val invalid = Seq(Array(0x41, 0x80, 0x20, 0x42), Array(0xCE, 0x20, 0xA3, 0x53),
+      Array(0xED, 0xA0, 0x80, 0x20, 0x58), Array(0xC0, 0x80, 0x4F, 0xCE, 0xA3),
+      Array(0x53, 0x20, 0xFF, 0xFE)).map(_.map(_.toByte))
+    val df = (samples.map(_.getBytes("UTF-8")) ++ invalid).toDF("b")
+      .select(col("b").cast("string").as("t"))
+    val key = "spark.sql.icu.caseMappings.enabled"
+    val prev = spark.conf.get(key)
+    // each query is built under the other setting and run under this
+    // one: the kernel, like lower, reads the setting when it runs
+    val kernelBy = try for (icu <- Seq(true, false)) yield {
+      spark.conf.set(key, (!icu).toString)
+      val both = df.select(
+        graft.functions.Kernels.graft_tokens(col("t")).as("kernel"),
+        filter(split(lower(col("t")), "\\s+"), x => length(x) > 0).as("hof"))
+      spark.conf.set(key, icu.toString)
+      val rows = both.as[(Seq[String], Seq[String])].collect().toSeq
+      val bad = rows.filter { case (k, h) => k != h }
+      assert(bad.isEmpty, s"kernel diverges from HOF formulation (icu=$icu): ${bad.take(3)}")
+      rows.map(_._1)
+    } finally spark.conf.set(key, prev)
+    // the property above catches a kernel that ignores the setting only
+    // if some input lowercases differently under the two; on a JDK that
+    // already knows every capital in `recent`, none does
+    assume(sentinels.nonEmpty, "this JDK lowercases every capital in `recent` as ICU does")
+    assert(kernelBy(0) != kernelBy(1))
   }
 
   test("nfc_normalize: composes decomposed sequences, idempotent, ASCII passthrough") {

@@ -409,6 +409,37 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("admission screen, admission folds and tokens plan no Catalyst Lower/Upper") {
+    // Catalyst's Lower/Upper evaluate through CollationAwareUTF8String,
+    // whose class init allocates 3.2 GB on first use; the kernels make
+    // Spark's case-mapping call themselves (KernelOps.lower). Class-init
+    // state is not observable in the shared test JVM, so the guard is on
+    // the optimized plans.
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.catalyst.expressions.{Lower, Upper}
+    import graft.core.{Catalog, TempDirs}
+    def caseMaps(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collectWithSubqueries { case n => n.expressions }
+        .flatten.flatMap(_.collect { case e @ (_: Lower | _: Upper) => e })
+    // the guard can fire
+    val docs = graft.sources.Tables(spark, sf).documents
+    assert(caseMaps(docs.select(lower(col("text")))).nonEmpty)
+    val base = TempDirs.create("planq_casemap")
+    graft.EntryHelpers.admissionInit(base, docs)
+    val screened = Admission.screen(spark, base, "fps", docs, col("doc_id"), col("text"),
+      docs.where(col("doc_id") % 50 === 0), col("doc_id"), col("text"))
+    val stores = Catalog.readAll(spark, base)
+    val plans = Seq("screen" -> screened,
+        "tokens" -> docs.select(Stateless.tokens(col("text")))) ++
+      graft.EntryHelpers.admissionFolds.map { case (store, fold) =>
+        s"$store fold" -> fold(stores(store), screened) }
+    for ((name, df) <- plans) {
+      val hits = caseMaps(df)
+      assert(hits.isEmpty, s"$name plan has Catalyst case mapping $hits:\n" +
+        df.queryExecution.optimizedPlan)
+    }
+  }
+
   test("q169: catalog answers read standing stores only — the corpus is never re-scanned") {
     // the point of the catalog: answering (per-source stats + top
     // token) costs store-table reads, not a corpus pass. Any
