@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query, fully materialized via the
   * noop sink (a bare count() would let Catalyst prune computed columns and
   * under-measure). Output: a full-diagnostics JSON line followed by a
@@ -18,17 +16,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.GraftSession.CodegenCacheMaxEntries)
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.local(cpus, "bench")
     // Warm the JVM, codegen cache and parquet footer reads so the first
     // timed query doesn't absorb session startup.
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()

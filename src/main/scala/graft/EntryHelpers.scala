@@ -7,125 +7,64 @@ import org.apache.spark.sql.functions._
 import graft.ops._
 import graft.sources.Tables
 
-/** Shared machinery behind the [[SparkEntry]] driver contract: per-
-  * (process, sf dir) index/store/replay caches, the replay staging
-  * helpers, the catalog/admission scenario fixtures, and the reusable
-  * DuckDB oracle fragments. Split out of SparkEntry purely for
-  * navigability (round-11 verdict hygiene item) — no behavior change.
+/** Shared machinery behind the [[SparkEntry]] driver contract: the
+  * standing indexes several queries share and the replay stages, each
+  * built once per (process, sf dir) through [[Fixtures]], the
+  * catalog/admission scenario fixtures, and the reusable DuckDB oracle
+  * fragments. Split out of SparkEntry purely for navigability.
   */
 private[graft] object EntryHelpers {
   def dec(c: Column): Column = Aggregates.dec(c)
 
-  // q55's standing signature index, one per (process, sf dir) — see q55
-  val q55IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q80IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q103IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // standing indexes for the continuous-screening gates (q136/q139/q140),
-  // one per (process, sf dir) — q55's memoization pattern
-  val q136IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q139IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q191IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q197IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q198StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q200StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q224StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q228CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q234CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q236CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q238CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q241CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q242CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q243CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q244CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q252CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q253CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q140IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q143IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q144IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q145IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q146IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q150IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q160ViewCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q161StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q162StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q163StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // q164's atomic multi-store catalog (built once, crash-replayed inside
-  // the build), one per (process, sf dir)
-  val q164CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q168CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q169CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q171CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q172CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q173CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q174CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q175CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q176CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q177CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q178CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q179CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q180CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q181CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q183StoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q184OutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  val q185CatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // q135's duplicate-bearing replay (events ∪ +60 s echoes), one per
-  // (process, sf dir)
-  val q135ReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // q132's persisted vocab-count baseline, one per (process, sf dir)
-  val q132BaselineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // q130's OUT-OF-ORDER replay (fixed slice permutation + sentinel),
-  // one per (process, sf dir)
-  val q130ReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // Standing indexes shared by several queries, one per (process, sf
+  // dir) through [[Fixtures]]. Each builder lives here once, so every
+  // sibling query reads the same index the first of them built.
+
+  // q55's signature index (q55 and q151's cluster merge)
+  def dedupIndex(s: SparkSession, d: String): String =
+    Fixtures.once("q55_index", d) {
+      val p = graft.core.TempDirs.create("graft_q55_idx")
+      DedupIndex.build(Tables(s, d).documents, col("doc_id"), col("text"), p,
+        shingleN = 3, numHashes = 32, bands = 16, rowsPerBand = 2)
+      p
+    }
+  // q80's span index over the even-doc half (q80, q82 and q141 screen
+  // the odd half against it)
+  def spanIndex(s: SparkSession, d: String): String =
+    Fixtures.once("q80_index", d) {
+      val p = graft.core.TempDirs.create("graft_q80_idx")
+      SpanIndex.build(Tables(s, d).documents.where(col("doc_id") % 2 === 0),
+        col("doc_id"), col("text"), p, n = 8)
+      p
+    }
+  // q103's BM25 inverted index (q103 ranked, q187 boolean-AND, q189
+  // phrase and q138 streaming retrieval)
+  def bm25Index(s: SparkSession, d: String): String =
+    Fixtures.once("q103_index", d) {
+      val p = graft.core.TempDirs.create("graft_q103_idx") + "/bm25"
+      Bm25Index.build(Tables(s, d).documents, col("doc_id"), col("text"), p)
+      p
+    }
+  // q191's trigram index (q191 substring, q221 KWIC, q223 LIKE, q226 and
+  // q240 regex, and the q209/q237 streaming twins)
+  def trigramIndex(s: SparkSession, d: String): String =
+    Fixtures.once("q191_index", d) {
+      val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
+      TrigramIndex.build(Tables(s, d).documents, col("doc_id"), col("text"), p)
+      p
+    }
+  // q127/q132/q142's corpus split: md5's first hex digit < "8" is the
+  // baseline half, the rest is the corpus version checked against it
+  def vocabHalf: Column = substring(md5(col("doc_id").cast("string")), 1, 1)
+  // q132's persisted vocab-count baseline over the first half
+  def vocabBaseline(s: SparkSession, d: String): String =
+    Fixtures.once("q132_baseline", d) {
+      val t = graft.core.TempDirs.create("graft_q132")
+      TextAnalysis.vocabCounts(Tables(s, d).documents.where(vocabHalf < "8"),
+        col("text")).write.mode("overwrite").parquet(s"$t/baseline")
+      s"$t/baseline"
+    }
+
   // q130's delivery order: each quarter of the corpus arrives with its
   // two slices swapped ACROSS the next quarter's two slices (sentinel,
   // 8, still last). The two-position displacement matters: Spark
@@ -141,30 +80,25 @@ private[graft] object EntryHelpers {
   // the shared out-of-order stage (q130 tumbling late-drop, q167 session
   // late-drop): events in q130Order slices plus the far-future sentinel
   def shuffledReplayDir(s: SparkSession, d: String): String =
-    q130ReplayCache.computeIfAbsent(d, _ => {
+    Fixtures.once("q130_replay", d) {
       val ev = Tables(s, d).events.select(replayCols: _*)
       val dir = graft.streaming.Replay.writeShuffledSlices(ev,
         unix_millis(col("ts")),
         graft.core.TempDirs.create("graft_q130"),
         q130Order)
       graft.streaming.Replay.appendSlice(dir, sentinelRow(s, sentinelTsUs), 8)
-    })
-  // q117's re-chunked replay input, one per (process, sf dir)
-  val q117ReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
+  // full operator column set — q118/q119 use (user_id, event_type, ts),
+  // q123 additionally event_id, q124 event_id + the join pair columns
+  def replayCols: Seq[Column] =
+    Seq(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
   // q118/q119's time-sliced replay input, one per (process, sf dir):
   // events split into 8 contiguous ms ranges with strictly ascending
   // file mtimes, so a maxFilesPerTrigger=1 file stream delivers them in
   // EVENT-TIME order (FileStreamSource processes oldest-first) — the
   // regime where the streaming twins' parity contracts hold exactly.
-  val eventsReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // full operator column set — q118/q119 use (user_id, event_type, ts),
-  // q123 additionally event_id, q124 event_id + the join pair columns
-  def replayCols: Seq[Column] =
-    Seq(col("event_id"), col("user_id"), col("event_type"), col("value"), col("ts"))
   def eventsReplayDir(s: SparkSession, d: String): String =
-    eventsReplayCache.computeIfAbsent(d, _ =>
+    Fixtures.once("events_replay", d)(
       graft.streaming.Replay.writeOrderedSlices(
         Tables(s, d).events.select(replayCols: _*),
         unix_millis(col("ts")),
@@ -172,12 +106,6 @@ private[graft] object EntryHelpers {
   def eventsReplayStream(s: SparkSession, d: String): DataFrame =
     graft.streaming.Replay.orderedStream(s, eventsReplayDir(s, d),
       Tables(s, d).events.select(replayCols: _*).schema)
-  // q122's replay: the same 8 ordered slices PLUS a watermark-advancing
-  // sentinel slice (one row a day past the corpus, event_type
-  // "__sentinel__"). Separate dir — the sentinel row must never reach
-  // q118/q119's user-keyed state.
-  val sentinelReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   // the sentinel sits at a FIXED far-future instant (2100-01-01 UTC) and
   // consumers exclude it with a predicate ON THE EVENT-TIME COLUMN
   // (ts < 2099-01-01): Catalyst pushes filters on other columns BELOW the
@@ -194,14 +122,18 @@ private[graft] object EntryHelpers {
     s.range(1).select(lit(-1L).as("event_id"), lit(-1L).as("user_id"),
       lit("__sentinel__").as("event_type"), lit(0.0).as("value"),
       timestamp_micros(lit(tsUs)).as("ts"))
+  // q122's replay: the same 8 ordered slices PLUS a watermark-advancing
+  // sentinel slice (one row a day past the corpus, event_type
+  // "__sentinel__"). Separate dir — the sentinel row must never reach
+  // q118/q119's user-keyed state.
   def sentinelReplayDir(s: SparkSession, d: String): String =
-    sentinelReplayCache.computeIfAbsent(d, _ => {
+    Fixtures.once("sentinel_replay", d) {
       val ev = Tables(s, d).events.select(replayCols: _*)
       val dir = graft.streaming.Replay.writeOrderedSlices(ev,
         unix_millis(col("ts")),
         graft.core.TempDirs.create("graft_evreplay_s"))
       graft.streaming.Replay.appendSlice(dir, sentinelRow(s, sentinelTsUs), 8)
-    })
+    }
   // q149's replay: the ordered slices plus TWO trailing sentinel slices.
   // Chained stateful aggregations cascade one micro-batch per level —
   // the first watermark advance finalizes the windowed counts, and the
@@ -209,10 +141,8 @@ private[graft] object EntryHelpers {
   // finalized rows and fire them (StreamingSpec's trending-tokens test
   // needed the same two flushes). Both sentinels sit past sentinelCutoff
   // so the ts predicate removes them after their event time registers.
-  val trendReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def trendReplayDir(s: SparkSession, d: String): String =
-    trendReplayCache.computeIfAbsent(d, _ => {
+    Fixtures.once("trend_replay", d) {
       val ev = Tables(s, d).events.select(replayCols: _*)
       val dir = graft.streaming.Replay.writeOrderedSlices(ev,
         unix_millis(col("ts")),
@@ -220,7 +150,7 @@ private[graft] object EntryHelpers {
       graft.streaming.Replay.appendSlice(dir, sentinelRow(s, sentinelTsUs), 8)
       graft.streaming.Replay.appendSlice(dir,
         sentinelRow(s, sentinelTsUs + 86400000000L), 9)
-    })
+    }
 
   // q102/q103's shared retrieval workload: three fixed queries over the
   // corpus vocabulary (lowercase single-space, so DuckDB's split replays
@@ -242,11 +172,9 @@ private[graft] object EntryHelpers {
   // order-column slices — the continuous-ingestion regime the standing-
   // index screeners run under. Memoized per (process, sf dir, query)
   // like every replay stage (bench runs each query 3x).
-  val screenReplayCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def screenReplayDir(key: String, df: => DataFrame, orderBy: Column,
                               slices: Int): String =
-    screenReplayCache.computeIfAbsent(key, _ =>
+    Fixtures.once("screen_replay", key)(
       graft.streaming.Replay.writeOrderedSlices(df, orderBy,
         graft.core.TempDirs.create("graft_screen"), slices))
 

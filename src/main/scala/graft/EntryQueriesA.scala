@@ -409,12 +409,7 @@ private[graft] object EntryQueriesA {
       // (process, sf dir): it is a STANDING index by design, and an
       // unmemoized build would leave one full shingles+bands copy in /tmp
       // per invocation (bench runs 3x per round) until the disk fills.
-      val idx = q55IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q55_idx")
-        DedupIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p,
-          shingleN = 3, numHashes = 32, bands = 16, rowsPerBand = 2)
-        p
-      })
+      val idx = dedupIndex(s, d)
       val pairs = DedupIndex.pairs(s, idx, threshold = 0.8)
       Clusters.connectedComponents(pairs, col("id_a"), col("id_b"))
     }),

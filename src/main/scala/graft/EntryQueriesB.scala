@@ -331,11 +331,11 @@ private[graft] object EntryQueriesB {
       val li = Tables(s, d).lineitem
       // replay input written once per (process, sf dir) — bench repeats
       // measure the streaming replay, not parquet re-chunking
-      val tmp = q117ReplayCache.computeIfAbsent(d, _ => {
+      val tmp = Fixtures.once("q117_replay", d) {
         val t = graft.core.TempDirs.create("graft_q117")
         li.repartition(8).write.mode("overwrite").parquet(s"$t/in")
         t
-      })
+      }
       // a stateful micro-batch commits one state-store instance per
       // shuffle partition per trigger; the gate's state is R=5 rows, so
       // core-count partitions pay ~8x per-batch overhead for empty
@@ -407,11 +407,7 @@ private[graft] object EntryQueriesB {
       // edge-clipped 15-char-each-side snippet (the grep -C of the
       // standing index; per-hit work only). Oracle replays instr +
       // the same clipped substring arithmetic.
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val qs = Seq((0L, "ge bat"), (1L, "le sor"), (2L, "rt join"))
         .toDF("qid", "pat")

@@ -24,14 +24,14 @@ private[graft] object EntryQueriesC {
       // arrive in 6 contiguous event-time slices, so the grown state
       // must equal q195's one-shot scan — its oracle gates the
       // lifecycle.
-      val store = q200StoreCache.computeIfAbsent(d, { dir =>
+      val store = Fixtures.once("q200_store", d) {
         val p = graft.core.TempDirs.create("graft_q200_store") + "/cusum"
-        val ev = Tables(s, dir).events.select(col("user_id"), col("ts"),
+        val ev = Tables(s, d).events.select(col("user_id"), col("ts"),
           col("event_id"), (dec(col("value")) * 100).cast("long").as("cents"))
         Timeseries.initCusumStore(ev.where(lit(false)), Seq("user_id"),
           col("ts"), col("event_id"), col("cents"), 5000L, 20000L, p)
         withShufflePartitions(s, 8) {
-          val stage = screenReplayDir(s"$dir#q200", ev, unix_micros(col("ts")), 6)
+          val stage = screenReplayDir(s"$d#q200", ev, unix_micros(col("ts")), 6)
           val stream = graft.streaming.Replay.orderedStream(s, stage, ev.schema)
           val q = Timeseries.cusumStream(s, stream, Seq("user_id"),
             col("ts"), col("event_id"), col("cents"), 5000L, 20000L, p,
@@ -39,7 +39,7 @@ private[graft] object EntryQueriesC {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       Timeseries.readCusumStore(s, store)
         .select(col("user_id"), col("n"), col("max_cusum"),
           col("n_breach"), col("first_breach_us"))
@@ -57,9 +57,9 @@ private[graft] object EntryQueriesC {
       // each batch scan — per-trigger work is batch-sized, zero corpus
       // shuffle. Oracle replays the profile with q186's rank
       // convention, then the same flags over the odd-day union.
-      val store = q224StoreCache.computeIfAbsent(d, { dir =>
+      val store = Fixtures.once("q224_store", d) {
         val p = graft.core.TempDirs.create("graft_q224_store") + "/mad"
-        val ev = Tables(s, dir).events.select(col("event_type"),
+        val ev = Tables(s, d).events.select(col("event_type"),
           (dayBucket(col("ts")) % 2).as("par"),
           col("ts"), (dec(col("value")) * 100).cast("long").as("cents"))
         Quantiles.initMadMonitor(
@@ -67,14 +67,14 @@ private[graft] object EntryQueriesC {
             Seq("event_type"), col("cents")), p)
         withShufflePartitions(s, 8) {
           val odd = ev.where(col("par") === 1)
-          val stage = screenReplayDir(s"$dir#q224", odd, unix_micros(col("ts")), 3)
+          val stage = screenReplayDir(s"$d#q224", odd, unix_micros(col("ts")), 3)
           val stream = graft.streaming.Replay.orderedStream(s, stage, odd.schema)
           val q = Quantiles.madMonitorStream(s, stream, Seq("event_type"),
             col("cents"), p, ephemeralOk = true)
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       Quantiles.readMadMonitor(s, store)
         .select(col("event_type"), col("median"), col("mad"),
           col("n_seen"), col("n_flagged"))
@@ -226,14 +226,14 @@ private[graft] object EntryQueriesC {
       // partkeys, the odd half arrives in 4 ledgered micro-batches;
       // the grown frontier must equal q192's one-shot skyline, so its
       // NOT EXISTS oracle gates the whole lifecycle.
-      val store = q198StoreCache.computeIfAbsent(d, { dir =>
+      val store = Fixtures.once("q198_store", d) {
         val p = graft.core.TempDirs.create("graft_q198_store") + "/sky"
-        val rows = Tables(s, dir).part.select(col("p_brand"), col("p_partkey"),
+        val rows = Tables(s, d).part.select(col("p_brand"), col("p_partkey"),
           col("p_size"), dec(col("p_retailprice")).as("price"))
         Frontier.initSkylineStore(rows.where(col("p_partkey") % 2 === 0),
           Seq("p_brand"), "p_size", "price", p)
         withShufflePartitions(s, 8) {
-          val stage = screenReplayDir(s"$dir#q198",
+          val stage = screenReplayDir(s"$d#q198",
             rows.where(col("p_partkey") % 2 === 1), col("p_partkey"), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage, rows.schema)
           val q = Frontier.skylineStream(s, stream,
@@ -241,7 +241,7 @@ private[graft] object EntryQueriesC {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       Frontier.readSkylineStore(s, store)
         .select(col("p_brand"), col("p_partkey"), col("p_size"),
           col("price").cast("double").as("price"))
@@ -722,14 +722,14 @@ private[graft] object EntryQueriesC {
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       try {
-        val stage = q135ReplayCache.computeIfAbsent(d, _ => {
+        val stage = Fixtures.once("q135_replay", d) {
           val ev = Tables(s, d).events.select(replayCols: _*)
           val echoes = ev.where(col("event_type") === "click")
             .withColumn("ts", timestamp_micros(unix_micros(col("ts")) + 60000000L))
           graft.streaming.Replay.writeOrderedSlices(ev.unionByName(echoes),
             unix_millis(col("ts")),
             graft.core.TempDirs.create("graft_q135"))
-        })
+        }
         val stream = graft.streaming.Replay.orderedStream(s, stage,
           Tables(s, d).events.select(replayCols: _*).schema)
         val out = graft.streaming.StreamOps.dedup(stream, "ts", "2 hours",
@@ -837,9 +837,8 @@ private[graft] object EntryQueriesC {
       // change shift the data": vocab-sized join, corpus never shuffled,
       // DECIMAL(38,0) products so every engine agrees exactly
       val docs = Tables(s, d).documents
-      val half = substring(md5(col("doc_id").cast("string")), 1, 1)
       TextAnalysis.tokenDrift(
-        docs.where(half < "8"), docs.where(half >= "8"),
+        docs.where(vocabHalf < "8"), docs.where(vocabHalf >= "8"),
         col("text"), col("text"))
         .orderBy(col("move").desc, col("token").asc)
         .limit(50)
@@ -862,16 +861,10 @@ private[graft] object EntryQueriesC {
       // roundtrip loss through the persisted counts (type widening,
       // token normalization, count drift) breaks the hash compare.
       val docs = Tables(s, d).documents
-      val half = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = q132BaselineCache.computeIfAbsent(d, _ => {
-        val t = graft.core.TempDirs.create("graft_q132")
-        TextAnalysis.vocabCounts(docs.where(half < "8"), col("text"))
-          .write.mode("overwrite").parquet(s"$t/baseline")
-        s"$t/baseline"
-      })
+      val base = vocabBaseline(s, d)
       TextAnalysis.tokenDriftCounts(
         s.read.parquet(base).select(col("token"), col("n")),
-        TextAnalysis.vocabCounts(docs.where(half >= "8"), col("text")))
+        TextAnalysis.vocabCounts(docs.where(vocabHalf >= "8"), col("text")))
         .orderBy(col("move").desc, col("token").asc)
         .limit(50)
         .withColumn("move", col("move").cast("long"))
@@ -946,11 +939,7 @@ private[graft] object EntryQueriesC {
       // once per sf dir — q55's memoization pattern): the postings scan
       // is pruned to the query's terms by a pushed parquet In filter,
       // so the corpus-sized table is never fully read
-      val idx = q103IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q103_idx") + "/bm25"
-        Bm25Index.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = bm25Index(s, d)
       Bm25Index.search(s, bm25Queries(s), col("qid"), col("qtext"), idx, k = 10)
     }),
     "q100_dsir_weights" -> ((s, d) => {
@@ -1068,12 +1057,7 @@ private[graft] object EntryQueriesC {
       // admission-time scrub against the standing gram index (q80's
       // memoized even-id index): odd-id docs rebuilt with every span
       // already present in the indexed corpus removed
-      val idx = q80IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q80_idx")
-        SpanIndex.build(Tables(s, dir).documents.where(col("doc_id") % 2 === 0),
-          col("doc_id"), col("text"), p, n = 8)
-        p
-      })
+      val idx = spanIndex(s, d)
       SpanIndex.scrub(s, Tables(s, d).documents.where(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"), idx, n = 8)
     }),
@@ -1089,12 +1073,7 @@ private[graft] object EntryQueriesC {
       // against it: which spans of incoming docs already exist verbatim
       // in the indexed corpus
       val docs = Tables(s, d).documents
-      val idx = q80IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q80_idx")
-        SpanIndex.build(Tables(s, dir).documents.where(col("doc_id") % 2 === 0),
-          col("doc_id"), col("text"), p, n = 8)
-        p
-      })
+      val idx = spanIndex(s, d)
       SpanIndex.check(s, docs.where(col("doc_id") % 2 === 1),
         col("doc_id"), col("text"), idx, n = 8)
     }),
@@ -1223,13 +1202,13 @@ private[graft] object EntryQueriesC {
       // true pair at jaccard 0.8 misses with probability < 1e-7, so the
       // brute-force cross oracle is exact.
       val docs = Tables(s, d).documents
-      val idx = q136IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q136_index", d) {
         val p = graft.core.TempDirs.create("graft_q136_idx")
-        DedupIndex.build(Tables(s, dir).documents.where(col("doc_id") % 2 === 0),
+        DedupIndex.build(Tables(s, d).documents.where(col("doc_id") % 2 === 0),
           col("doc_id"), col("text"), p,
           shingleN = 3, numHashes = 32, bands = 16, rowsPerBand = 2)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q136",
           docs.where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),

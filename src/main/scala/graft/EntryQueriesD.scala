@@ -65,9 +65,9 @@ private[graft] object EntryQueriesD {
       // vocabulary-sized stores. Counts are additive, so the fold is
       // delivery-order independent and q247's batch oracle holds
       // verbatim for the final store state.
-      val base = q252CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q252_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q252_cat") + "/chi2"
-        val docs = Tables(s, dir).documents
+        val docs = Tables(s, d).documents
           .select(col("doc_id"), col("lang"), col("text"))
         graft.core.Catalog.init(p, Map(
           "tl" -> docs.limit(0).select(lit("").as("token"),
@@ -89,7 +89,7 @@ private[graft] object EntryQueriesD {
           // values, and a dropped row would break the shared-verbatim
           // oracle contract (doc_id is non-null here, but the contract
           // shouldn't depend on it)
-          val stage = screenReplayDir(s"$dir#q252", docs,
+          val stage = screenReplayDir(s"$d#q252", docs,
             coalesce(col("doc_id"), lit(Long.MinValue)), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage, docs.schema)
           val q = graft.core.Catalog.ingestStream(s, stream, p,
@@ -97,7 +97,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       TextAnalysis.chiSquareFromCounts(
         graft.core.Catalog.read(s, base, "tl"),
         graft.core.Catalog.read(s, base, "lbl"), topK = 10, minDocs = 3L)
@@ -109,9 +109,9 @@ private[graft] object EntryQueriesD {
       // READ-side Timeseries.autocorr over the key-sized series — the
       // monitor re-scores at any moment without touching raw events.
       // Oracle: q246's SQL verbatim (the fold roundtrip is invisible).
-      val base = q253CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q253_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q253_cat") + "/acf"
-        val ev = Tables(s, dir).events
+        val ev = Tables(s, d).events
           .select(col("event_type"), col("ts"), col("event_id"))
         graft.core.Catalog.init(p, Map(
           "daily" -> ev.limit(0).select(col("event_type"),
@@ -123,7 +123,7 @@ private[graft] object EntryQueriesD {
           // NULL-safe replay order (see q252): a NULL ts must reach the
           // store — where the shared autocorr NULL-tick guard raises,
           // exactly as the batch twin would — not silently vanish
-          val stage = screenReplayDir(s"$dir#q253", ev,
+          val stage = screenReplayDir(s"$d#q253", ev,
             coalesce(unix_micros(col("ts")), lit(Long.MinValue)), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage, ev.schema)
           val q = graft.core.Catalog.ingestStream(s, stream, p,
@@ -131,7 +131,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       Timeseries.autocorr(graft.core.Catalog.read(s, base, "daily"),
         Seq("event_type"), col("day"), col("x"), maxLag = 7)
     }),
@@ -167,11 +167,7 @@ private[graft] object EntryQueriesD {
       // never corpus-wide. Oracle: space-joined token string contains
       // the space-joined phrase with boundary pads (tokens cannot
       // contain whitespace, so string containment == sequence match).
-      val idx = q103IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q103_idx") + "/bm25"
-        Bm25Index.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = bm25Index(s, d)
       import s.implicits._
       val qs = Seq((0L, "table hash"), (1L, "customer join"),
         (2L, "merge batch part")).toDF("qid", "qtext")
@@ -186,11 +182,7 @@ private[graft] object EntryQueriesD {
       // Candidates are cut by the counting AND over the gram-pruned
       // postings scan, then only candidates' text fetches for the
       // exact contains verify. Oracle: the plain corpus-scan LIKE.
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val qs = Seq((0L, "ge bat"), (1L, "le sor"), (2L, "rt join"))
         .toDF("qid", "pat")
@@ -207,11 +199,7 @@ private[graft] object EntryQueriesD {
       // only. The three patterns exercise multi-run `%` (ordered
       // terms), a `_` single-char wildcard inside a run boundary, and
       // a prefix anchor. Oracle: the plain corpus-scan LIKE.
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val qs = Seq((0L, "%merge%join%"), (1L, "%sort%tab_e%"),
         (2L, "the%stream%")).toDF("qid", "pat")
@@ -230,11 +218,7 @@ private[graft] object EntryQueriesD {
       // groups/classes/escapes/anchors fail fast, as do patterns with
       // no 3+-char literal run. Oracle: DuckDB regexp_matches over
       // the lowercased corpus.
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val qs = Seq((0L, "merge.*batch"), (1L, "sorts? merge"),
         (2L, "table .able")).toDF("qid", "pat")
@@ -253,11 +237,11 @@ private[graft] object EntryQueriesD {
       // right, and view advance under ONE manifest swap, so no crash
       // can tear the view from the sides it derives from. Oracle:
       // the plain batch join.
-      val base = q228CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q228_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q228_cat") + "/jv"
-        val o = Tables(s, dir).orders
+        val o = Tables(s, d).orders
           .select(col("o_orderkey").as("k"), col("o_custkey"))
-        val l = Tables(s, dir).lineitem
+        val l = Tables(s, d).lineitem
           .select(col("l_orderkey").as("k"),
             col("l_linenumber").cast("long").as("l_linenumber"),
             (dec(col("l_extendedprice")) * 100).cast("long").as("cents"))
@@ -269,7 +253,7 @@ private[graft] object EntryQueriesD {
             col("l_linenumber"), col("cents")))
         JoinView.init(s, p, o.limit(0), l.limit(0), Seq("k"))
         withShufflePartitions(s, 8) {
-          val stage = screenReplayDir(s"$dir#q228", changes,
+          val stage = screenReplayDir(s"$d#q228", changes,
             col("k") * 8 + coalesce(col("l_linenumber"), lit(0L)), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage, changes.schema)
           val q = graft.core.Catalog.ingestStream(s, stream, p,
@@ -280,7 +264,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       JoinView.read(s, base).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -356,11 +340,11 @@ private[graft] object EntryQueriesD {
       // from the join it summarizes and never re-reads it either —
       // per trigger the aggregate pays delta-sized work plus its own
       // key-grain table. Oracle: the one-shot join + group-by.
-      val base = q234CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q234_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q234_cat") + "/jv"
-        val o = Tables(s, dir).orders
+        val o = Tables(s, d).orders
           .select(col("o_orderkey").as("k"), col("o_custkey"))
-        val l = Tables(s, dir).lineitem
+        val l = Tables(s, d).lineitem
           .select(col("l_orderkey").as("k"),
             col("l_linenumber").cast("long").as("l_linenumber"),
             (dec(col("l_extendedprice")) * 100).cast("long").as("cents"))
@@ -386,7 +370,7 @@ private[graft] object EntryQueriesD {
               .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))))
         withShufflePartitions(s, 8) {
           // the SAME staged slices as q228 (memoized by key)
-          val stage = screenReplayDir(s"$dir#q228", changes,
+          val stage = screenReplayDir(s"$d#q228", changes,
             col("k") * 8 + coalesce(col("l_linenumber"), lit(0L)), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage, changes.schema)
           val q = graft.core.Catalog.ingestStream(s, stream, p, folds,
@@ -394,7 +378,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       graft.core.Catalog.read(s, base, "agg")
     }),
     "q236_join_view_restart" -> ((s, d) => {
@@ -407,11 +391,11 @@ private[graft] object EntryQueriesD {
       // requireDurableCheckpoint hazard, here exercised end-to-end).
       // Any resume drift, double-fold, or torn store breaks the
       // compare with the one-shot batch join.
-      val base = q236CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q236_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q236_cat") + "/jv"
-        val o = Tables(s, dir).orders
+        val o = Tables(s, d).orders
           .select(col("o_orderkey").as("k"), col("o_custkey"))
-        val l = Tables(s, dir).lineitem
+        val l = Tables(s, d).lineitem
           .select(col("l_orderkey").as("k"),
             col("l_linenumber").cast("long").as("l_linenumber"),
             (dec(col("l_extendedprice")) * 100).cast("long").as("cents"))
@@ -447,7 +431,7 @@ private[graft] object EntryQueriesD {
         require(graft.core.Catalog.lastBatch(s, p) == 3L,
           "q236: the restart must resume batch ids at 2, not renumber from 0")
         p
-      })
+      }
       JoinView.read(s, base).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -459,11 +443,7 @@ private[graft] object EntryQueriesD {
       // query vocabulary at the source; the AND is a counting
       // aggregate against broadcast per-query term counts. Oracle
       // re-derives postings and the same count-equality in SQL.
-      val idx = q103IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q103_idx") + "/bm25"
-        Bm25Index.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = bm25Index(s, d)
       Bm25Index.searchAll(s, bm25Queries(s), col("qid"), col("qtext"), idx)
     }),
     "q138_bm25_search_stream" -> ((s, d) => {
@@ -471,11 +451,7 @@ private[graft] object EntryQueriesD {
       // queries arrive one per micro-batch and search the SAME standing
       // inverted index; per-query independence makes q103's oracle the
       // stream's oracle verbatim.
-      val idx = q103IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q103_idx") + "/bm25"
-        Bm25Index.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = bm25Index(s, d)
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q138", bm25Queries(s), col("qid"), 3)
         val stream = graft.streaming.Replay.orderedStream(s, stage,
@@ -493,12 +469,12 @@ private[graft] object EntryQueriesD {
       // query gates both the standing IVF index's search path and its
       // continuous form), queries arriving in 4 micro-batches.
       val em = Tables(s, d).embeddings
-      val idx = q139IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q139_index", d) {
         val p = graft.core.TempDirs.create("graft_q139_idx") + "/ivf"
-        IvfIndex.build(Tables(s, dir).embeddings,
+        IvfIndex.build(Tables(s, d).embeddings,
           col("vec_id"), col("embedding"), nCells = 16, p)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q139",
           em.where(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
@@ -519,14 +495,14 @@ private[graft] object EntryQueriesD {
       // and the brute-force cross oracle is exact; cos is dropped from
       // the output like q72 (pair SET is the cross-engine-stable result).
       val em = Tables(s, d).embeddings
-      val idx = q140IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q140_index", d) {
         val p = graft.core.TempDirs.create("graft_q140_idx")
         CosineIndex.build(
-          Tables(s, dir).embeddings.select(col("vec_id").as("id"),
+          Tables(s, d).embeddings.select(col("vec_id").as("id"),
             transform(col("embedding"), x => x.cast("double")).as("v")),
           col("id"), col("v"), p, bands = 8, rowsPerBand = 16)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q140",
           em.where(col("vec_id") % 20 === 0)
@@ -554,12 +530,7 @@ private[graft] object EntryQueriesD {
       // index. Span merging is PER document and doc_id slicing keeps each
       // doc whole in one batch, so q80's oracle holds unchanged.
       val docs = Tables(s, d).documents
-      val idx = q80IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q80_idx")
-        SpanIndex.build(Tables(s, dir).documents.where(col("doc_id") % 2 === 0),
-          col("doc_id"), col("text"), p, n = 8)
-        p
-      })
+      val idx = spanIndex(s, d)
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q141",
           docs.where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
@@ -582,16 +553,10 @@ private[graft] object EntryQueriesD {
       // whole roundtrip — slicing, per-batch counting, fold, stored
       // baseline — must be invisible).
       val docs = Tables(s, d).documents
-      val half = substring(md5(col("doc_id").cast("string")), 1, 1)
-      val base = q132BaselineCache.computeIfAbsent(d, _ => {
-        val t = graft.core.TempDirs.create("graft_q132")
-        TextAnalysis.vocabCounts(docs.where(half < "8"), col("text"))
-          .write.mode("overwrite").parquet(s"$t/baseline")
-        s"$t/baseline"
-      })
+      val base = vocabBaseline(s, d)
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q142",
-          docs.where(half >= "8").select(col("doc_id"), col("text")),
+          docs.where(vocabHalf >= "8").select(col("doc_id"), col("text")),
           col("doc_id"), 4)
         val stream = graft.streaming.Replay.orderedStream(s, stage,
           docs.select(col("doc_id"), col("text")).schema)
@@ -618,12 +583,12 @@ private[graft] object EntryQueriesD {
       // KMeans.fit's own (shared code, integer-exact), so q88's unrolled
       // Lloyd oracle holds for the batch-by-batch assignment union.
       val em = Tables(s, d).embeddings
-      val idx = q143IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q143_index", d) {
         val p = graft.core.TempDirs.create("graft_q143_idx") + "/km"
-        KMeansIndex.build(Tables(s, dir).embeddings,
+        KMeansIndex.build(Tables(s, d).embeddings,
           col("vec_id"), col("embedding"), k = 8, iters = 2, p)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q143",
           em.select(col("vec_id"), col("embedding")), col("vec_id"), 4)
@@ -645,13 +610,13 @@ private[graft] object EntryQueriesD {
       // lifecycle. Ingestion is memoized per (process, sf dir) like
       // every standing index — and a re-run of the same fold stream is
       // a no-op by the batch-id ledger anyway.
-      val idx = q144IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q144_index", d) {
         val p = graft.core.TempDirs.create("graft_q144_idx") + "/bm25"
-        val docs = Tables(s, dir).documents
+        val docs = Tables(s, d).documents
         Bm25Index.build(docs.where(col("doc_id") % 2 === 0),
           col("doc_id"), col("text"), p)
         withShufflePartitions(s, 8) {
-          val stage = screenReplayDir(s"$dir#q144",
+          val stage = screenReplayDir(s"$d#q144",
             docs.where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
             col("doc_id"), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage,
@@ -660,7 +625,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       Bm25Index.search(s, bm25Queries(s), col("qid"), col("qtext"), idx, k = 10)
     }),
     "q209_substring_search_stream" -> ((s, d) => {
@@ -669,11 +634,7 @@ private[graft] object EntryQueriesD {
       // standing trigram index; per-pattern independence makes q191's
       // LIKE oracle the stream's oracle verbatim (the q138 pattern for
       // the substring axis).
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val pats = Seq((0L, "ge bat"), (1L, "le sor"), (2L, "rt join"))
         .toDF("qid", "pat")
@@ -692,11 +653,7 @@ private[graft] object EntryQueriesD {
       // SAME standing index; per-pattern independence makes q226's
       // regexp_matches oracle the stream's oracle verbatim (the q209
       // posture for the regex axis).
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val pats = Seq((0L, "merge.*batch"), (1L, "sorts? merge"),
         (2L, "table .able")).toDF("qid", "pat")
@@ -723,9 +680,9 @@ private[graft] object EntryQueriesD {
       // multiply through the delta joins ΔL⋈(R⊎ΔR) ⊎ L⋈ΔR, and rows
       // retire at count zero. Oracle: the one-shot join of the NET
       // tables with the duplicate slice unioned back in.
-      val base = q238CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q238_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q238_cat") + "/jv"
-        val t = Tables(s, dir)
+        val t = Tables(s, d)
         val o = t.orders.select(col("o_orderkey").as("k"),
           col("o_custkey").cast("long").as("o_custkey"))
         val l = t.lineitem.select(col("l_orderkey").as("k"),
@@ -763,7 +720,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       JoinView.readCdc(s, base).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -778,11 +735,7 @@ private[graft] object EntryQueriesD {
       // nested extraction would be unsound); every branch must carry a
       // 3+-char literal run or the index cannot prune it. Oracle:
       // DuckDB regexp_matches (RE2) over the lowercased corpus.
-      val idx = q191IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q191_idx") + "/tri"
-        TrigramIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p)
-        p
-      })
+      val idx = trigramIndex(s, d)
       import s.implicits._
       val qs = Seq((0L, "merge.*batch|hash join"),
         (1L, "sorts? merge|columnar scan"),
@@ -800,9 +753,9 @@ private[graft] object EntryQueriesD {
       // from the join it summarizes. Per-trigger aggregate work is
       // delta-sized plus the key-grain table. Oracle: the one-shot
       // join of the net tables grouped by customer.
-      val base = q241CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q241_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q241_cat") + "/jv"
-        val t = Tables(s, dir)
+        val t = Tables(s, d)
         val o = t.orders.select(col("o_orderkey").as("k"),
           col("o_custkey").cast("long").as("o_custkey"))
         val l = t.lineitem.select(col("l_orderkey").as("k"),
@@ -855,7 +808,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       graft.core.Catalog.read(s, base, "agg")
         .select(col("o_custkey"), col("n"), col("cents"))
     }),
@@ -870,9 +823,9 @@ private[graft] object EntryQueriesD {
       // leaving the view un-retracted (hash-visible against the net
       // oracle). Any double-fold doubles multiplicities and breaks the
       // compare the same way.
-      val base = q242CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q242_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q242_cat") + "/jv"
-        val t = Tables(s, dir)
+        val t = Tables(s, d)
         val o = t.orders.select(col("o_orderkey").as("k"),
           col("o_custkey").cast("long").as("o_custkey"))
         val l = t.lineitem.select(col("l_orderkey").as("k"),
@@ -921,7 +874,7 @@ private[graft] object EntryQueriesD {
         require(graft.core.Catalog.lastBatch(s, p) == 3L,
           "q242: the restart must resume batch ids at 2, not renumber from 0")
         p
-      })
+      }
       JoinView.readCdc(s, base).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -936,9 +889,9 @@ private[graft] object EntryQueriesD {
       // insert-only join again, byte for byte (q228's oracle, shared).
       // Any band store missed by the rewind, or a GC that swept a
       // pinned generation, breaks the compare.
-      val base = q243CatalogCache.computeIfAbsent(d, { dir =>
+      val base = Fixtures.once("q243_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q243_cat") + "/jv"
-        val t = Tables(s, dir)
+        val t = Tables(s, d)
         val o = t.orders.select(col("o_orderkey").as("k"),
           col("o_custkey").cast("long").as("o_custkey"))
         val l = t.lineitem.select(col("l_orderkey").as("k"),
@@ -973,7 +926,7 @@ private[graft] object EntryQueriesD {
             "q243: restore must rewind the shared ledger to the pin")
         }
         p
-      })
+      }
       JoinView.readCdc(s, base).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -987,10 +940,10 @@ private[graft] object EntryQueriesD {
       // then ships NO right-side band, the lineitem-only retraction
       // ships NO left-side band (both asserted on replicate's copied
       // map). Oracle: the net join, read FROM THE REPLICA.
-      val rep = q244CatalogCache.computeIfAbsent(d, { dir =>
+      val rep = Fixtures.once("q244_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q244_cat") + "/jv"
         val r = graft.core.TempDirs.create("graft_q244_rep") + "/jv"
-        val t = Tables(s, dir)
+        val t = Tables(s, d)
         val o = t.orders.select(col("o_orderkey").as("k"),
           col("o_custkey").cast("long").as("o_custkey"))
         val l = t.lineitem.select(col("l_orderkey").as("k"),
@@ -1028,7 +981,7 @@ private[graft] object EntryQueriesD {
               s"got ${third.keys.toSeq.sorted.mkString(", ")}")
         }
         r
-      })
+      }
       JoinView.readCdc(s, rep).select(col("k").as("o_orderkey"),
         col("o_custkey"), col("l_linenumber"), col("cents"))
     }),
@@ -1039,13 +992,13 @@ private[graft] object EntryQueriesD {
       // half arrives in 4 ledgered micro-batch folds, then q191's
       // patterns search THROUGH the grown index — so q191's
       // full-corpus LIKE oracle gates ingest-then-search end to end.
-      val idx = q197IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q197_index", d) {
         val p = graft.core.TempDirs.create("graft_q197_idx") + "/tri"
-        val docs = Tables(s, dir).documents
+        val docs = Tables(s, d).documents
         TrigramIndex.build(docs.where(col("doc_id") % 2 === 0),
           col("doc_id"), col("text"), p)
         withShufflePartitions(s, 8) {
-          val stage = screenReplayDir(s"$dir#q197",
+          val stage = screenReplayDir(s"$d#q197",
             docs.where(col("doc_id") % 2 === 1).select(col("doc_id"), col("text")),
             col("doc_id"), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage,
@@ -1054,7 +1007,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       import s.implicits._
       val qs = Seq((0L, "ge bat"), (1L, "le sor"), (2L, "rt join"))
         .toDF("qid", "pat")
@@ -1070,12 +1023,12 @@ private[graft] object EntryQueriesD {
       // arriving in 4 micro-batches. Completes the continuous form of
       // the last standing ANN index.
       val em = Tables(s, d).embeddings
-      val idx = q145IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q145_index", d) {
         val p = graft.core.TempDirs.create("graft_q145_idx") + "/ivfpq"
-        IvfPqIndex.build(Tables(s, dir).embeddings,
+        IvfPqIndex.build(Tables(s, d).embeddings,
           col("vec_id"), col("embedding"), nCells = 16, p, m = 8, ksub = 16)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q145",
           em.where(col("vec_id") < 10).select(col("vec_id"), col("embedding")),
@@ -1095,13 +1048,13 @@ private[graft] object EntryQueriesD {
       // bitlen arithmetic; DsirModelSpec: stored model == one-shot
       // importanceWeights), so q100's full replay oracle holds.
       val docs = Tables(s, d).documents
-      val idx = q146IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q146_index", d) {
         val p = graft.core.TempDirs.create("graft_q146_idx") + "/dsir"
-        val dd = Tables(s, dir).documents
+        val dd = Tables(s, d).documents
         DsirModel.build(dd, dd.where(col("source") === "src0"),
           col("doc_id"), col("text"), p, buckets = 1024)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val stage = screenReplayDir(s"$d#q146",
           docs.select(col("doc_id"), col("text")), col("doc_id"), 4)
@@ -1208,12 +1161,12 @@ private[graft] object EntryQueriesD {
       // result is the full model dump: centroids flattened to
       // (cell, d, c) joined with the folded statistics (s, n).
       val em = Tables(s, d).embeddings
-      val idx = q150IndexCache.computeIfAbsent(d, { dir =>
+      val idx = Fixtures.once("q150_index", d) {
         val p = graft.core.TempDirs.create("graft_q150_idx") + "/km"
-        KMeansIndex.build(Tables(s, dir).embeddings.where(col("vec_id") % 2 === 0),
+        KMeansIndex.build(Tables(s, d).embeddings.where(col("vec_id") % 2 === 0),
           col("vec_id"), col("embedding"), k = 8, iters = 2, p)
         p
-      })
+      }
       withShufflePartitions(s, 8) {
         val inc = em.where(col("vec_id") % 2 === 1)
           .select(col("vec_id"), col("embedding"))
@@ -1243,12 +1196,7 @@ private[graft] object EntryQueriesD {
       // oracle verbatim (PipelineOpsSpec asserts the same equivalence
       // structurally; this puts it in the correctness record). Pairs
       // come off q55's memoized standing index: zero extra corpus scans.
-      val idx = q55IndexCache.computeIfAbsent(d, { dir =>
-        val p = graft.core.TempDirs.create("graft_q55_idx")
-        DedupIndex.build(Tables(s, dir).documents, col("doc_id"), col("text"), p,
-          shingleN = 3, numHashes = 32, bands = 16, rowsPerBand = 2)
-        p
-      })
+      val idx = dedupIndex(s, d)
       val pairs = DedupIndex.pairs(s, idx, threshold = 0.8)
       val bothEven = col("id_a") % 2 === 0 && col("id_b") % 2 === 0
       val assignments = Clusters.connectedComponents(
@@ -1458,12 +1406,12 @@ private[graft] object EntryQueriesD {
       // view stays correct (exactly-once under redelivery, the q144
       // posture).
       val (base, changes) = viewMaintainInput(s, d)
-      val path = q160ViewCache.computeIfAbsent(d, { _ =>
+      val path = Fixtures.once("q160_view", d) {
         val p = graft.core.TempDirs.create("graft_q160_view")
         Diff.initView(base.groupBy("o_custkey")
           .agg(count(lit(1)).as("cnt"), sum("o_totalprice").as("total")), p)
         p
-      })
+      }
       withShufflePartitions(s, 4) {
         val stage = screenReplayDir(s"$d#q160", changes, col("o_orderkey"), 4)
         val stream = graft.streaming.Replay.orderedStream(s, stage, changes.schema)
@@ -1486,12 +1434,12 @@ private[graft] object EntryQueriesD {
       // events would — same oracle, same in-plan exactness assert.
       val e = Tables(s, d).events
       def day(ts: Column) = dayBucket(ts)
-      val path = q161StoreCache.computeIfAbsent(d, { _ =>
+      val path = Fixtures.once("q161_store", d) {
         val p = graft.core.TempDirs.create("graft_q161_store")
         Sketches.initThetaStore(e.where(col("event_id") % 2 === 0),
           Seq(col("event_type")), day(col("ts")), col("user_id"), p)
         p
-      })
+      }
       withShufflePartitions(s, 4) {
         val stage = screenReplayDir(s"$d#q161",
           e.where(col("event_id") % 2 === 1)
@@ -1529,12 +1477,12 @@ private[graft] object EntryQueriesD {
       def prep(df: DataFrame) = df.select(col("event_id"), col("event_type"),
         (day(col("ts")) % 7).as("dow"), day(col("ts")).as("day"),
         floor(col("value")).cast("long").as("fv"))
-      val path = q162StoreCache.computeIfAbsent(d, { _ =>
+      val path = Fixtures.once("q162_store", d) {
         val p = graft.core.TempDirs.create("graft_q162_store")
         Sketches.initKllStore(prep(e.where(col("event_id") % 2 === 0)),
           Seq(col("event_type"), col("dow")), col("day"), col("fv"), p, k = 65535)
         p
-      })
+      }
       withShufflePartitions(s, 4) {
         val stage = screenReplayDir(s"$d#q162",
           prep(e.where(col("event_id") % 2 === 1)), col("event_id"), 4)
@@ -1566,12 +1514,12 @@ private[graft] object EntryQueriesD {
       val docs = Tables(s, d).documents
       def prep(df: DataFrame) = df.select(col("doc_id"), col("lang"),
         col("source"), explode(Stateless.tokens(col("text"))).as("w"))
-      val path = q163StoreCache.computeIfAbsent(d, { _ =>
+      val path = Fixtures.once("q163_store", d) {
         val p = graft.core.TempDirs.create("graft_q163_store")
         Sketches.initTopKStore(prep(docs.where(col("doc_id") % 2 === 0)),
           Seq(col("lang")), col("source"), col("w"), p)
         p
-      })
+      }
       withShufflePartitions(s, 4) {
         val stage = screenReplayDir(s"$d#q163",
           prep(docs.where(col("doc_id") % 2 === 1)), col("doc_id"), 4)
@@ -1602,7 +1550,7 @@ private[graft] object EntryQueriesD {
       // events: any torn or double-applied fold in any store breaks
       // the compare.
       val e = Tables(s, d).events
-      val base = q164CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q164_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q164_catalog")
         catalogInit(p, catalogPrep(e.where(col("event_id") % 2 === 0)))
         // the odd half arrives as three admitted batches (odd event_ids
@@ -1619,7 +1567,7 @@ private[graft] object EntryQueriesD {
           graft.core.Catalog.ingest(s, p, 2L, slice(2), catalogFolds)
         }
         p
-      })
+      }
       catalogAnswers(s, d, base, "q164")
     }),
     "q168_catalog_ingest_stream" -> ((s, d) => {
@@ -1632,7 +1580,7 @@ private[graft] object EntryQueriesD {
       // the three tiny bucket tables; the events already summarized are
       // never revisited. Oracle = q164's rebuild-from-scratch answers.
       val e = Tables(s, d).events
-      val base = q168CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q168_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q168_catalog")
         catalogInit(p, catalogPrep(e.where(col("event_id") % 2 === 0)))
         withShufflePartitions(s, 4) {
@@ -1645,7 +1593,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       catalogAnswers(s, d, base, "q168")
     }),
     "q169_admission_pipeline" -> ((s, d) => {
@@ -1666,7 +1614,7 @@ private[graft] object EntryQueriesD {
       // answers from scratch: any screen miss, torn fold, or
       // double-apply breaks the compare.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q169CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q169_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q169_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -1674,7 +1622,7 @@ private[graft] object EntryQueriesD {
             admissionIngestBatch(s, p, corpus, bench, _, admissionFolds))
         }
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q171_admission_stream" -> ((s, d) => {
@@ -1688,7 +1636,7 @@ private[graft] object EntryQueriesD {
       // re-deliver applied batch ids, which return after one manifest
       // read. Oracle = q169's from-scratch derivation.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q171CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q171_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q171_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -1700,7 +1648,7 @@ private[graft] object EntryQueriesD {
           try q.processAllAvailable() finally q.stop()
         }
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q172_admission_audit" -> ((s, d) => {
@@ -1717,7 +1665,7 @@ private[graft] object EntryQueriesD {
       // admission-rate dashboard a real pipeline watches; the oracle
       // re-derives every verdict from scratch.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q172CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q172_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q172_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -1728,7 +1676,7 @@ private[graft] object EntryQueriesD {
             n = 3, threshold = 0.3), admissionFolds)
         }
         p
-      })
+      }
       val echoes = corpus.where(col("doc_id") >= 100000)
       Admission.audit(s, base, "fps", echoes, col("doc_id"), col("text"),
           bench, col("doc_id"), col("text"), n = 3, threshold = 0.3)
@@ -1752,7 +1700,7 @@ private[graft] object EntryQueriesD {
       // from-scratch oracle compare (as would a stale pin or a GC'd
       // generation).
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q173CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q173_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q173_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -1767,7 +1715,7 @@ private[graft] object EntryQueriesD {
           (1 until 4).foreach(ingestBatch)
         }
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q175_admission_restart" -> ((s, d) => {
@@ -1783,7 +1731,7 @@ private[graft] object EntryQueriesD {
       // Oracle = q169's from-scratch derivation: any resume drift,
       // double-fold, or lost screen state breaks the compare.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q175CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q175_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q175_catalog")
         admissionInit(p, corpus)
         val stage = graft.core.TempDirs.create("graft_q175_replay")
@@ -1811,7 +1759,7 @@ private[graft] object EntryQueriesD {
         require(graft.core.Catalog.lastBatch(s, p) == 3L,
           "q175: the restart must resume batch ids at 2, not restart at 0")
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q176_catalog_addstore" -> ((s, d) => {
@@ -1829,7 +1777,7 @@ private[graft] object EntryQueriesD {
       // never the corpus, and the manifest swap makes the store appear
       // atomically with a table already consistent with the ledger.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q176CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q176_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q176_catalog")
         admissionInit(p, corpus, withLineage = true)
         val langStatsFold: (String, (DataFrame, DataFrame) => DataFrame) =
@@ -1851,7 +1799,7 @@ private[graft] object EntryQueriesD {
             admissionFolds :+ admissionLineageFold :+ langStatsFold))
         }
         p
-      })
+      }
       graft.core.Catalog.read(s, base, "lang_stats")
         .select(col("source"), col("lang"), col("n_docs"), col("n_tokens"))
     }),
@@ -1868,7 +1816,7 @@ private[graft] object EntryQueriesD {
       // catalog: the snapshot view is pointer chasing — no data copied
       // at pin time, none at read time.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q177CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q177_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q177_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -1878,7 +1826,7 @@ private[graft] object EntryQueriesD {
             admissionIngestBatch(s, p, corpus, bench, _, admissionFolds))
         }
         p
-      })
+      }
       admissionAnswersFrom(graft.core.Catalog.readAt(s, base, "asof-batch0"))
     }),
     "q178_catalog_replicate" -> ((s, d) => {
@@ -1896,7 +1844,7 @@ private[graft] object EntryQueriesD {
       // concurrent primary folds and their GC, and the final call
       // proves convergence is a copy-free pointer compare.
       val (corpus, bench) = admissionCorpus(s, d)
-      val rep = q178CatalogCache.computeIfAbsent(d, { _ =>
+      val rep = Fixtures.once("q178_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q178_primary")
         val r = graft.core.TempDirs.create("graft_q178_replica")
         admissionInit(p, corpus)
@@ -1912,7 +1860,7 @@ private[graft] object EntryQueriesD {
             "q178: a converged replica must copy nothing")
         }
         r
-      })
+      }
       admissionAnswers(s, rep)
     }),
     "q179_catalog_logship" -> ((s, d) => {
@@ -1930,7 +1878,7 @@ private[graft] object EntryQueriesD {
       // from the REPLICA: any bootstrap drift cascades into wrong
       // screen decisions downstream and breaks the compare.
       val (corpus, bench) = admissionCorpus(s, d)
-      val rep = q179CatalogCache.computeIfAbsent(d, { _ =>
+      val rep = Fixtures.once("q179_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q179_primary")
         val r = graft.core.TempDirs.create("graft_q179_replica")
         admissionInit(p, corpus)
@@ -1946,7 +1894,7 @@ private[graft] object EntryQueriesD {
             "q179: the replayed log must advance the replica's ledger")
         }
         r
-      })
+      }
       admissionAnswers(s, rep)
     }),
     "q181_catalog_follow" -> ((s, d) => {
@@ -1962,7 +1910,7 @@ private[graft] object EntryQueriesD {
       // cannot see fork divergence), and the gate answers from the
       // REPLICA against the full from-scratch oracle.
       val (corpus, bench) = admissionCorpus(s, d)
-      val rep = q181CatalogCache.computeIfAbsent(d, { _ =>
+      val rep = Fixtures.once("q181_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q181_primary")
         val r = graft.core.TempDirs.create("graft_q181_replica")
         admissionInit(p, corpus)
@@ -1988,7 +1936,7 @@ private[graft] object EntryQueriesD {
             "q181: content fingerprints must verify every store")
         }
         r
-      })
+      }
       admissionAnswers(s, rep)
     }),
     "q185_admission_follow" -> ((s, d) => {
@@ -2005,7 +1953,7 @@ private[graft] object EntryQueriesD {
       // store, and the gate answers FROM THE REPLICA against the
       // from-scratch oracle.
       val (corpus, bench) = admissionCorpus(s, d)
-      val rep = q185CatalogCache.computeIfAbsent(d, { _ =>
+      val rep = Fixtures.once("q185_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q185_primary")
         val r = graft.core.TempDirs.create("graft_q185_replica")
         admissionInit(p, corpus)
@@ -2028,7 +1976,7 @@ private[graft] object EntryQueriesD {
             "q185: content fingerprints must verify every store after the race")
         }
         r
-      })
+      }
       admissionAnswers(s, rep)
     }),
     "q180_catalog_vacuum" -> ((s, d) => {
@@ -2044,7 +1992,7 @@ private[graft] object EntryQueriesD {
       // the reclamation path that bounds catalog storage at
       // ~current + pins instead of one generation per batch ever run.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q180CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q180_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q180_catalog")
         admissionInit(p, corpus)
         withShufflePartitions(s, 4) {
@@ -2064,7 +2012,7 @@ private[graft] object EntryQueriesD {
             "q180: the pinned snapshot must survive the sweep")
         }
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q174_catalog_takedown" -> ((s, d) => {
@@ -2085,7 +2033,7 @@ private[graft] object EntryQueriesD {
       // predicate would rebuild only the affected buckets). Oracle =
       // the from-scratch derivation minus the retracted source.
       val (corpus, bench) = admissionCorpus(s, d)
-      val base = q174CatalogCache.computeIfAbsent(d, { _ =>
+      val base = Fixtures.once("q174_catalog", d) {
         val p = graft.core.TempDirs.create("graft_q174_catalog")
         admissionInit(p, corpus, withLineage = true)
         withShufflePartitions(s, 4) {
@@ -2096,7 +2044,7 @@ private[graft] object EntryQueriesD {
           graft.core.Catalog.ingest(s, p, 4L, ticket, Admission.retractFolds())
         }
         p
-      })
+      }
       admissionAnswers(s, base)
     }),
     "q170_view_minmax" -> ((s, d) => {
@@ -2179,7 +2127,7 @@ private[graft] object EntryQueriesD {
       // would silently no-op the new batch (the documented hazard);
       // per-key version order holds across slices because the slicing
       // is by the seq itself.
-      val store = q183StoreCache.computeIfAbsent(d, { _ =>
+      val store = Fixtures.once("q183_store", d) {
         val p = graft.core.TempDirs.create("graft_q183_store")
         val stage = graft.core.TempDirs.create("graft_q183_replay")
         val ckpt = graft.core.TempDirs.create("graft_q183_ckpt")
@@ -2206,7 +2154,7 @@ private[graft] object EntryQueriesD {
         require(graft.core.SwapStore.lastBatch(s, p) == 2L,
           "q183: the restart must resume batch ids from the durable checkpoint")
         p
-      })
+      }
       graft.core.SwapStore.read(s, store)
         .select(col("user_id"), col("vms"), col("p_value"),
           col("valid_to"), col("is_current").cast("int").as("is_current"))
@@ -2223,7 +2171,7 @@ private[graft] object EntryQueriesD {
       // for late) with the same midpoint cuts computed in SQL — a
       // batch that saw the wrong store generation lands in the wrong
       // branch and breaks the compare.
-      val outDir = q184OutCache.computeIfAbsent(d, { _ =>
+      val outDir = Fixtures.once("q184_out", d) {
         val e = Tables(s, d).events
         val versions = e.where(col("event_type") === "purchase")
           .groupBy(col("user_id"), ms(col("ts")).as("vms"))
@@ -2259,7 +2207,7 @@ private[graft] object EntryQueriesD {
           } finally q.stop()
         }
         out
-      })
+      }
       s.read.parquet(outDir)
     }),
     "q166_temporal_attach" -> ((s, d) => {

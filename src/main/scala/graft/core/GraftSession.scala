@@ -8,7 +8,9 @@ import org.apache.spark.sql.SparkSession
   * (reference: jobmanager/api.py, taskmanager/task_executor.py) — on Spark
   * the cluster runtime, scheduling, shuffle transport, checkpointing and
   * state backends are provided by the platform, so "starting the engine"
-  * is just configuring a SparkSession.
+  * is just configuring a SparkSession. [[local]] is the one place that
+  * builds it: every main, the benchmark and the tests start here, so
+  * the session that is benched and oracle-checked is the one tested.
   *
   * Scale notes (100 TB target):
   *  - AQE on: runtime coalescing of shuffle partitions + skew-join splitting
@@ -27,10 +29,9 @@ object GraftSession {
     * recompiled generated classes on every repeat late in the run
     * (measured: 2-3x inflated medians for whichever queries landed
     * after the cache filled; raising it took the suite 215->173 s).
-    * Every session builder in this repo must set it — new mains that
-    * build their own session should reference this constant.
+    * [[local]] is the only session builder, so it is the only setter.
     */
-  val CodegenCacheMaxEntries = "4000"
+  private val CodegenCacheMaxEntries = "4000"
 
   /** Spark 4.x class name (the 3.x one lived one package up). See the
     * config comment in [[local]] for why the FileSystem-based manager
@@ -126,20 +127,6 @@ object GraftSession {
     // distinctKeys / 8 + 1 (not (k + 7) / 8, which overflows Int near MaxValue)
     val parts = math.max(1, math.min(defaultCores, distinctKeys / 8 + (if (distinctKeys % 8 == 0) 0 else 1)))
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    spark
-  }
-
-  /** Apply graft's standard runtime configuration to an externally-created
-    * session (e.g. the driver-owned Verify/Bench mains).
-    */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-      CheckpointFileManagerClass)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark
   }
 }

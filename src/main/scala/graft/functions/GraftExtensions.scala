@@ -9,8 +9,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * get the same operators as the DataFrame API:
   *
   * {{{
-  * // at session build time:
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
+  * // at session build time (GraftSession.local does this):
+  * builder.withExtensions(new GraftExtensions)...
   * // or via config (no code): spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT simhash64(tokens), minhash_signature(sh, 32) FROM t")
   * }}}

@@ -15,8 +15,8 @@ final case class Tables(spark: SparkSession, dir: String) {
   // Older testdata generations wrote events.parquet with TIMESTAMP(NANOS);
   // Spark's parquet reader rejects that type unless
   // spark.sql.legacy.parquet.nanosAsLong=true. That conf is
-  // session-construction state, not read-path state — GraftSession.local and
-  // GraftSession.tune both set it; externally-built sessions must too.
+  // session-construction state, not read-path state — GraftSession.local
+  // sets it; externally-built sessions must too.
   // (Newer generations write timestamp[us]; [[events]] adapts per schema.)
   def table(name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

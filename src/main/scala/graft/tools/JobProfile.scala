@@ -1,19 +1,19 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: per-JOB time breakdown for a SparkEntry query under the
-  * Bench session shape (guide §1 "measure first" — before touching an
-  * operator, know whether its wall-clock is one big job, many small
-  * jobs, or gaps BETWEEN jobs, i.e. driver/planning/streaming-commit
-  * overhead the stage metrics never show).
+/** Dev tool: per-JOB time breakdown for a SparkEntry query on the
+  * `GraftSession.local` session that Bench, Verify and the tests run
+  * (guide §1 "measure first" — before touching an operator, know
+  * whether its wall-clock is one big job, many small jobs, or gaps
+  * BETWEEN jobs, i.e. driver/planning/streaming-commit overhead the
+  * stage metrics never show).
   *
   * Usage: runMain graft.tools.JobProfile <query> [query2 ...]
   *   [--sf=/root/testdata/sf0.1] [--runs=2]
   *
-  * Each query runs `runs` times (first run warms the per-process
-  * replay/index caches exactly like Bench's first repeat); every run
+  * Each query runs `runs` times (first run builds the per-process
+  * [[graft.Fixtures]] exactly like Bench's first repeat); every run
   * prints total wall, summed job time, job count, and the gap
   * (wall − Σjobs = driver-side planning + scheduling + streaming
   * commit overhead). The last run also prints the slowest jobs.
@@ -26,16 +26,8 @@ object JobProfile {
       .map(_.stripPrefix("--sf=")).getOrElse("/root/testdata/sf0.1")
     val runs = args.find(_.startsWith("--runs="))
       .map(_.stripPrefix("--runs=").toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries",
-        graft.core.GraftSession.CodegenCacheMaxEntries)
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.GraftSession.local(cpus, "jobprofile")
     spark.range(1000000).selectExpr("sum(id)")
       .write.format("noop").mode("overwrite").save()
 

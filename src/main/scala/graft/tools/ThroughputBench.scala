@@ -14,6 +14,12 @@ import graft.core.GraftSession
   * realistic_benchmarking.md:111-117), fully materialized via noop.
   */
 object ThroughputBench {
+  /** `body`'s result and the wall seconds it took. */
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime(); val x = body
+    (x, (System.nanoTime() - t0) / 1e9)
+  }
+
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(50000000L)
     // optional scenario filter, e.g. "6" runs only scenario 6
@@ -1259,10 +1265,6 @@ object ThroughputBench {
         "small" -> rows(0, 0)
           .groupBy(pmod(col("k"), lit(20)).as("g")).agg(count(lit(1)).as("n"))))
       graft.core.Catalog.ingest(spark, p, 0L, rows(0, nBig), folds)
-      def timed[T](body: => T): (T, Double) = {
-        val t0 = System.nanoTime(); val x = body
-        (x, (System.nanoTime() - t0) / 1e9)
-      }
       val (boot, sBoot) = timed(graft.core.Catalog.replicate(spark, p, r))
       require(boot.keySet == Set("big", "small"), "bootstrap ships both stores")
       graft.core.Catalog.ingest(spark, p, 1L, rows(nBig, nBig + 1000000L),
@@ -1304,10 +1306,6 @@ object ThroughputBench {
         .write.mode("overwrite").parquet(histPath)
       val hist = spark.read.parquet(histPath)
       val slice = ver(nHist, nHist + 100000L) // seq = versPerKey, all in-order
-      def timed(body: => Long): (Long, Double) = {
-        val t0 = System.nanoTime(); val n = body
-        (n, (System.nanoTime() - t0) / 1e9)
-      }
       val (nApply, sApply) = timed(
         graft.ops.Diff.scd2Apply(hist, slice, Seq("k"), "seq").count())
       val (nRebuild, sRebuild) = timed(
@@ -1387,9 +1385,6 @@ object ThroughputBench {
       val pats = docs.where(col("doc_id") % 83333 === 7).limit(48)
         .select((col("doc_id") % 48).as("qid"), substring(col("text"), 4, 9).as("pat"))
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("qid", "pat")
-      def timed(body: => Long): (Long, Double) = {
-        val t = System.nanoTime(); val r = body; (r, (System.nanoTime() - t) / 1e9)
-      }
       val (nIdx, sIdx) = timed(graft.ops.TrigramIndex.search(
         spark, pats, col("qid"), col("pat"),
         docs, col("doc_id"), col("text"), idxDir).count())
@@ -1420,9 +1415,6 @@ object ThroughputBench {
         (col("id") % 100).as("grp"),
         pmod(xxhash64(col("id")), lit(200)).cast("int").as("size"),
         pmod(xxhash64(col("id") + 7), lit(1000000)).as("price")).localCheckpoint()
-      def timed(body: => Long): (Long, Double) = {
-        val t = System.nanoTime(); val r = body; (r, (System.nanoTime() - t) / 1e9)
-      }
       val (nSky, sSky) = timed(
         graft.ops.Frontier.skyline2d(rows, Seq("grp"), "size", "price").count())
       // the naive-but-still-scan form: per-row windows over ALL rows
@@ -1487,9 +1479,6 @@ object ThroughputBench {
       val ev = spark.range(n).select(
         (col("id") % 1000000).as("k"), timestamp_micros(col("id")).as("t"),
         pmod(xxhash64(col("id")), lit(10000)).as("x")).localCheckpoint()
-      def timed(body: => Long): (Long, Double) = {
-        val t = System.nanoTime(); val r = body; (r, (System.nanoTime() - t) / 1e9)
-      }
       val (nc, sc) = timed(graft.ops.Timeseries.cusum(ev, Seq("k"),
         col("t"), col("t"), col("x"), target = 5000L, threshold = 100000L).count())
       val (ne, se) = timed(graft.ops.Timeseries.ewmaHalf(ev, Seq("k"),
@@ -1508,9 +1497,6 @@ object ThroughputBench {
         col("id").as("eid"),
         pmod(xxhash64(col("id")), lit(100000)).as("x"),
         pmod(xxhash64(col("id") + 1), lit(100000)).as("y")).localCheckpoint()
-      def timed(body: => Long): (Long, Double) = {
-        val t = System.nanoTime(); val r = body; (r, (System.nanoTime() - t) / 1e9)
-      }
       val (nb, sb) = timed(graft.ops.Quantiles.quantileBins(
         ev, col("eid"), col("x"), 16).count())
       val (ns, ss) = timed(graft.ops.EventTimeWindows.sessionize(
@@ -1529,9 +1515,6 @@ object ThroughputBench {
       val ev = spark.range(n).select(
         (col("id") % 1000000).as("k"), col("id").as("t"),
         pmod(xxhash64(col("id")), lit(100000)).as("x")).localCheckpoint()
-      def timed(body: => Long): (Long, Double) = {
-        val t = System.nanoTime(); val r = body; (r, (System.nanoTime() - t) / 1e9)
-      }
       val left = ev.where(col("x") % 10 === 0)
       val right = ev.where(col("x") % 10 === 1)
       val (nn, sn) = timed(graft.ops.Joins.asofNearest(left, right,

@@ -23,6 +23,21 @@ class ContractSpec extends AnyFunSuite {
       "duplicate qNN prefixes would collide in Bench's compact median dict")
   }
 
+  test("GraftSession.local is the only session builder in src/main") {
+    // Bench, Verify and every tool start from GraftSession.local, so the
+    // session that is benched and oracle-checked is the one the tests run
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val builders = files.filter { f =>
+      new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        .contains("SparkSession.builder")
+    }.map(root.relativize(_).toString)
+    assert(builders == Seq("graft/core/GraftSession.scala"),
+      s"SparkSession.builder outside GraftSession.local: $builders")
+  }
+
   test("README's query counts match the code") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), "UTF-8")
