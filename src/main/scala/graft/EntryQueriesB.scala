@@ -458,8 +458,8 @@ private[graft] object EntryQueriesB {
       // session intervals: the most user sessions simultaneously
       // active, and the earliest microsecond attaining it (capacity
       // ceilings). Tick aggregation makes the sweep order-unambiguous
-      // and collapses the data before the only ordered window. Oracle
-      // replays sessionize, the interval roll-up, and the same sweep.
+      // and collapses the data before the distributed running sum.
+      // Oracle replays sessionize, the interval roll-up, and the sweep.
       val sess = EventTimeWindows.sessionize(Tables(s, d).events,
         Seq("user_id"), col("ts"), col("event_id"), gapMs = 30L * 60 * 1000)
       val iv = sess.groupBy(col("user_id"), col("session_idx"))

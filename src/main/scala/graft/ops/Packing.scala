@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Sequence packing for training-data pipelines (north-star extension —
   * no analogue in the reference): assign documents to fixed-capacity
@@ -13,25 +11,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * split into training sequences.
   *
   * The naive formulation is a window function over ONE global ordering —
-  * a single-partition sort that caps out at one executor. Here the
-  * prefix sum is distributed in two phases:
-  *   1. range-repartition by the order key (the ONLY data-sized
-  *      exchange, carrying just (ord, n_tok) pairs — the documents
-  *      never move), then a narrow per-partition cumulative sum via
-  *      `mapPartitions`. A window partitioned by `spark_partition_id`
-  *      would be wrong-shaped here: Spark can't see that the range
-  *      exchange already clusters by pid, so it would re-shuffle the
-  *      whole dataset a second time (observed in the physical plan) —
-  *      the imperative per-partition pass costs zero exchanges.
-  *   2. per-partition totals (max of each partition's inclusive cumsum,
-  *      so pid consistency with phase 1 is structural) get their own
-  *      exclusive prefix — the only single-partition window runs over
-  *      #partitions rows, not the data — and broadcast-join back as
-  *      offsets.
-  * The result is the exact global prefix sum at full parallelism. Range
-  * boundaries affect only WHERE the sum is computed, never its value,
-  * so the bin assignment is deterministic across partitionings and
-  * engines.
+  * a single-partition sort that caps out at one executor. The prefix is
+  * [[PrefixSum.exclusive]] over the slim (ord, n_tok) pairs: one range
+  * shuffle carries just those pairs (the documents never move), and
+  * only per-partition totals go through a window. Range boundaries
+  * affect only WHERE the sum is computed, never its value, so the bin
+  * assignment is deterministic across partitionings and engines.
   */
 object Packing {
 
@@ -42,66 +27,13 @@ object Packing {
   def packSequences(df: DataFrame, ord: Column, tokenCount: Column,
                     windowTokens: Long, numPartitions: Int = 0): DataFrame = {
     require(windowTokens > 0, "windowTokens must be positive")
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    val slim = df
-      // a null count (null text upstream) packs as zero tokens rather
-      // than poisoning the partition's running sum
-      .select(ord.as("ord_key"), coalesce(tokenCount.cast("long"), lit(0L)).as("n_tok"))
-      // pin the (key, count) projection BEFORE the range repartition:
-      // repartitionByRange samples its child to pick range boundaries,
-      // which would execute the projection — including the token-count
-      // kernel over the corpus text — a second time before the shuffle
-      // map runs it again. Materializing the two-long frame first means
-      // both the sampling job and the shuffle read longs; the corpus
-      // text is scanned exactly once per pack (plan-asserted in
-      // PlanQualitySpec).
-      .localCheckpoint()
-    val ranged = slim
-      .repartitionByRange(parts, col("ord_key"))
-      .sortWithinPartitions(col("ord_key"))
-
-    // phase 1: narrow per-partition running sums (RangePartitioner
-    // assigns ascending key ranges to ascending partition ids, so
-    // (pid, ord_key) order == global ord_key order). The partition id
-    // must come from mapPartitionsWithIndex — the STRUCTURAL index of
-    // the shuffle partition — not TaskContext.getPartitionId(): a
-    // downstream coalesce() folds many shuffle partitions into one task,
-    // where the task-scoped id collapses every row to pid 0 (observed:
-    // Verify's coalesce(1) write zeroed all phase-2 offsets). Sharing
-    // one RDD between phase 1 and phase 2 also pins both to the same
-    // materialized shuffle (RDD-level shuffle reuse) and the same range
-    // boundaries.
-    val outSchema = StructType(ranged.schema.fields ++ Seq(
-      StructField("pid", IntegerType, nullable = false),
-      StructField("local_cum", LongType, nullable = false)))
-    val withPid = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cum = 0L
-      it.map { r =>
-        cum += r.getLong(1)
-        Row(r.get(0), r.getLong(1), pid, cum)
-      }
-    }
-    val local = spark.createDataFrame(withPid, outSchema)
-
-    // phase 2: exclusive prefix over per-partition totals — partial
-    // aggregation reduces each partition to one row before the shuffle,
-    // so the unpartitioned window sees O(#partitions) rows
-    val offsets = local.groupBy(col("pid"))
-      .agg(max(col("local_cum")).as("tot"))
-      .withColumn("offset",
-        coalesce(sum(col("tot")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-
-    local.join(broadcast(offsets), "pid")
-      .withColumn("prefix_excl", col("offset") + col("local_cum") - col("n_tok"))
-      .withColumn("bin", floor(col("prefix_excl") / windowTokens).cast("long"))
-      .select(col("ord_key"), col("n_tok"), col("bin"))
+    // a null count (null text upstream) packs as zero tokens rather
+    // than poisoning the running sum
+    val slim = df.select(ord.as("ord_key"),
+      coalesce(tokenCount.cast("long"), lit(0L)).as("n_tok"))
+    PrefixSum.exclusive(slim, Seq("ord_key"), "n_tok", numPartitions = numPartitions)
+      .select(col("ord_key"), col("n_tok"),
+        floor(col("prefix_excl") / windowTokens).cast("long").as("bin"))
   }
 
   /** Bin-level summary: documents and token fill per context window.

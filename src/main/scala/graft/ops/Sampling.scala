@@ -1,9 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deterministic sampling/splitting for training-data pipelines
   * (north-star extension).
@@ -76,6 +74,38 @@ object Sampling {
       .select(col("dom"), col("s").getField("k").as("key"),
         (col("pos") + 1).cast("long").as("rk"))
 
+  /** Deterministic global training-order permutation: every row gets its
+    * 1-based position in (md5(key), key) order — the "shuffle the corpus
+    * before training" step, reproducible across runs, partitionings, and
+    * engines (no RNG state; the hash IS the permutation). Rows can then be
+    * written sorted by `shuffle_rank` or bucketed by `shuffle_rank % n`
+    * for epoch sharding.
+    *
+    * Scale shape: the naive form is `row_number() OVER (ORDER BY h)` — a
+    * GLOBAL window, one partition holding the corpus. Here the rank is
+    * [[rankBy]]'s distributed prefix count. `key` must be unique and
+    * non-null. Returns (key, shuffle_rank); join on key to recover full
+    * rows.
+    */
+  def shuffleRank(df: DataFrame, key: Column, numPartitions: Int = 0): DataFrame =
+    rankBy(df, key, md5(key.cast("string")), numPartitions, "shuffle_rank")
+
+  /** The general form of [[shuffleRank]]: every row's 1-based position
+    * in (`order`, `key`) order — [[PrefixSum.exclusive]] of a constant 1,
+    * plus one: one range shuffle, only the #partitions counts through a
+    * window, never a global single-partition sort. `key` must be unique
+    * and non-null (the deterministic tie-break); rows with a null
+    * `order` are dropped (they have no place in a total order). Returns
+    * (key, <rankName>).
+    */
+  def rankBy(df: DataFrame, key: Column, order: Column,
+             numPartitions: Int = 0, rankName: String = "rank"): DataFrame = {
+    val slim = df.select(key.as("k"), order.as("h"), lit(1L).as("one"))
+      .where(col("h").isNotNull)
+    PrefixSum.exclusive(slim, Seq("h", "k"), "one", numPartitions = numPartitions)
+      .select(col("k").as("key"), (col("prefix_excl") + 1L).as(rankName))
+  }
+
   /** TOKEN-budget mixture: keep documents per domain, in deterministic
     * md5(key) order, until the domain's running token total reaches its
     * budget — the "2T tokens: 60% web, 20% code, …" selection step of
@@ -90,13 +120,9 @@ object Sampling {
     * Scale shape: the naive form is a window over
     * `(PARTITION BY domain ORDER BY hash)` — ONE partition per domain,
     * pathological when one domain is most of a 100 TB corpus. Here the
-    * per-domain prefix sum is distributed like [[Packing.packSequences]]:
-    * pin the slim (key, dom, n_tok, hash) projection (range sampling must
-    * not re-run the token-count kernel — same fix as packing's), range-
-    * repartition by (dom, hash) so each domain spans contiguous
-    * partitions, compute per-(partition, domain) running sums in one
-    * narrow `mapPartitionsWithIndex` pass, and put ONLY the
-    * per-(partition, domain) totals (#partitions × #domains rows) through
+    * prefix is [[PrefixSum.exclusive]] grouped by domain over the slim
+    * (key, dom, n_tok, hash) rows: each domain spans contiguous range
+    * partitions, and only the per-(partition, domain) totals go through
     * the per-domain offset window. The data shuffles once.
     *
     * `key` must be unique and non-null (it defines the deterministic
@@ -104,138 +130,21 @@ object Sampling {
     * (key, dom, n_tok, prefix_excl) for kept rows; semi-join on key to
     * recover full rows.
     */
-  /** Deterministic global training-order permutation: every row gets its
-    * 1-based position in (md5(key), key) order — the "shuffle the corpus
-    * before training" step, reproducible across runs, partitionings, and
-    * engines (no RNG state; the hash IS the permutation). Rows can then be
-    * written sorted by `shuffle_rank` or bucketed by `shuffle_rank % n`
-    * for epoch sharding.
-    *
-    * Scale shape: the naive form is `row_number() OVER (ORDER BY h)` — a
-    * GLOBAL window, one partition holding the corpus. Here ranks are
-    * assigned like [[tokenBudgetSample]]'s prefix sums: one range shuffle
-    * by (h, key), a narrow per-partition count pass with STRUCTURAL
-    * partition ids (mapPartitionsWithIndex — immune to downstream
-    * coalesce, the q59 lesson), and only the #partitions per-partition
-    * counts go through a window. `key` must be unique and non-null.
-    * Returns (key, shuffle_rank); join on key to recover full rows.
-    */
-  def shuffleRank(df: DataFrame, key: Column, numPartitions: Int = 0): DataFrame =
-    rankBy(df, key, md5(key.cast("string")), numPartitions, "shuffle_rank")
-
-  /** The general form of [[shuffleRank]]: every row's 1-based position
-    * in (`order`, `key`) order, via the same two-phase distributed
-    * prefix count — one range shuffle, structural partition ids, only
-    * the #partitions counts through a window, never a global
-    * single-partition sort. `key` must be unique and non-null (the
-    * deterministic tie-break); rows with a null `order` are dropped
-    * (they have no place in a total order). Returns (key, <rankName>).
-    */
-  def rankBy(df: DataFrame, key: Column, order: Column,
-             numPartitions: Int = 0, rankName: String = "rank"): DataFrame = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // slim projection, GUARDED pin (ScanLayout): the range-boundary
-    // sampling job and the shuffle-map job both read this child, which
-    // on an under-parallelized local scan means TWO serial one-task
-    // corpus passes — the pin makes it one scan + one cache read, and
-    // releases before return (the range shuffle is materialized by the
-    // eager localCheckpoint below, so nothing downstream re-reads the
-    // pin). At scale the guard keeps the no-pin shape: boundaries only
-    // steer partition BALANCE, so correctness never depends on the
-    // sample, and a full materialization there is pure overhead (the
-    // lesson of the old unconditional 50M-row checkpoint). The pin
-    // that matters for correctness is the one AFTER id assignment.
-    val (slim, releaseSlim, _) = ScanLayout.pinForPasses(
-      df.select(key.as("k"), order.as("h"))
-        .where(col("h").isNotNull))
-    try {
-    // (partition id, within-partition sequence) from the documented
-    // monotonically_increasing_id layout — pid in the upper 31 bits,
-    // record number in the lower 33 — assigned in the sorted iterator
-    // order and IMMEDIATELY materialized: the checkpoint pins the
-    // nondeterministic ids against recompute AND against a downstream
-    // coalesce re-numbering partitions (the q59 lesson's structural-id
-    // requirement, columnar instead of the old RDD round-trip — the
-    // Row conversion was 0.8 M rows/s at 50M, this path is codegen'd)
-    val local = slim
-      .repartitionByRange(parts, col("h"), col("k"))
-      .sortWithinPartitions(col("h"), col("k"))
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint()
-      .select(col("k"),
-        shiftright(col("__mid"), 33).cast("int").as("pid"),
-        (col("__mid").bitwiseAND(lit((1L << 33) - 1)) + 1L).as("local_rank"))
-    val offsets = local.groupBy(col("pid"))
-      .agg(max(col("local_rank")).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum(col("cnt")).over(
-          Window.orderBy(col("pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("offset"))
-    local.join(broadcast(offsets), Seq("pid"))
-      .select(col("k").as("key"), (col("offset") + col("local_rank")).as(rankName))
-    } finally releaseSlim()
-  }
-
   def tokenBudgetSample(df: DataFrame, key: Column, domain: Column,
                         tokenCount: Column, budgets: Map[String, Long],
                         defaultBudget: Long = Long.MaxValue,
                         numPartitions: Int = 0): DataFrame = {
     require(budgets.values.forall(_ >= 0) && defaultBudget >= 0,
       "budgets must be non-negative")
-    val spark = df.sparkSession
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-
-    val slim = df
-      .select(key.as("k"), domain.cast("string").as("dom"),
-        coalesce(tokenCount.cast("long"), lit(0L)).as("n_tok"),
-        md5(key.cast("string")).as("h"))
-      .localCheckpoint()
-    val ranged = slim
-      .repartitionByRange(parts, col("dom"), col("h"))
-      .sortWithinPartitions(col("dom"), col("h"))
-
-    // structural partition id (mapPartitionsWithIndex), NOT TaskContext —
-    // a downstream coalesce would collapse the task-scoped id to 0 and
-    // zero every offset (the q59 lesson, PipelineOpsSpec regression shape)
-    val outSchema = StructType(ranged.schema.fields ++ Seq(
-      StructField("pid", IntegerType, nullable = false),
-      StructField("local_cum", LongType, nullable = false)))
-    val withPid = ranged.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val cums = scala.collection.mutable.HashMap.empty[String, Long]
-      it.map { r =>
-        val dom = r.getString(1)
-        val c = cums.getOrElse(dom, 0L) + r.getLong(2)
-        cums(dom) = c
-        Row(r.get(0), dom, r.getLong(2), r.getString(3), pid, c)
-      }
-    }
-    val local = spark.createDataFrame(withPid, outSchema)
-
-    // per-(partition, domain) totals -> per-domain exclusive offsets; the
-    // window runs over #partitions × #domains rows, never the data
-    val offsets = local.groupBy(col("pid"), col("dom"))
-      .agg(max(col("local_cum")).as("tot"))
-      .withColumn("offset",
-        coalesce(sum(col("tot")).over(
-          Window.partitionBy(col("dom")).orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("dom"), col("offset"))
-
-    // null-safe (<=>) on dom: a null domain must still meet its offsets
-    // (plain = would drop every null-domain row at this join)
+    val slim = df.select(key.as("k"), domain.cast("string").as("dom"),
+      coalesce(tokenCount.cast("long"), lit(0L)).as("n_tok"),
+      md5(key.cast("string")).as("h"))
     val budgetCol = budgets.toSeq.sortBy(_._1).foldLeft(lit(defaultBudget)) {
-      case (acc, (d0, b)) => when(col("l.dom") === d0, lit(b)).otherwise(acc)
+      case (acc, (d0, b)) => when(col("dom") === d0, lit(b)).otherwise(acc)
     }
-    local.as("l").join(broadcast(offsets.as("o")),
-        col("l.pid") === col("o.pid") && col("l.dom") <=> col("o.dom"))
-      .withColumn("prefix_excl", col("o.offset") + col("l.local_cum") - col("l.n_tok"))
+    PrefixSum.exclusive(slim, Seq("h"), "n_tok", Some("dom"), numPartitions)
       .where(col("prefix_excl") < budgetCol)
-      .select(col("l.k").as("key"), col("l.dom").as("dom"),
-        col("l.n_tok").as("n_tok"), col("prefix_excl"))
+      .select(col("k").as("key"), col("dom"), col("n_tok"), col("prefix_excl"))
   }
 
   /** Continuous per-domain token-budget admission — the streaming twin
@@ -327,19 +236,6 @@ object Sampling {
       .drop("__pri")
   }
 
-  /** Per-stratum [[prioritySample]]: the k smallest priorities WITHIN
-    * each stratum win — a weight-proportional sample per domain/source,
-    * the mixture-building primitive when per-stratum quotas matter
-    * (q65's stratified take is unweighted hash order; q97's priority
-    * sample is global). Same deterministic 52-bit md5 uniform, same
-    * fail-fast weight guard.
-    *
-    * Scale shape: rank-within-stratum filters through Spark's
-    * WindowGroupLimit, which keeps k rows per stratum in a bounded heap
-    * on the MAP side before the stratum exchange (plan-asserted) — the
-    * shuffle carries at most k rows per stratum per map partition, so a
-    * hot stratum never floods one reducer with its full population.
-    */
   /** DSIR-style importance weights (Xie et al. '23, "Data Selection via
     * Importance Resampling"): score every raw document by how much its
     * hashed-ngram distribution looks like a TARGET corpus — the
@@ -424,6 +320,19 @@ object Sampling {
         (col("s") + col("n_feats") * (bitlen(lit(nr)) - bitlen(lit(nt))))
           .as("weight_bits"))
 
+  /** Per-stratum [[prioritySample]]: the k smallest priorities WITHIN
+    * each stratum win — a weight-proportional sample per domain/source,
+    * the mixture-building primitive when per-stratum quotas matter
+    * (q65's stratified take is unweighted hash order; q97's priority
+    * sample is global). Same deterministic 52-bit md5 uniform, same
+    * fail-fast weight guard.
+    *
+    * Scale shape: rank-within-stratum filters through Spark's
+    * WindowGroupLimit, which keeps k rows per stratum in a bounded heap
+    * on the MAP side before the stratum exchange (plan-asserted) — the
+    * shuffle carries at most k rows per stratum per map partition, so a
+    * hot stratum never floods one reducer with its full population.
+    */
   def prioritySamplePerKey(df: DataFrame, stratum: Column, key: Column,
                            weight: Column, k: Int): DataFrame = {
     require(k > 0, "per-stratum sample size k must be positive")
@@ -440,6 +349,7 @@ object Sampling {
       .where(col("__rk") <= k)
       .drop("__pri", "__rk")
   }
+
   /** Coordinated (consistent-hash) sampling — the cross-table sampling
     * rule that makes SAMPLES JOINABLE: every table keeps exactly the
     * rows whose KEY hashes into the kept bucket range, so

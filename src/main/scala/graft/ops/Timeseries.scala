@@ -308,21 +308,21 @@ object Timeseries {
     * +1 lands at `start`, −1 at `end + 1` (closed-interval semantics:
     * a session ending at t and one starting at t ARE concurrent),
     * deltas SUM per distinct tick first — so the running sum never
-    * depends on intra-tick event order — then one ordered window over
-    * the tick-level frame takes the running maximum.
+    * depends on intra-tick event order — then the inclusive running
+    * delta (the exclusive prefix plus the tick's own delta) goes
+    * through a struct-max.
     *
     * Scale shape: the interval-sized data collapses map-side into the
-    * distinct-tick frame (one hash aggregate); only that frame sees
-    * the ordered window. With second-or-coarser ticks the frame is
-    * calendar-sized; if ticks approach interval cardinality, bucket
-    * the grain first (the window is the only non-partitioned step).
-    * Output one row: (max_concurrent, at_tick); empty input yields
-    * (0, null). Intervals with end < start fail loudly.
+    * distinct-tick frame (one hash aggregate); the running delta over
+    * it is [[PrefixSum.exclusive]] — one range shuffle of the ticks,
+    * no single-partition window over them at any tick count — and the
+    * struct-max is a partial aggregate. Output one row:
+    * (max_concurrent, at_tick); empty input yields (0, null).
+    * Intervals with end < start fail loudly.
     */
   def maxConcurrency(intervals: DataFrame,
                      start: org.apache.spark.sql.Column,
                      end: org.apache.spark.sql.Column): DataFrame = {
-    val spark = intervals.sparkSession
     Seq("start" -> start, "end" -> end).foreach { case (n, c) =>
       val t = intervals.select(c.as("__t")).schema.head.dataType.simpleString
       require(Seq("bigint", "int", "smallint", "tinyint").contains(t),
@@ -336,10 +336,8 @@ object Timeseries {
     val deltas = iv.select(col("__s").as("tick"), lit(1L).as("__d"))
       .unionByName(iv.select((col("__e") + 1L).as("tick"), lit(-1L).as("__d")))
       .groupBy(col("tick")).agg(sum(col("__d")).as("__d"))
-    val w = Window.orderBy(col("tick"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val peaked = deltas
-      .withColumn("__run", sum(col("__d")).over(w))
+    val peaked = PrefixSum.exclusive(deltas, Seq("tick"), "__d")
+      .withColumn("__run", col("prefix_excl") + col("__d"))
       .agg(max(struct(col("__run"), (-col("tick")).as("nt"))).as("__m"))
       .select(col("__m.__run").as("max_concurrent"),
         (-col("__m.nt")).as("at_tick"))
@@ -436,7 +434,7 @@ object Timeseries {
       .groupBy(keys.map(col): _*)
       .agg(max(col("__n")).as("n"), max(col("__g")).as("__m"))
       .select(keys.map(col) ++ Seq(col("n"),
-        (-col("__m.ni")).as("cp_idx"), col("__m.us").as("cp_us"),
+        (-col("__m.ni")).cast("long").as("cp_idx"), col("__m.us").as("cp_us"),
         col("__m.g").as("gain")): _*)
   }
 

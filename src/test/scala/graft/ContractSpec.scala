@@ -38,6 +38,23 @@ class ContractSpec extends AnyFunSuite {
       s"SparkSession.builder outside GraftSession.local: $builders")
   }
 
+  test("ops/PrefixSum is the only two-phase prefix sum in src/main") {
+    // a hand-rolled copy shows as a structural-id pass or an offset
+    // window over partition ids; either belongs in PrefixSum alone
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/ops")
+    val offsetWindow = "orderBy\\(col\\(\"_*pid\"\\)\\)".r
+    def copies(f: java.nio.file.Path): Boolean = {
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      src.contains("mapPartitionsWithIndex") || offsetWindow.findFirstIn(src).isDefined
+    }
+    assert(copies(root.resolve("PrefixSum.scala")), "the fence no longer matches PrefixSum's offset window")
+    val others = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "PrefixSum.scala")
+      .filter(copies).map(root.relativize(_).toString).toSeq
+    assert(others.isEmpty, s"prefix-sum copies outside PrefixSum.scala: $others")
+  }
+
   test("README's query counts match the code") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), "UTF-8")

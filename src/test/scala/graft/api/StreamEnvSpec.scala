@@ -52,6 +52,44 @@ class StreamEnvSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("file-watch word count: JSON drops through fromFileStream") {
+    // the reference's flagship pipeline over a watched directory: each
+    // JSON file dropped in is one micro-batch; the second file's late
+    // timestamp advances the watermark past the first window, firing it
+    import org.apache.spark.sql.types._
+    import java.nio.file.{Files, StandardCopyOption}
+    val root = Files.createTempDirectory("graft_file_stream")
+    val dir = Files.createDirectory(root.resolve("in"))
+    // write beside the watched directory, then move in atomically, so the
+    // running query never lists a half-written file
+    def drop(name: String, lines: String*): Unit = Files.move(
+      Files.write(root.resolve(name), lines.mkString("\n").getBytes("UTF-8")),
+      dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    drop("b1.json",
+      """{"line":"spark streams spark","ts":"2024-01-01T00:00:02Z"}""",
+      """{"line":"flink spark","ts":"2024-01-01T00:00:07Z"}""")
+    val schema = StructType(Seq(
+      StructField("line", StringType), StructField("ts", TimestampType)))
+    val q = StreamEnv(spark).fromFileStream(dir.toString, "json", schema)
+      .flatMapRecords(graft.ops.Stateless.tokens(col("line")), "word")
+      .withEventTime("ts", "5 seconds")
+      .keyBy(col("word"))
+      .window(col("ts"), "10 seconds")
+      .agg(count(lit(1)).as("cnt"))
+      .toMemorySink("file_wc", OutputMode.Append())
+    try {
+      q.processAllAvailable()
+      assert(spark.table("file_wc").count() == 0, "window fired below its watermark")
+      drop("b2.json", """{"line":"later","ts":"2024-01-01T00:00:30Z"}""")
+      q.processAllAvailable()
+      val rows = spark.table("file_wc").select("word", "cnt").as[(String, Long)].collect().toSet
+      assert(rows == Set(("spark", 3L), ("streams", 1L), ("flink", 1L)))
+    } finally {
+      q.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+    }
+  }
+
   test("filter AFTER windowed aggregation inside the streaming query (SURVEY §7.4.2)") {
     // the reference's flagship pipeline shape: ... window -> reduce ->
     // filter(count > N) -> sink (examples/word_count.py:35-37). In append

@@ -198,6 +198,41 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("PrefixSum property: equals the naive per-group window sum minus value, through coalesce(1)") {
+    // sum(v) over (partition by g order by o rows unbounded preceding) - v
+    // is the contract; random values (zeros and negatives included), a
+    // null group, several partitionings, and a downstream coalesce(1)
+    // that folds every partition into one task
+    import org.apache.spark.sql.expressions.Window
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val cases = (1 to 3).flatMap { i =>
+      val g = Gen.listOfN(120, for {
+        grp <- Gen.oneOf(Some("a"), Some("b"), Some("c"), None)
+        v <- Gen.frequency(1 -> Gen.const(0L), 3 -> Gen.choose(-40L, 200L))
+      } yield (grp, v))
+      g.apply(Gen.Parameters.default, Seed(300 + i))
+    }
+    assert(cases.nonEmpty)
+    for (rows <- cases) {
+      // sparse, negative-including order keys, fed in a scrambled order
+      val all: Seq[(Option[String], Long)] = (None, 0L) +: (Some("a"), 0L) +: rows
+      val df = all.zipWithIndex
+        .map { case ((g, v), i) => ((i * 7919L) % 1009L - 500L, g, v) }
+        .reverse.toDF("o", "g", "v")
+      for (grouped <- Seq(false, true); parts <- Seq(1, 3, 8)) {
+        val group = if (grouped) Some("g") else None
+        val w = Window.partitionBy(group.toSeq.map(col): _*).orderBy(col("o"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        val want = df.select(col("o"), (sum(col("v")).over(w) - col("v")).as("p"))
+          .as[(Long, Long)].collect().toMap
+        val got = PrefixSum.exclusive(df, Seq("o"), "v", group, parts)
+          .coalesce(1).select("o", "prefix_excl").as[(Long, Long)].collect().toMap
+        assert(got == want, s"grouped=$grouped parts=$parts")
+      }
+    }
+  }
+
   test("connectedComponents property: random graphs match union-find") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed

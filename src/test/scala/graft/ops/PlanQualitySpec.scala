@@ -198,7 +198,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // TOTALS (#partitions rows) — a window over the data (ord_key/n_tok
     // cumsum) would mean a global or re-shuffled sort of the dataset
     val winLines = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("sum(tot")),
+    assert(winLines.nonEmpty && winLines.forall(_.contains("sum(__tot")),
       s"window over the data instead of partition totals:\n${winLines.mkString("\n")}")
     // the data's one range shuffle lives in the shared RDD lineage
     // (consumed by both phases); SQL-level hash exchanges may carry only
@@ -230,6 +230,29 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(calls.value == nDocs,
       s"token counting executed ${calls.value} times for $nDocs docs — " +
         "the projection feeding repartitionByRange ran more than once (unpinned)")
+  }
+
+  test("q217: no single-partition window over the ticks — only PrefixSum's over partition totals") {
+    // a window with no partition spec runs in ONE partition; the only one
+    // allowed is PrefixSum's exclusive prefix over per-partition totals
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    def globalWindows(p: SparkPlan): Seq[String] = {
+      val root = p match { case a: AdaptiveSparkPlanExec => a.inputPlan; case o => o }
+      root.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+        .map(_.windowExpression.mkString(", "))
+        .filterNot(_.contains("sum(__tot"))
+    }
+    val p = graft.SparkEntry.queries("q217_peak_sessions")(spark, sf).queryExecution.executedPlan
+    assert(globalWindows(p).isEmpty, s"single-partition window over the ticks:\n$p")
+    // the check fires on the sweep's naive form: a running sum over every tick
+    val ticks = spark.range(100).select((col("id") % 17).as("tick"), lit(1L).as("d"))
+      .groupBy("tick").agg(sum("d").as("d"))
+    val naive = ticks.withColumn("run", sum(col("d")).over(Window.orderBy(col("tick"))))
+    assert(globalWindows(naive.queryExecution.executedPlan).nonEmpty)
   }
 
   test("q60/q63: per-group rankings are partial top-k aggregates, not windows") {
