@@ -20,6 +20,12 @@ import org.apache.spark.sql.SparkSession
   *    coalescing with a high initial value).
   *  - Timezone pinned to UTC so event-time window math is stable across
   *    environments.
+  *  - Fixed per-stage buffers (broadcast blocks, Tungsten pages) are
+  *    sized to the data moved, not to the heap: each stage and task
+  *    reserves one whole buffer however few rows it holds, and at small
+  *    batches that headroom was a third of all allocation. A cluster
+  *    with GB-sized broadcasts or multi-GB aggregation tasks should
+  *    raise them again.
   */
 object GraftSession {
 
@@ -86,6 +92,29 @@ object GraftSession {
       // which Spark's reader rejects without this conf; harmless for the
       // current timestamp[us] generation (Tables.events adapts per schema).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // Fixed per-stage buffers sized to the data moved, not to Spark's
+      // cluster defaults. Both are SparkContext confs: like
+      // CodegenCacheMaxEntries they apply only when a JVM builds its
+      // first context (perfbench restarts the session every round, so
+      // they apply there).
+      // TorrentBroadcast.blockifyObject allocates at least one whole
+      // block per broadcast, and every stage broadcasts its task
+      // binary: at the 4 MB default that was ~760 MB of a 4.3 GB
+      // batch-mix pass (626 MB for 147 task binaries on the
+      // dag-scheduler thread, 133 MB for broadcast joins) and 914 MB
+      // of corpus-admit. Task binaries and the broadcast build sides
+      // here are KBs to a few MB, so 256 KB blocks waste little.
+      .config("spark.broadcast.blockSize", "256k")
+      // Every hash-aggregate fast map, BytesToBytesMap and sorter takes
+      // one whole Tungsten page up front, even for a few rows; Spark
+      // sizes the page from heap / cores (16 MB at -Xmx3g local[4],
+      // 64 MB at -Xmx8g local[4]), ~680 MB of the batch-mix pass.
+      // 1 MB is safe: the page table holds 8192 pages, so one task can
+      // still hold 8 GB of pages (at least the whole heap of every
+      // local JVM here: 3 GB bench, <= 8 GB suite), and a record larger
+      // than a page gets a page of its own size (MemoryConsumer.
+      // allocatePage takes max(pageSize, required)).
+      .config("spark.buffer.pageSize", "1m")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

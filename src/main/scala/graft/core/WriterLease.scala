@@ -18,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   * rename):
   *  - acquire  = create the file with `overwrite = false`; EEXIST means
   *    another writer holds it — read its age and fail loudly while the
-  *    lease is live.
+  *    lease is live. Any other create failure is rethrown as is, after
+  *    deleting the file it may have left without an owner line.
   *  - heartbeat = a daemon thread rewrites the file every `staleMs / 3`
   *    while the guarded body runs, so a long fold keeps its lease
   *    fresh. The rewrite re-verifies ownership first: if the lease was
@@ -89,12 +90,38 @@ object WriterLease {
 
   private def writeOwner(fs: org.apache.hadoop.fs.FileSystem,
                          f: org.apache.hadoop.fs.Path, owner: String,
-                         what: String, exclusive: Boolean): Boolean =
-    try {
-      val out = fs.create(f, !exclusive)
-      try out.write(s"$owner\n$what\n".getBytes("UTF-8")) finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
+                         what: String, exclusive: Boolean): Unit = {
+    val out = fs.create(f, !exclusive)
+    try out.write(s"$owner\n$what\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Exclusive create of the lease file: false iff it already exists
+    * (another writer's lease). Any other failure is rethrown, after
+    * deleting the file if it holds no owner line: on the local FS
+    * `create` makes the file and THEN forks `chmod`, so an interrupt
+    * there (a streaming query's stop() mid-tick, bit q185) left an
+    * empty, fresh lease that read as a live holder with an empty owner
+    * and blocked the next writer for staleMs. Deleting an empty file is
+    * safe: a concurrent writer caught between its own create and its
+    * write loses the file, its heartbeat finds no owner line and marks
+    * the lease lost, so that writer fails loudly instead of corrupting
+    * anything. The interrupt flag is cleared for the cleanup and
+    * restored afterwards, as release does.
+    */
+  private def createOwner(fs: org.apache.hadoop.fs.FileSystem,
+                          f: org.apache.hadoop.fs.Path, owner: String,
+                          what: String): Boolean =
+    try { writeOwner(fs, f, owner, what, exclusive = true); true }
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case e: java.io.IOException =>
+        val wasInterrupted = Thread.interrupted()
+        try {
+          if (readOwner(fs, f).contains("")) fs.delete(f, false)
+        } catch { case c: java.io.IOException => e.addSuppressed(c) }
+        finally if (wasInterrupted) Thread.currentThread().interrupt()
+        throw e
+    }
 
   /** Run `body` holding the writer lease on `base`; `what` names the
     * mutation in the error message. Fails with [[IllegalStateException]]
@@ -127,7 +154,7 @@ object WriterLease {
     val owner = ownerToken()
 
     def acquire(attempts: Int): Unit = {
-      if (writeOwner(fs, f, owner, what, exclusive = true)) return
+      if (createOwner(fs, f, owner, what)) return
       val st = try Some(fs.getFileStatus(f))
                catch { case _: java.io.FileNotFoundException => None }
       st match {
@@ -199,7 +226,8 @@ object WriterLease {
         } else if (nowMs() - lastWrite >= staleMs) {
           lost.set(true); going = false // paused past expiry: don't write
         } else {
-          writeOwner(fs, f, owner, what, exclusive = false)
+          try writeOwner(fs, f, owner, what, exclusive = false)
+          catch { case _: java.io.IOException => () } // next beat retries
           if (nowMs() - lastWrite >= staleMs) {
             // the pause hit DURING the rewrite: we may have clobbered a
             // new holder — surrender; release will not delete (lost)

@@ -154,6 +154,24 @@ class WriterLeaseSpec extends AnyFunSuite {
     assert(e.getMessage.contains("winner#2#y"))
   }
 
+  test("an interrupted exclusive create leaves no phantom lease behind") {
+    // q185: a streaming stop() interrupted the acquire's create after the
+    // local FS had made the file but before the owner line was written;
+    // the empty file then read as a live holder and blocked replicate
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${InterruptedCreateFs.Scheme}.impl", classOf[InterruptedCreateFs].getName)
+    val base = s"${InterruptedCreateFs.Scheme}://" + TempDirs.create("lease_interrupted_create")
+    InterruptedCreateFs.failNext.set(true)
+    var interrupted = false
+    try intercept[java.io.InterruptedIOException] {
+      WriterLease.withLease(spark, base, "interrupted") { () }
+    } finally interrupted = Thread.interrupted()
+    assert(interrupted, "the caller's interrupt flag must survive the cleanup")
+    assert(!InterruptedCreateFs.failNext.get())
+    assert(WriterLease.withLease(spark, base, "next-writer") { "ran" } == "ran")
+    assert(!leaseFile(base.stripPrefix(s"${InterruptedCreateFs.Scheme}://")).exists())
+  }
+
   test("mid-body loss: a foreign overwrite trips the handle before release") {
     val base = TempDirs.create("lease_midbody_loss")
     val staleMs = 300L
@@ -171,4 +189,30 @@ class WriterLeaseSpec extends AnyFunSuite {
     assert(new String(java.nio.file.Files.readAllBytes(leaseFile(base).toPath), "UTF-8")
       .startsWith("usurper#3#z"))
   }
+}
+
+/** Local FS under its own scheme whose next exclusive create makes the
+  * file, then fails as an interrupted `chmod` fork does: with the
+  * thread's interrupt flag set and an [[java.io.InterruptedIOException]].
+  */
+class InterruptedCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create(s"${InterruptedCreateFs.Scheme}:///")
+  override def getScheme: String = InterruptedCreateFs.Scheme
+
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable) = {
+    val out = super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    if (overwrite || !InterruptedCreateFs.failNext.compareAndSet(true, false)) out
+    else {
+      out.close()
+      Thread.currentThread().interrupt()
+      throw new java.io.InterruptedIOException("java.lang.InterruptedException")
+    }
+  }
+}
+
+object InterruptedCreateFs {
+  val Scheme = "leaseinterrupt"
+  val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
