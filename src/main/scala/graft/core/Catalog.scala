@@ -36,6 +36,15 @@ import org.apache.spark.sql.functions._
   * the swap: [[SwapStore]]'s own roll-forward/back recovery. A
   * re-delivered batch (id ≤ ledger) is a no-op before any write.
   *
+  * Every manifest mutation ([[init]], [[ingest]], [[addStore]],
+  * [[restore]], a replica's cutover) is a pair-table commit through
+  * [[SwapStore]]'s one commit path (lease → staged data → staged
+  * ledger → `assertHeld` → swap), and the manifest and savepoint
+  * pointer sets go through its one parquet-mr codec — zero Spark jobs
+  * per catalog touch. Superseded generations leave through one sweep
+  * (`sweepGens`), whichever of the fold GC, the replica cutover or
+  * [[vacuum]] decides the keep-set.
+  *
   * Scale shape: a fold's work per store is whatever the caller's fold
   * function costs (the standing-index appends are all new-batch-sized
   * plus the store's own summary tables); the manifest is a
@@ -53,9 +62,25 @@ object Catalog {
   private def savepointDir(base: String, name: String) =
     s"$base/_savepoints/$name"
 
-  private def fsOf(spark: SparkSession, base: String) =
-    new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The replica's inflight pin on the primary — one per replica, so
+    * replicas fan out, each with its own pin.
+    */
+  private def replPin(replica: String) = f"repl-${replica.hashCode}%08x"
+
+  /** Delete every generation dir of `store` under `base` that `keep`
+    * does not name — the one generation sweep behind [[ingest]]'s GC,
+    * [[replicate]]'s cutover GC and [[vacuum]]. Returns the deleted paths.
+    */
+  private def sweepGens(spark: SparkSession, base: String, store: String,
+                        keep: Set[Long]): Seq[String] = {
+    val fs = SwapStore.fsOf(spark, base)
+    val dir = new org.apache.hadoop.fs.Path(s"$base/stores/$store")
+    val names = keep.map(g => s"g$g")
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq.map(_.getPath)
+      .filterNot(p => names.contains(p.getName))
+      .map { p => fs.delete(p, true); p.toString }
+  }
 
   /** Create the catalog: every store's initial table becomes its g-1
     * generation and the manifest starts with ledger -1.
@@ -160,7 +185,7 @@ object Catalog {
   def savepoint(spark: SparkSession, base: String, name: String): Unit = {
     require(name.nonEmpty && !name.exists(c => c == '/' || c == '.'),
       s"Catalog.savepoint: name '$name' must be non-empty without '/' or '.'")
-    val fs = fsOf(spark, base)
+    val fs = SwapStore.fsOf(spark, base)
     val dst = new org.apache.hadoop.fs.Path(savepointDir(base, name))
     require(!fs.exists(dst), s"Catalog.savepoint: '$name' already exists")
     // stage fully, then one rename — a reader never sees a half-written
@@ -170,10 +195,10 @@ object Catalog {
     while (true) {
       val before = SwapStore.retryingStaleReads() { lastBatch(spark, base) }
       SwapStore.retryingStaleReads() {
-        SwapStore.writePairsDir(spark, s"$tmp/manifest",
+        SwapStore.writeDir(spark, s"$tmp/manifest", SwapStore.Pairs,
           SwapStore.readPairs(spark, manifestPath(base)))
       }
-      SwapStore.writeLedgerDir(spark, s"$tmp/ledger", before)
+      SwapStore.writeDir(spark, s"$tmp/ledger", SwapStore.Ledger, Seq(before))
       if (SwapStore.retryingStaleReads() { lastBatch(spark, base) } == before) {
         require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dst),
           s"Catalog.savepoint: rename $tmp -> $dst failed")
@@ -187,7 +212,7 @@ object Catalog {
 
   /** Names of the existing savepoints. */
   def savepoints(spark: SparkSession, base: String): Seq[String] = {
-    val fs = fsOf(spark, base)
+    val fs = SwapStore.fsOf(spark, base)
     val dir = new org.apache.hadoop.fs.Path(s"$base/_savepoints")
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).map(_.getPath.getName)
@@ -207,8 +232,8 @@ object Catalog {
     savepoints(spark, base)
       .flatMap { n =>
         pinCache.computeIfAbsent(s"$base $n", _ =>
-          SwapStore.readPairsDir(spark, s"${savepointDir(base, n)}/manifest")
-            .toMap).toSeq
+          SwapStore.readDir(spark, s"${savepointDir(base, n)}/manifest",
+            SwapStore.Pairs).toMap).toSeq
       }
       .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
 
@@ -221,9 +246,9 @@ object Catalog {
     */
   def readAt(spark: SparkSession, base: String, name: String): Map[String, DataFrame] = {
     val sp = savepointDir(base, name)
-    require(fsOf(spark, base).exists(new org.apache.hadoop.fs.Path(sp)),
+    require(SwapStore.fsOf(spark, base).exists(new org.apache.hadoop.fs.Path(sp)),
       s"Catalog.readAt: no savepoint '$name' under $base")
-    SwapStore.readPairsDir(spark, s"$sp/manifest")
+    SwapStore.readDir(spark, s"$sp/manifest", SwapStore.Pairs)
       .map { case (n, g) =>
         n -> spark.read.parquet(genDir(base, n, g))
       }.toMap
@@ -242,18 +267,18 @@ object Catalog {
   def restore(spark: SparkSession, base: String, name: String): Unit =
     WriterLease.withLease(spark, base, s"Catalog.restore($name)") {
       val sp = savepointDir(base, name)
-      require(fsOf(spark, base).exists(new org.apache.hadoop.fs.Path(sp)),
+      require(SwapStore.fsOf(spark, base).exists(new org.apache.hadoop.fs.Path(sp)),
         s"Catalog.restore: no savepoint '$name' under $base")
       SwapStore.resetPairs(spark, manifestPath(base),
-        SwapStore.readPairsDir(spark, s"$sp/manifest"),
-        SwapStore.readLedgerDir(spark, s"$sp/ledger"))
+        SwapStore.readDir(spark, s"$sp/manifest", SwapStore.Pairs),
+        SwapStore.readDir(spark, s"$sp/ledger", SwapStore.Ledger).head)
     }
 
   /** Delete a savepoint; its generations become GC-eligible at the
     * next fold (unless still current, previous, or otherwise pinned).
     */
   def dropSavepoint(spark: SparkSession, base: String, name: String): Unit = {
-    val fs = fsOf(spark, base)
+    val fs = SwapStore.fsOf(spark, base)
     val dst = new org.apache.hadoop.fs.Path(savepointDir(base, name))
     require(fs.exists(dst), s"Catalog.dropSavepoint: no savepoint '$name'")
     fs.delete(dst, true)
@@ -316,16 +341,10 @@ object Catalog {
     // GC superseded generations: keep the new one, its immediate
     // predecessor (for readers that resolved the manifest pre-swap),
     // and every savepoint-pinned generation
-    val fs = fsOf(spark, base)
     val pinned = pinnedGens(spark, base)
     folds.foreach { case (name, _) =>
-      val dir = new org.apache.hadoop.fs.Path(s"$base/stores/$name")
-      val keep = Set(s"g$batchId", s"g${cur(name)}") ++
-        pinned.getOrElse(name, Set.empty).map(g => s"g$g")
-      if (fs.exists(dir))
-        fs.listStatus(dir).foreach { st =>
-          if (!keep.contains(st.getPath.getName)) fs.delete(st.getPath, true)
-        }
+      sweepGens(spark, base, name,
+        Set(batchId, cur(name)) ++ pinned.getOrElse(name, Set.empty))
     }
     } // re-check under the lease
     }
@@ -407,12 +426,6 @@ object Catalog {
                                    replica: String, full: Boolean,
                                    failAfter: Int,
                                    retryOnDeadPin: Boolean = true): Map[String, Long] = {
-    val rfs = fsOf(spark, replica)
-    def manifestExists: Boolean =
-      Seq("_store", "_store.old", "_store.next").exists(n =>
-        rfs.exists(new org.apache.hadoop.fs.Path(s"${manifestPath(replica)}/$n")))
-    val pin = f"repl-${replica.hashCode}%08x"
-    val havePin = savepoints(spark, primary).contains(pin)
     // fast path: a replica whose pointers already equal the primary's
     // needs no pin, no copies, and no swap — the converged steady state
     // is two manifest reads, and it stays LOCK-FREE (a follower polling
@@ -421,7 +434,8 @@ object Catalog {
     // the gens and ledger reads moves the ledger past the replica's
     // either way.) `full` always takes the pinned path — it exists to
     // recopy despite matching pointers.
-    if (!full && !havePin && manifestExists &&
+    if (!full && !savepoints(spark, primary).contains(replPin(replica)) &&
+        SwapStore.exists(spark, manifestPath(replica)) &&
         gens(spark, replica) == gens(spark, primary) &&
         lastBatch(spark, replica) == lastBatch(spark, primary))
       return Map.empty
@@ -441,10 +455,7 @@ object Catalog {
                               replica: String, full: Boolean,
                               failAfter: Int,
                               retryOnDeadPin: Boolean): Map[String, Long] = {
-    val rfs = fsOf(spark, replica)
-    def manifestExists: Boolean =
-      Seq("_store", "_store.old", "_store.next").exists(n =>
-        rfs.exists(new org.apache.hadoop.fs.Path(s"${manifestPath(replica)}/$n")))
+    val rfs = SwapStore.fsOf(spark, replica)
     // the call-time floor: one replicate() call must leave the replica
     // at a snapshot AT LEAST this fresh. A crashed earlier attempt (a
     // follower tick stopped between its pin rename and its pin drop)
@@ -455,17 +466,16 @@ object Catalog {
     // stale pin, run once more against a fresh one (incremental: only
     // the stores the stale snapshot missed ship again).
     val entryLedger = SwapStore.retryingStaleReads() { lastBatch(spark, primary) }
-    val pin = f"repl-${replica.hashCode}%08x"
-    val havePin = savepoints(spark, primary).contains(pin)
-    if (!havePin) savepoint(spark, primary, pin)
+    val pin = replPin(replica)
+    if (!savepoints(spark, primary).contains(pin)) savepoint(spark, primary, pin)
     val sp = savepointDir(primary, pin)
-    val snapRows = SwapStore.readPairsDir(spark, s"$sp/manifest")
+    val snapRows = SwapStore.readDir(spark, s"$sp/manifest", SwapStore.Pairs)
     val snapGens = snapRows.toMap
-    val snapLedger = SwapStore.readLedgerDir(spark, s"$sp/ledger")
+    val snapLedger = SwapStore.readDir(spark, s"$sp/ledger", SwapStore.Ledger).head
     // the replica's pre-cutover pointers: what incremental copies skip,
     // and what the post-cutover GC keeps one fold of (racing readers)
     val prevGens: Map[String, Long] =
-      if (manifestExists) gens(spark, replica) else Map.empty
+      if (SwapStore.exists(spark, manifestPath(replica))) gens(spark, replica) else Map.empty
     val toCopy = snapGens.toSeq.sortBy(_._1).filter { case (n, g) =>
       full || !prevGens.get(n).contains(g)
     }
@@ -510,16 +520,12 @@ object Catalog {
     if (failAfter == toCopy.size)
       throw new IllegalStateException(
         "Catalog: injected crash after all generation copies, before the cutover swap")
-    if (!manifestExists) SwapStore.initPairs(spark, manifestPath(replica), snapRows)
+    if (!SwapStore.exists(spark, manifestPath(replica)))
+      SwapStore.initPairs(spark, manifestPath(replica), snapRows)
     SwapStore.resetPairs(spark, manifestPath(replica), snapRows, snapLedger)
     snapGens.foreach { case (name, g) =>
-      val dir = new org.apache.hadoop.fs.Path(s"$replica/stores/$name")
-      val keep = Set(s"g$g") ++ prevGens.get(name).map(p => s"g$p") ++
-        rPinned.getOrElse(name, Set.empty).map(x => s"g$x")
-      if (rfs.exists(dir))
-        rfs.listStatus(dir).foreach { st =>
-          if (!keep.contains(st.getPath.getName)) rfs.delete(st.getPath, true)
-        }
+      sweepGens(spark, replica, name,
+        Set(g) ++ prevGens.get(name) ++ rPinned.getOrElse(name, Set.empty))
     }
     dropSavepoint(spark, primary, pin)
     if (snapLedger < entryLedger)
@@ -551,7 +557,7 @@ object Catalog {
     */
   def vacuum(spark: SparkSession, base: String): Seq[String] =
       WriterLease.withLease(spark, base, "Catalog.vacuum") {
-    val fs = fsOf(spark, base)
+    val fs = SwapStore.fsOf(spark, base)
     val cur = gens(spark, base)
     val pinned = pinnedGens(spark, base)
     val deleted = scala.collection.mutable.ListBuffer.empty[String]
@@ -562,12 +568,9 @@ object Catalog {
     if (fs.exists(storesDir))
       fs.listStatus(storesDir).foreach { sd =>
         val name = sd.getPath.getName
-        val keep = cur.get(name).map(g => s"g$g").toSet ++
-          pinned.getOrElse(name, Set.empty).map(g => s"g$g")
+        val keep = cur.get(name).toSet ++ pinned.getOrElse(name, Set.empty)
         if (keep.isEmpty) rm(sd.getPath)
-        else fs.listStatus(sd.getPath).foreach { st =>
-          if (!keep.contains(st.getPath.getName)) rm(st.getPath)
-        }
+        else deleted ++= sweepGens(spark, base, name, keep)
       }
     val spDir = new org.apache.hadoop.fs.Path(s"$base/_savepoints")
     if (fs.exists(spDir))
@@ -654,16 +657,8 @@ object Catalog {
                    folds: Seq[(String, (DataFrame, DataFrame) => DataFrame)],
                    checkpoint: Option[String] = None,
                    ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.ops.Sketches.requireDurableCheckpoint(checkpoint, base, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SwapStore.retryingStaleReads() {
-          ingest(spark, base, bid, batch, folds)
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    ingestStreamDynamic(spark, stream, base, _ => folds, checkpoint, ephemeralOk)
 
   /** [[ingestStream]] with a BATCH-DEPENDENT fold list: `folds(batch)`
     * decides per trigger which stores this batch touches (and how) —

@@ -1,171 +1,126 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** A tiny crash-safe persisted-table lifecycle shared by the continuous
   * folds ([[graft.ops.Diff.maintainAggStream]]'s materialized view,
-  * [[graft.ops.Sketches]]' standing bucket tables): `path/_store/data`
-  * holds the table, `path/_store/ledger` the last-applied streaming
-  * batch id — both inside ONE directory swap, so content and ledger can
-  * never disagree after a crash, and a foreachBatch re-delivery
-  * (batchId ≤ ledger) is a no-op instead of a double-apply.
+  * [[graft.ops.Sketches]]' standing bucket tables) and the [[Catalog]]
+  * manifest: `path/_store/data` holds the table, `path/_store/ledger`
+  * the last-applied streaming batch id — both inside ONE directory
+  * swap, so content and ledger can never disagree after a crash, and a
+  * foreachBatch re-delivery (batchId ≤ ledger) is a no-op instead of a
+  * double-apply.
   *
-  * The swap itself is the two-rename protocol ([[swapDirs]], shared
-  * with every standing index); readers racing the visibility window
-  * retry via [[retryingStaleReads]] at the call sites that fold, and a
-  * crash BETWEEN the two renames (no `_store` at all) is rolled
-  * forward or back by [[ensureStore]] on the next read — the staging
-  * dir always holds a complete replacement (its writes finish before
-  * any rename starts), and the first rename parks the previous content
-  * at `_store.old`, so one of the two is always restorable.
+  * ONE COMMIT PATH: every mutation — [[init]], [[fold]], [[reset]],
+  * [[compact]] and their pair-table forms — goes through the private
+  * `commit`: take the store's [[WriterLease]], write the data dir into
+  * the `_store.next` staging dir, write the ledger beside it (last, so
+  * its `_SUCCESS` marker implies the data's), `assertHeld()`, then swap
+  * both in with [[swapDirs]]' two renames (a first [[init]] renames the
+  * staging dir into place instead). The ledger-guarded fold — lock-free
+  * re-delivery check, then the same check again under the lease — is
+  * likewise written once, for the DataFrame and the pair form.
   *
-  * SINGLE-WRITER CONTRACT — ENFORCED: folds serialize through the
+  * Readers racing the swap's visibility window retry via
+  * [[retryingStaleReads]] at the call sites that fold, and a crash
+  * BETWEEN the two renames (no `_store` at all) is rolled forward or
+  * back by [[ensureStore]] on the next read — the staging dir always
+  * holds a complete replacement (its writes finish before any rename
+  * starts), and the first rename parks the previous content at
+  * `_store.old`, so one of the two is always restorable.
+  *
+  * SINGLE-WRITER CONTRACT — ENFORCED: commits serialize through the
   * shared `_store.next` staging dir, which is exactly foreachBatch's
-  * serial-per-query execution model. Two DIFFERENT queries folding the
-  * same path concurrently would race the staging dir and corrupt
-  * silently, so every mutation here ([[init]]/[[fold]]/[[reset]]/
-  * [[compact]]) acquires the path-scoped [[WriterLease]] for its
-  * duration: the second concurrent writer fails with the named
-  * another-writer-holds-the-lease error instead. The lease is
+  * serial-per-query execution model; the path-scoped lease makes a
+  * second concurrent writer fail with the named another-writer-holds-
+  * the-lease error instead of racing the staging dir. The lease is
   * store-scoped (`path/_writer.lease`), so [[Catalog]] — which holds
   * its own base-scoped lease across a multi-store mutation and then
   * folds its manifest through here — nests without deadlock (base and
-  * manifest are different paths). Re-delivery no-ops (batchId ≤
-  * ledger) stay lock-free; readers never touch the lease. A pipeline
-  * that needs one batch applied to MANY stores (the multi-writer-
-  * shaped case) goes through [[Catalog]], which keeps one writer per
-  * store generation and serializes visibility at its manifest swap.
+  * manifest are different paths). Readers never touch the lease.
   */
 object SwapStore {
 
   private def store(path: String) = s"$path/_store"
 
-  /** The ledger is ONE int64 in ONE parquet file, but it is read twice
-    * and written once per fold — and `spark.range(1).write.parquet` /
-    * `spark.read.parquet(...).head` each cost a full Spark job with
-    * planning (~100-300 ms, measured as the dominant per-batch driver
-    * gap of the fold-based streaming gates: q210 spent more wall in
-    * gaps than in jobs). These helpers move the ledger to direct
-    * parquet-mr I/O — SAME on-disk layout (a `part-*.parquet` with an
-    * optional int64 `last_batch` column plus a `_SUCCESS` marker, which
-    * is exactly what the Spark writer produced, so stores written by
-    * either path interread) — at ~1 ms and zero Spark jobs.
-    */
-  private val ledgerSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType("message spark_schema { optional int64 last_batch; }")
+  private[core] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private[graft] def writeLedgerDir(spark: SparkSession, dir: String,
-                                    batchId: Long): Unit = {
+  /** A driver-held row table stored as ONE parquet file, read and
+    * written by direct parquet-mr I/O — ~1 ms and zero Spark jobs where
+    * `spark.range(1).write.parquet` / `spark.read.parquet(...).collect`
+    * each cost a full Spark job with planning (~100-300 ms, the
+    * dominant per-batch driver gap of the fold-based streaming gates
+    * and of every catalog touch). The on-disk layout is what Spark's
+    * writer produces — a `part-*.parquet` (SNAPPY) plus a `_SUCCESS`
+    * marker — so directories written by either path interread.
+    */
+  private[core] final class Codec[T](val part: String, schema: String,
+                                     val put: (Group, T) => Unit,
+                                     val get: Group => T) {
+    val messageType = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+  }
+
+  /** The ledger: one optional int64 `last_batch` row. */
+  private[core] val Ledger = new Codec[Long]("ledger",
+    "message spark_schema { optional int64 last_batch; }",
+    (g, b) => g.add("last_batch", b), _.getLong("last_batch", 0))
+
+  /** The [[Catalog]] manifest's (store, gen) pairs: UTF8-annotated
+    * binary + int64, the columns Spark writes for a (String, Long) frame.
+    */
+  private[core] val Pairs = new Codec[(String, Long)]("pairs",
+    "message spark_schema { optional binary store (UTF8); optional int64 gen; }",
+    { case (g, (s, n)) =>
+      g.add("store", org.apache.parquet.io.api.Binary.fromString(s)); g.add("gen", n) },
+    g => (g.getBinary("store", 0).toStringUsingUTF8, g.getLong("gen", 0)))
+
+  /** Replace `dir` with `rows` in `codec`'s layout. */
+  private[core] def writeDir[T](spark: SparkSession, dir: String, codec: Codec[T],
+                                rows: Seq[T]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
+    val d = new Path(dir)
     val fs = d.getFileSystem(conf)
     fs.delete(d, true)
     fs.mkdirs(d)
-    val file = new org.apache.hadoop.fs.Path(d, "part-00000-ledger.parquet")
     val wconf = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(ledgerSchema, wconf)
+    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(codec.messageType, wconf)
     val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, wconf))
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
+        new Path(d, s"part-00000-${codec.part}.parquet"), wconf))
       .withConf(wconf)
       .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
-    try {
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(ledgerSchema)
-      g.add("last_batch", batchId)
+    try rows.foreach { r =>
+      val g = new org.apache.parquet.example.data.simple.SimpleGroup(codec.messageType)
+      codec.put(g, r)
       writer.write(g)
     } finally writer.close()
-    fs.create(new org.apache.hadoop.fs.Path(d, "_SUCCESS"), true).close()
+    fs.create(new Path(d, "_SUCCESS"), true).close()
   }
 
-  private[graft] def readLedgerDir(spark: SparkSession, dir: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    val part = fs.listStatus(d).map(_.getPath)
-      .find(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-      .getOrElse(throw new java.io.FileNotFoundException(
-        s"SwapStore: no ledger part file under $dir"))
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), part)
-      .withConf(conf).build()
-    try {
-      val g = reader.read()
-      require(g != null, s"SwapStore: empty ledger file $part")
-      g.getLong("last_batch", 0)
-    } finally reader.close()
-  }
-
-  /** The [[graft.core.Catalog]] manifest is a store-count-sized
-    * (store, gen) pair table, yet every fold/savepoint/answer used to
-    * pay full Spark jobs to read and rewrite it (`spark.read.parquet.
-    * collect` + `coalesce(1).write.parquet`, ~100-300 ms of planning
-    * each — the same driver-gap tax the ledger paid before its direct
-    * path). Same cure: direct parquet-mr I/O with the SAME on-disk
-    * layout Spark produced (`part-*.parquet` + `_SUCCESS`, UTF8-
-    * annotated binary + int64 columns), so manifests written by either
-    * path interread — old catalogs stay readable, and Spark can still
-    * scan a manifest directory written here.
+  /** Every row of `dir`, written by EITHER [[writeDir]] or a Spark
+    * parquet write (a legacy manifest may span several part files —
+    * all are read, in name order).
     */
-  private val pairsSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message spark_schema { optional binary store (UTF8); optional int64 gen; }")
-
-  private[graft] def writePairsDir(spark: SparkSession, dir: String,
-                                   rows: Seq[(String, Long)]): Unit = {
+  private[core] def readDir[T](spark: SparkSession, dir: String, codec: Codec[T]): Seq[T] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    fs.delete(d, true)
-    fs.mkdirs(d)
-    val file = new org.apache.hadoop.fs.Path(d, "part-00000-pairs.parquet")
-    val wconf = new org.apache.hadoop.conf.Configuration(conf)
-    org.apache.parquet.hadoop.example.GroupWriteSupport.setSchema(pairsSchema, wconf)
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(file, wconf))
-      .withConf(wconf)
-      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try rows.foreach { case (s, g) =>
-      val row = new org.apache.parquet.example.data.simple.SimpleGroup(pairsSchema)
-      row.add("store", org.apache.parquet.io.api.Binary.fromString(s))
-      row.add("gen", g)
-      writer.write(row)
-    } finally writer.close()
-    fs.create(new org.apache.hadoop.fs.Path(d, "_SUCCESS"), true).close()
-  }
-
-  /** Read a (store, gen) pair directory written by EITHER
-    * [[writePairsDir]] or a Spark parquet write (a legacy manifest may
-    * span several part files — all are read).
-    */
-  private[graft] def readPairsDir(spark: SparkSession, dir: String): Seq[(String, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val d = new org.apache.hadoop.fs.Path(dir)
-    val fs = d.getFileSystem(conf)
-    val parts = fs.listStatus(d).map(_.getPath)
+    val d = new Path(dir)
+    val parts = d.getFileSystem(conf).listStatus(d).map(_.getPath)
       .filter(p => p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
       .sortBy(_.getName)
-    require(parts.nonEmpty, s"SwapStore: no pair part files under $dir")
-    val out = scala.collection.mutable.ListBuffer.empty[(String, Long)]
-    parts.foreach { part =>
+    if (parts.isEmpty)
+      throw new java.io.FileNotFoundException(s"SwapStore: no part files under $dir")
+    parts.toSeq.flatMap { part =>
       val reader = org.apache.parquet.hadoop.ParquetReader
         .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), part)
         .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          out += ((g.getBinary("store", 0).toStringUsingUTF8, g.getLong("gen", 0)))
-          g = reader.read()
-        }
-      } finally reader.close()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(codec.get).toList
+      finally reader.close()
     }
-    out.toSeq
   }
-
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Recover from a crash inside [[swapDirs]]' two-rename window: if
     * `_store` is missing, roll FORWARD to a complete `_store.next`
@@ -188,16 +143,15 @@ object SwapStore {
     */
   private def ensureStore(spark: SparkSession, path: String): Unit = {
     val fs = fsOf(spark, path)
-    val st = new org.apache.hadoop.fs.Path(store(path))
+    val st = new Path(store(path))
     if (fs.exists(st)) return
-    val next = new org.apache.hadoop.fs.Path(s"$path/_store.next")
-    val old = new org.apache.hadoop.fs.Path(s"${store(path)}.old")
-    def complete(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(new org.apache.hadoop.fs.Path(p, "data/_SUCCESS")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "ledger/_SUCCESS"))
+    val next = new Path(s"$path/_store.next")
+    val old = new Path(s"${store(path)}.old")
+    def complete(p: Path): Boolean =
+      fs.exists(new Path(p, "data/_SUCCESS")) && fs.exists(new Path(p, "ledger/_SUCCESS"))
     def cleanNested(): Unit =
       Seq("_store.next", "_store.old").foreach { n =>
-        val junk = new org.apache.hadoop.fs.Path(st, n)
+        val junk = new Path(st, n)
         if (fs.exists(junk)) fs.delete(junk, true)
       }
     if (fs.exists(next) && complete(next)) {
@@ -214,18 +168,36 @@ object SwapStore {
     // genuine missing-store error
   }
 
+  /** True when a store exists at `path` in any state of its swap:
+    * `_store`, or a crashed swap's `_store.old` / `_store.next`.
+    */
+  private[core] def exists(spark: SparkSession, path: String): Boolean = {
+    val fs = fsOf(spark, path)
+    Seq("_store", "_store.old", "_store.next").exists(n => fs.exists(new Path(s"$path/$n")))
+  }
+
   /** Atomically replace the directory at `path` with `tmp` via two
     * renames (path -> path.old, tmp -> path). Crash between the
     * renames leaves the previous content at `path.old`; the window
     * where `path` does not exist is what [[retryingStaleReads]]
-    * absorbs on the reader side.
+    * absorbs on the reader side. Shared by every standing index in
+    * `graft.ops`, so the swap's crash-safety invariant lives here only.
+    *
+    * CONCURRENT READERS: the swap is crash-safe but not atomic for a
+    * reader in flight — between the two renames `path` momentarily does
+    * not exist, and a job that listed files before the swap can chase
+    * deleted `path.old` files. A read that straddles the swap fails
+    * loudly (missing path / missing file), never silently mixes the two
+    * versions — re-reading after the swap sees exactly the new content.
+    * The streaming readers retry their batch through
+    * [[retryingStaleReads]]; ad-hoc batch readers should either quiesce
+    * around a swap or wrap reads the same way.
     */
   private[graft] def swapDirs(spark: SparkSession, path: String, tmp: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val src = new org.apache.hadoop.fs.Path(tmp)
-    val old = new org.apache.hadoop.fs.Path(s"$path.old")
-    val fs = dst.getFileSystem(conf)
+    val dst = new Path(path)
+    val src = new Path(tmp)
+    val old = new Path(s"$path.old")
+    val fs = fsOf(spark, path)
     fs.delete(old, true) // clear any leftover from a prior crashed swap
     require(fs.rename(dst, old), s"swap failed: rename $path -> $path.old")
     // a racing reader's ensureStore may roll our own staging dir
@@ -238,6 +210,23 @@ object SwapStore {
     fs.delete(old, true)
   }
 
+  /** Commit one fold of a fold-numbered table (the [[graft.ops.Bm25Index]]
+    * and [[graft.ops.TrigramIndex]] postings): write `df` under
+    * `dir/_staging` (underscore-prefixed, so invisible to readers), then
+    * rename it into place as `dir/fold=<fold>` — idempotent under
+    * replay (a re-run overwrites the staging dir and re-renames the
+    * same bytes). `options` go to the parquet writer.
+    */
+  private[graft] def commitFold(df: DataFrame, dir: String, fold: Long,
+                                options: Map[String, String] = Map.empty): Unit = {
+    val staging = s"$dir/_staging"
+    df.write.mode("overwrite").options(options).parquet(staging)
+    val dst = new Path(s"$dir/fold=$fold")
+    val fs = fsOf(df.sparkSession, dir)
+    fs.delete(dst, true) // replayed crashed commit: same bytes, re-rename
+    require(fs.rename(new Path(staging), dst), s"fold commit failed: $staging -> $dst")
+  }
+
   /** Run `body`, retrying (bounded, short linear backoff) when it dies
     * on a missing path/file — the [[swapDirs]] visibility window. The
     * classifier is scoped to the two exception TYPES a mid-swap read
@@ -245,7 +234,9 @@ object SwapStore {
     * vanished file, `AnalysisException [PATH_NOT_FOUND]` from plan-time
     * resolution), anywhere in the cause chain — a genuinely wrong store
     * path raises something else and surfaces immediately instead of
-    * burning the retry budget.
+    * burning the retry budget. `body` must be idempotent (a streaming
+    * `onBatch` already is — Spark itself replays micro-batches on
+    * failure).
     */
   private[graft] def retryingStaleReads[T](attempts: Int = 5, backoffMs: Long = 500)
                                           (body: => T): T = {
@@ -268,23 +259,45 @@ object SwapStore {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Create (or replace) the store with `df` and an empty ledger. */
-  def init(df: DataFrame, path: String): Unit = {
-    val sp = df.sparkSession
-    WriterLease.withLeaseHandle(sp, path, s"SwapStore.init($path)") { lease =>
-      val tmp = s"$path/_store.next"
-      df.write.mode("overwrite").parquet(s"$tmp/data")
-      writeLedgerDir(sp, s"$tmp/ledger", -1L)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(sp.sparkContext.hadoopConfiguration)
-      lease.assertHeld()
-      if (!fs.exists(new org.apache.hadoop.fs.Path(store(path))))
-        require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store(path))),
-          s"SwapStore.init: rename $tmp failed")
-      else swapDirs(sp, store(path), tmp)
+  /** The one commit path. Under the store's writer lease (`what` names
+    * the mutation): if `when` holds, write the data dir with
+    * `writeData`, then the ledger at `batchId` (both evaluated under
+    * the lease), then swap the staged pair in — or, for `create`
+    * (init) on a path with no store yet, rename it into place.
+    */
+  private def commit(spark: SparkSession, path: String, what: String, batchId: => Long,
+                     create: Boolean = false, when: => Boolean = true)
+                    (writeData: String => Unit): Unit =
+    WriterLease.withLeaseHandle(spark, path, what) { lease =>
+      if (when) {
+        val ledger = batchId
+        val tmp = s"$path/_store.next"
+        writeData(s"$tmp/data")
+        writeDir(spark, s"$tmp/ledger", Ledger, Seq(ledger))
+        lease.assertHeld()
+        val fs = fsOf(spark, path)
+        if (create && !fs.exists(new Path(store(path))))
+          require(fs.rename(new Path(tmp), new Path(store(path))),
+            s"SwapStore.init: rename $tmp failed")
+        else swapDirs(spark, store(path), tmp)
+      }
     }
-  }
+
+  /** [[commit]] guarded by the ledger: a batch already applied
+    * (batchId ≤ ledger) is a lock-free no-op, and the check runs again
+    * under the lease — the lock-free read can race a concurrent writer
+    * that applied this very batch between our read and our acquire.
+    */
+  private def commitFolded(spark: SparkSession, path: String, batchId: Long)
+                          (writeData: String => Unit): Unit =
+    if (batchId > lastBatch(spark, path))
+      commit(spark, path, s"SwapStore.fold($path, batch $batchId)", batchId,
+        when = batchId > lastBatch(spark, path))(writeData)
+
+  /** Create (or replace) the store with `df` and an empty ledger. */
+  def init(df: DataFrame, path: String): Unit =
+    commit(df.sparkSession, path, s"SwapStore.init($path)", -1L, create = true)(
+      df.write.mode("overwrite").parquet(_))
 
   /** The current table. */
   def read(spark: SparkSession, path: String): DataFrame = {
@@ -295,7 +308,7 @@ object SwapStore {
   /** The last applied batch id (-1 after [[init]]). */
   def lastBatch(spark: SparkSession, path: String): Long = {
     ensureStore(spark, path)
-    readLedgerDir(spark, s"${store(path)}/ledger")
+    readDir(spark, s"${store(path)}/ledger", Ledger).head
   }
 
   /** Apply `transform` to the current table and swap the result in,
@@ -304,23 +317,9 @@ object SwapStore {
     * (reading the CURRENT files) before any rename happens.
     */
   def fold(spark: SparkSession, path: String, batchId: Long)
-          (transform: DataFrame => DataFrame): Unit = {
-    if (batchId <= lastBatch(spark, path)) return // re-delivery: lock-free no-op
-    WriterLease.withLeaseHandle(spark, path,
-        s"SwapStore.fold($path, batch $batchId)") { lease =>
-      // re-check under the lease: the lock-free fast path above can
-      // race a concurrent writer that applied this very batch between
-      // our read and our acquire
-      if (batchId > lastBatch(spark, path)) {
-        val out = transform(read(spark, path))
-        val tmp = s"$path/_store.next"
-        out.write.mode("overwrite").parquet(s"$tmp/data")
-        writeLedgerDir(spark, s"$tmp/ledger", batchId)
-        lease.assertHeld()
-        swapDirs(spark, store(path), tmp)
-      }
-    }
-  }
+          (transform: DataFrame => DataFrame): Unit =
+    commitFolded(spark, path, batchId)(dir =>
+      transform(read(spark, path)).write.mode("overwrite").parquet(dir))
 
   /** Replace the store's table AND ledger unconditionally — the
     * restore path ([[Catalog.restore]]) and the in-place manifest
@@ -328,89 +327,45 @@ object SwapStore {
     * move BACKWARD (to a savepoint's fork point) or stay put. `df` may
     * read the store's current files — like [[fold]]'s transform, the
     * plan materializes fully into the staging dir before any rename.
-    * Same crash-safe swap as [[fold]], same single-writer contract.
     */
   def reset(spark: SparkSession, path: String, df: DataFrame, batchId: Long): Unit =
-    WriterLease.withLeaseHandle(spark, path,
-        s"SwapStore.reset($path)") { lease =>
-      val tmp = s"$path/_store.next"
-      df.write.mode("overwrite").parquet(s"$tmp/data")
-      writeLedgerDir(spark, s"$tmp/ledger", batchId)
-      lease.assertHeld()
-      swapDirs(spark, store(path), tmp)
-    }
-
-  /** [[init]]/[[read]]/[[fold]]/[[reset]] specialized to a (store, gen)
-    * PAIR table held entirely on the driver — the [[Catalog]] manifest's
-    * shape. Zero Spark jobs: the data dir goes through
-    * [[writePairsDir]]/[[readPairsDir]] and the ledger through its
-    * direct path, under exactly the DataFrame forms' lease, ledger and
-    * two-rename swap semantics (same staging dir, same recovery).
-    */
-  private[graft] def initPairs(spark: SparkSession, path: String,
-                               rows: Seq[(String, Long)]): Unit =
-    WriterLease.withLeaseHandle(spark, path, s"SwapStore.init($path)") { lease =>
-      val tmp = s"$path/_store.next"
-      writePairsDir(spark, s"$tmp/data", rows)
-      writeLedgerDir(spark, s"$tmp/ledger", -1L)
-      val fs = fsOf(spark, path)
-      lease.assertHeld()
-      if (!fs.exists(new org.apache.hadoop.fs.Path(store(path))))
-        require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-          new org.apache.hadoop.fs.Path(store(path))),
-          s"SwapStore.init: rename $tmp failed")
-      else swapDirs(spark, store(path), tmp)
-    }
-
-  private[graft] def readPairs(spark: SparkSession, path: String): Seq[(String, Long)] = {
-    ensureStore(spark, path)
-    readPairsDir(spark, s"${store(path)}/data")
-  }
-
-  private[graft] def foldPairs(spark: SparkSession, path: String, batchId: Long)
-      (transform: Seq[(String, Long)] => Seq[(String, Long)]): Unit = {
-    if (batchId <= lastBatch(spark, path)) return // re-delivery: lock-free no-op
-    WriterLease.withLeaseHandle(spark, path,
-        s"SwapStore.fold($path, batch $batchId)") { lease =>
-      if (batchId > lastBatch(spark, path)) { // re-check under the lease
-        val out = transform(readPairs(spark, path))
-        val tmp = s"$path/_store.next"
-        writePairsDir(spark, s"$tmp/data", out)
-        writeLedgerDir(spark, s"$tmp/ledger", batchId)
-        lease.assertHeld()
-        swapDirs(spark, store(path), tmp)
-      }
-    }
-  }
-
-  private[graft] def resetPairs(spark: SparkSession, path: String,
-                                rows: Seq[(String, Long)], batchId: Long): Unit =
-    WriterLease.withLeaseHandle(spark, path, s"SwapStore.reset($path)") { lease =>
-      val tmp = s"$path/_store.next"
-      writePairsDir(spark, s"$tmp/data", rows)
-      writeLedgerDir(spark, s"$tmp/ledger", batchId)
-      lease.assertHeld()
-      swapDirs(spark, store(path), tmp)
-    }
+    commit(spark, path, s"SwapStore.reset($path)", batchId)(
+      df.write.mode("overwrite").parquet(_))
 
   /** Rewrite the store's data into `files` parquet files WITHOUT
     * advancing the ledger — the small-file bound for stores that fold
     * often (every fold's groupBy writes shuffle-partition-many files;
     * a periodic compact keeps the read side to `files` regardless of
-    * fold count). Content- and ledger-invariant (SwapStoreSpec), same
-    * crash-safe swap as [[fold]].
+    * fold count). Content- and ledger-invariant (SwapStoreSpec).
     */
   def compact(spark: SparkSession, path: String, files: Int = 1): Unit = {
     require(files > 0, "SwapStore.compact: files must be positive")
-    WriterLease.withLeaseHandle(spark, path,
-        s"SwapStore.compact($path)") { lease =>
-      val last = lastBatch(spark, path)
-      val tmp = s"$path/_store.next"
-      read(spark, path).coalesce(files)
-        .write.mode("overwrite").parquet(s"$tmp/data")
-      writeLedgerDir(spark, s"$tmp/ledger", last)
-      lease.assertHeld()
-      swapDirs(spark, store(path), tmp)
-    }
+    commit(spark, path, s"SwapStore.compact($path)", lastBatch(spark, path))(dir =>
+      read(spark, path).coalesce(files).write.mode("overwrite").parquet(dir))
   }
+
+  /** [[init]]/[[read]]/[[fold]]/[[reset]] specialized to a (store, gen)
+    * PAIR table held entirely on the driver — the [[Catalog]] manifest's
+    * shape. Zero Spark jobs: the data dir goes through the [[Pairs]]
+    * codec, under the same commit path as the DataFrame forms.
+    */
+  private[graft] def initPairs(spark: SparkSession, path: String,
+                               rows: Seq[(String, Long)]): Unit =
+    commit(spark, path, s"SwapStore.init($path)", -1L, create = true)(
+      writeDir(spark, _, Pairs, rows))
+
+  private[graft] def readPairs(spark: SparkSession, path: String): Seq[(String, Long)] = {
+    ensureStore(spark, path)
+    readDir(spark, s"${store(path)}/data", Pairs)
+  }
+
+  private[graft] def foldPairs(spark: SparkSession, path: String, batchId: Long)
+      (transform: Seq[(String, Long)] => Seq[(String, Long)]): Unit =
+    commitFolded(spark, path, batchId)(dir =>
+      writeDir(spark, dir, Pairs, transform(readPairs(spark, path))))
+
+  private[graft] def resetPairs(spark: SparkSession, path: String,
+                                rows: Seq[(String, Long)], batchId: Long): Unit =
+    commit(spark, path, s"SwapStore.reset($path)", batchId)(
+      writeDir(spark, _, Pairs, rows))
 }

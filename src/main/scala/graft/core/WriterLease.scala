@@ -75,10 +75,6 @@ object WriterLease {
     s"$host#${ProcessHandle.current().pid()}#${java.util.UUID.randomUUID()}"
   }
 
-  private def fsOf(spark: SparkSession, base: String) =
-    new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def readOwner(fs: org.apache.hadoop.fs.FileSystem,
                         f: org.apache.hadoop.fs.Path): Option[String] =
     try {
@@ -149,7 +145,7 @@ object WriterLease {
                             staleMs: Long, nowMs: () => Long)
                            (body: Handle => T): T = {
     require(staleMs > 0, "WriterLease: staleMs must be positive")
-    val fs = fsOf(spark, base)
+    val fs = SwapStore.fsOf(spark, base)
     val f = leaseFile(base)
     val owner = ownerToken()
 

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Lexical retrieval: BM25 top-k search over a document corpus, as a
   * one-shot operator ([[topK]]) and as a persisted standing index
@@ -166,7 +167,7 @@ object Bm25Index {
   }
 
   /** Write df+meta to `dir` (no swap — build writes the final dir,
-    * mutations write a tmp and [[IvfIndex.swapDirs]] it in).
+    * mutations write a tmp and [[SwapStore.swapDirs]] it in).
     */
   private def writeModel(dir: String, df: DataFrame, m: Meta): Unit = {
     df.write.mode("overwrite").parquet(s"$dir/df")
@@ -194,23 +195,6 @@ object Bm25Index {
     (m.getLong(0), m.getLong(1))
   }
 
-  /** Write a committed postings/registry fold: stage under an
-    * underscore-prefixed dir (invisible to readers), then rename into
-    * place — idempotent under replay (a re-run overwrites the staging
-    * dir and re-renames the same bytes).
-    */
-  private def commitFold(df: DataFrame, dir: String, fold: Long): Unit = {
-    val spark = df.sparkSession
-    val staging = s"$dir/_staging"
-    df.write.mode("overwrite").parquet(staging)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(staging)
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/fold=$fold")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true) // replayed crashed commit: same bytes, re-rename
-    require(fs.rename(src, dst), s"bm25: fold commit failed: $staging -> $dst")
-  }
-
   /** Build the persisted index: one tokenize pass over the corpus into
     * fold 0. Postings repartition by RANGE on term so each parquet file
     * covers a contiguous term slice — [[search]]'s pushed `term IN`
@@ -220,10 +204,10 @@ object Bm25Index {
   def build(docs: DataFrame, id: Column, text: Column, path: String): Unit = {
     val spark = docs.sparkSession
     val post = requireIntegralId(postings(docs, id, text)).localCheckpoint()
-    commitFold(post.repartitionByRange(col("term")).sortWithinPartitions(col("term")),
+    SwapStore.commitFold(post.repartitionByRange(col("term")).sortWithinPartitions(col("term")),
       s"$path/_post", 0L)
     val lens = requireIntegralId(docLengths(docs, id, text)).localCheckpoint()
-    commitFold(lens, s"$path/_len", 0L)
+    SwapStore.commitFold(lens, s"$path/_len", 0L)
     val (n, tot) = lenStats(lens)
     writeModel(s"$path/_model",
       post.groupBy(col("term")).agg(count(lit(1)).as("df")),
@@ -314,7 +298,7 @@ object Bm25Index {
     * standing-query shape (alerting, routing, dedup-by-retrieval). The
     * index re-reads each batch, so an [[append]]/[[remove]]/[[compact]]
     * swap is picked up across batches; the swap's missing-path window
-    * retries like every index consumer ([[IvfIndex.retryingStaleReads]]),
+    * retries like every index consumer ([[SwapStore.retryingStaleReads]]),
     * so `onBatch` must be idempotent under replay.
     */
   def searchStream(spark: SparkSession, queryStream: DataFrame, qid: Column,
@@ -322,7 +306,7 @@ object Bm25Index {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(search(spark, batch, qid, qtext, path, k))
         }
       }
@@ -349,10 +333,10 @@ object Bm25Index {
     val m = meta(spark, path)
     if (batchId >= 0 && batchId <= m.lastBatch) return // re-delivery
     val fold = m.folds + 1
-    commitFold(requireIntegralId(postings(docs, id, text))
+    SwapStore.commitFold(requireIntegralId(postings(docs, id, text))
       .repartitionByRange(col("term")).sortWithinPartitions(col("term")),
       s"$path/_post", fold)
-    commitFold(requireIntegralId(docLengths(docs, id, text)), s"$path/_len", fold)
+    SwapStore.commitFold(requireIntegralId(docLengths(docs, id, text)), s"$path/_len", fold)
     val fPost = spark.read.schema(postSchema).parquet(s"$path/_post/fold=$fold")
     val fLen = spark.read.schema(lenSchema).parquet(s"$path/_len/fold=$fold")
     val (bn, btot) = lenStats(fLen)
@@ -362,7 +346,7 @@ object Bm25Index {
     val tmp = s"$path/_model.next"
     writeModel(tmp, grown, Meta(m.nDocs + bn, m.totTokens + btot, fold,
       math.max(batchId, m.lastBatch)))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Continuous ingestion: [[append]] per micro-batch of documents with
@@ -375,7 +359,7 @@ object Bm25Index {
                    text: Column, path: String): org.apache.spark.sql.streaming.StreamingQuery =
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           append(batch, id, text, path, batchId = bid)
         }
       }
@@ -394,19 +378,19 @@ object Bm25Index {
     val fold = m.folds + 1
     val kept = readPost(spark, path).join(broadcast(gone), Seq("doc_id"), "left_anti")
     val tmpPost = s"$path/_post.next"
-    commitFold(kept.repartitionByRange(col("term")).sortWithinPartitions(col("term")),
+    SwapStore.commitFold(kept.repartitionByRange(col("term")).sortWithinPartitions(col("term")),
       tmpPost, fold)
-    IvfIndex.swapDirs(spark, s"$path/_post", tmpPost)
+    SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val lens = readLen(spark, path).join(broadcast(gone), Seq("doc_id"), "left_anti")
     val tmpLen = s"$path/_len.next"
-    commitFold(lens, tmpLen, fold)
-    IvfIndex.swapDirs(spark, s"$path/_len", tmpLen)
+    SwapStore.commitFold(lens, tmpLen, fold)
+    SwapStore.swapDirs(spark, s"$path/_len", tmpLen)
     val (n, tot) = lenStats(readLen(spark, path))
     val tmp = s"$path/_model.next"
     writeModel(tmp,
       readPost(spark, path).groupBy(col("term")).agg(count(lit(1)).as("df")),
       Meta(n, tot, fold, m.lastBatch))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Rewrite postings into one fresh fold of `partitions` term-range
@@ -418,12 +402,12 @@ object Bm25Index {
     val m = meta(spark, path)
     val fold = m.folds + 1
     val tmpPost = s"$path/_post.next"
-    commitFold(readPost(spark, path)
+    SwapStore.commitFold(readPost(spark, path)
       .repartitionByRange(partitions, col("term")).sortWithinPartitions(col("term")),
       tmpPost, fold)
-    IvfIndex.swapDirs(spark, s"$path/_post", tmpPost)
+    SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val tmp = s"$path/_model.next"
     writeModel(tmp, spark.read.parquet(s"$path/_model/df"), m.copy(folds = fold))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 }

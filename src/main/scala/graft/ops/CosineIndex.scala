@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted hyperplane-LSH index for embedding near-duplicates — the
   * standing-index counterpart of [[Similarity.cosineNearDupPairs]], as
@@ -61,7 +62,7 @@ object CosineIndex {
     spark.read.parquet(s"$path/bands")
       .join(org.apache.spark.sql.functions.broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/bands")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   private def bandStructs(v: Column, bands: Int, rowsPerBand: Int): Column =
@@ -119,8 +120,8 @@ object CosineIndex {
     * admission-control shape for an embedding-deduped corpus: screen a
     * batch, [[append]] the admitted vectors, repeat. The index is
     * re-read each batch, so appends/removes land across batches; an
-    * [[IvfIndex.swapDirs]]-style swap's missing-path window retries via
-    * [[IvfIndex.retryingStaleReads]], so `onBatch` must be idempotent
+    * [[SwapStore.swapDirs]]-style swap's missing-path window retries via
+    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent
     * under replay (it must be anyway — Spark replays micro-batches on
     * failure). Scale shape per batch: batch-sized banding, (band,
     * bucket) equi-join against the stored bands, only candidate dup
@@ -132,7 +133,7 @@ object CosineIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(check(spark, batch, id, vec, path, threshold, bands, rowsPerBand))
         }
       }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted MinHash-LSH signature index + incremental near-dup checking —
   * the continuous-ingestion flow for a growing training corpus: build the
@@ -84,7 +85,7 @@ object DedupIndex {
       .write.mode("overwrite").parquet(s"$tmp/shingles")
     spark.read.parquet(s"$path/bands").coalesce(filesPerTable)
       .write.mode("overwrite").parquet(s"$tmp/bands")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** Remove documents from the index (takedown / right-to-be-forgotten):
@@ -93,7 +94,7 @@ object DedupIndex {
     * The removal set is broadcast (takedown batches are small); after
     * the swap, removed ids appear in no candidate pair and no check
     * result. Same quiesce/retry contract as every swap
-    * ([[IvfIndex.swapDirs]]).
+    * ([[SwapStore.swapDirs]]).
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame, idCol: Column): Unit = {
     val tmp = s"$path.remove"
@@ -104,7 +105,7 @@ object DedupIndex {
     spark.read.parquet(s"$path/bands")
       .join(broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/bands")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   private def bandsOf(sh: DataFrame, numHashes: Int,
@@ -294,7 +295,7 @@ object DedupIndex {
     * index is re-read per batch, so appends/compactions/rebuilds are
     * picked up across batches; a batch straddling a [[compact]]/
     * [[IvfIndex.rebuild]]-style swap can hit the swap's momentary
-    * missing-path window and retries via [[IvfIndex.retryingStaleReads]]
+    * missing-path window and retries via [[SwapStore.retryingStaleReads]]
     * (`onBatch` must be idempotent — it already must be, Spark replays
     * micro-batches on failure).
     */
@@ -305,7 +306,7 @@ object DedupIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(check(spark, batch, id, text, path, threshold,
             shingleN, numHashes, bands, rowsPerBand))
         }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted DSIR importance model — the standing-state form of
   * [[Sampling.importanceWeights]] (the selection member of the
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   * counts are additive, so a model after any update/remove sequence is
   * bit-identical to a fresh build over the surviving corpus
   * (spec-asserted). Rewrites go through the crash-safe
-  * [[IvfIndex.swapDirs]] double rename like every index in the family.
+  * [[SwapStore.swapDirs]] double rename like every index in the family.
   */
 object DsirModel {
 
@@ -77,14 +78,14 @@ object DsirModel {
   /** Continuous admission scoring: [[score]] per micro-batch. The model
     * is re-read each batch, so an [[update]]/[[remove]] swap is picked
     * up across batches; the swap's missing-path window retries like
-    * every index consumer ([[IvfIndex.retryingStaleReads]]).
+    * every index consumer ([[SwapStore.retryingStaleReads]]).
     */
   def scoreStream(spark: SparkSession, stream: DataFrame, id: Column, text: Column,
                   path: String)
                  (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(score(spark, batch, id, text, path))
         }
       }
@@ -131,6 +132,6 @@ object DsirModel {
     spark.range(1)
       .select(lit(buckets).as("buckets"), lit(nt).as("nt"), lit(nr).as("nr"))
       .write.mode("overwrite").parquet(s"$tmp/_meta")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 }

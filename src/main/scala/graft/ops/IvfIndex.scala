@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted IVF index — the standing-index flow for repeated ANN query
   * batches over a large corpus (north-star extension; `Similarity.ivfTopK`
@@ -107,7 +108,7 @@ object IvfIndex {
       .join(broadcast(ids.select(idCol.as("cand_id"))), Seq("cand_id"), "left_anti")
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_centroids")
-    swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** Re-sample centroids from the CURRENT corpus and rewrite the index.
@@ -127,7 +128,7 @@ object IvfIndex {
     val vecs = spark.read.parquet(path).select(col("cand_id"), col("cv"))
     val tmp = s"$path.rebuild"
     build(vecs, col("cand_id"), col("cv"), cells, tmp)
-    swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** Compact the index without re-sampling centroids: every [[append]]
@@ -147,40 +148,8 @@ object IvfIndex {
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_centroids")
-    swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
-
-  /** Crash-safe directory swap: old → `<path>.old`, new → `<path>`, drop
-    * the old copy — at every step either the old or the new index is
-    * addressable (at `<path>` or `<path>.old`), never neither. Shared
-    * with [[DedupIndex.compact]] — the swap's crash-safety invariant
-    * lives in exactly one place.
-    *
-    * CONCURRENT READERS: the swap is crash-safe but not atomic for a
-    * reader in flight — between the two renames `path` momentarily does
-    * not exist, and a job that listed files before the swap can chase
-    * deleted `<path>.old` files. A read that straddles the swap fails
-    * loudly (missing path / missing file), never silently mixes the two
-    * versions — re-reading after the swap sees exactly the new index.
-    * The streaming screeners ([[DedupIndex.screenStream]],
-    * [[SpanIndex.screenStream]]) retry their batch through
-    * [[retryingStaleReads]]; ad-hoc batch readers should either quiesce
-    * around compaction or wrap reads the same way.
-    */
-  private[graft] def swapDirs(spark: SparkSession, path: String, tmp: String): Unit =
-    graft.core.SwapStore.swapDirs(spark, path, tmp)
-
-  /** Run `body`, retrying (bounded, short linear backoff) when it dies on
-    * a missing path/file — the [[swapDirs]] visibility window: between the
-    * two renames the index path does not exist, and a reader that listed
-    * files pre-swap chases deleted `<path>.old` files. Only the
-    * missing-file family retries; anything else rethrows immediately.
-    * Callers' `body` must be idempotent (the streaming screeners' onBatch
-    * already is — Spark itself replays micro-batches on failure).
-    */
-  private[ops] def retryingStaleReads[T](attempts: Int = 5, backoffMs: Long = 500)
-                                        (body: => T): T =
-    graft.core.SwapStore.retryingStaleReads(attempts, backoffMs)(body)
 
   /** Top-k over the index for a (small, broadcastable) query set.
     * Returns (query_id, cand_id, rk) like the other ANN operators.
@@ -207,7 +176,7 @@ object IvfIndex {
     * lookups). Each batch re-reads the index path, so an [[append]] /
     * [[remove]] / [[rebuild]] / [[compact]] swap is picked up across
     * batches; the swap's missing-path window retries via
-    * [[retryingStaleReads]], so `onBatch` must be idempotent under
+    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent under
     * replay. Scale shape per batch: probes broadcast (batch-sized),
     * DPP prunes the scan to probed cells' files — the corpus-sized
     * index never exchanges.
@@ -217,7 +186,7 @@ object IvfIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe))
         }
       }

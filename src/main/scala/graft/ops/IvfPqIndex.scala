@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted residual IVF-PQ index — the standing-index form of
   * [[Similarity.ivfPqResidualTopK]], completing the ANN index family:
@@ -98,7 +99,7 @@ object IvfPqIndex {
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
     cents.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_centroids")
     book.coalesce(1).write.mode("overwrite").parquet(s"$tmp/_codebook")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** Top-k over the compressed index for a (small, broadcastable) query
@@ -143,7 +144,7 @@ object IvfPqIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe))
         }
       }

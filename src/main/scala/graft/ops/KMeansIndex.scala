@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted k-means model with per-cell integer sufficient statistics —
   * the standing-state form of [[KMeans]] (the clustering member of the
@@ -35,7 +36,7 @@ import org.apache.spark.sql.functions._
   *     `_meta/`             — (q, k, dim, last_batch, folds, gen)
   *   `_assign_g<gen>/`      — sidecar; one `fold=<f>/` dir per fold
   *
-  * Crash safety: the tiny `_model` swap ([[IvfIndex.swapDirs]]) is the
+  * Crash safety: the tiny `_model` swap ([[SwapStore.swapDirs]]) is the
   * single commit point. An update writes its sidecar fold dir FIRST
   * (overwrite — a replay rewrites the same dir, never duplicates), then
   * swaps `_model` whose meta records `folds`; readers ignore fold dirs
@@ -111,7 +112,7 @@ object KMeansIndex {
     * per micro-batch (routing, online bucketing, streaming SemDeDup's
     * first stage). Centroids are re-read each batch, so an [[update]]/
     * [[remove]] model swap is picked up across batches; the swap's
-    * missing-path window retries via [[IvfIndex.retryingStaleReads]], so
+    * missing-path window retries via [[SwapStore.retryingStaleReads]], so
     * `onBatch` must be idempotent under replay. Per batch: centroids
     * broadcast, one narrow argmin pass — nothing corpus-sized moves.
     */
@@ -120,7 +121,7 @@ object KMeansIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(assign(spark, batch, id, vec, path))
         }
       }
@@ -220,7 +221,7 @@ object KMeansIndex {
     writeModel(tmp, newCents, merged,
       m.copy(lastBatch = if (batchId >= 0) batchId else m.lastBatch,
         folds = fold))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Centroids = s div n for cells with data; cells with n = 0 keep the
@@ -278,7 +279,7 @@ object KMeansIndex {
     val cents = centroids(spark, path).localCheckpoint()
     val tmp = s"$path/_model.remove"
     writeModel(tmp, rederive(cents, newStats), newStats, m.copy(gen = newGen))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
     // the old generation is unreferenced after the swap; best-effort drop
     val conf = spark.sparkContext.hadoopConfiguration
     val oldDir = new org.apache.hadoop.fs.Path(assignDir(path, m.gen))
@@ -298,7 +299,7 @@ object KMeansIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           val pinned = batch.localCheckpoint()
           onBatch(assign(spark, pinned, id, vec, path))
           update(spark, pinned, id, vec, path, batchId = bid)

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Persisted substring-gram index + incremental span screening — the
   * continuous-ingestion form of [[SpanDedup]], completing the standing-
@@ -55,7 +56,7 @@ object SpanIndex {
     spark.read.parquet(s"$path/grams")
       .join(broadcast(ids.select(idCol.as("id"))), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/grams")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** Compact the accumulated small append files (same motivation and
@@ -67,7 +68,7 @@ object SpanIndex {
     val tmp = s"$path.compact"
     spark.read.parquet(s"$path/grams").coalesce(filesPerTable)
       .write.mode("overwrite").parquet(s"$tmp/grams")
-    IvfIndex.swapDirs(spark, path, tmp)
+    SwapStore.swapDirs(spark, path, tmp)
   }
 
   /** [[build]] into a BUCKETED managed table (bucketed + sorted by
@@ -214,8 +215,8 @@ object SpanIndex {
     * the static gram table is re-read per batch, so appends and
     * compactions are picked up across batches. A batch that straddles a
     * [[compact]] swap can hit the swap's momentary missing-path window
-    * ([[IvfIndex.swapDirs]]); the batch retries via
-    * [[IvfIndex.retryingStaleReads]], so `onBatch` must be idempotent
+    * ([[SwapStore.swapDirs]]); the batch retries via
+    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent
     * (it already must be — Spark replays micro-batches on failure).
     */
   def screenStream(spark: SparkSession, stream: DataFrame, id: Column, text: Column,
@@ -223,7 +224,7 @@ object SpanIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(check(spark, batch, id, text, path, n))
         }
       }

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.SwapStore
 
 /** Substring search ("grep") over a document corpus through a standing
   * character-trigram index — the accelerated form of `text LIKE
@@ -86,22 +87,11 @@ object TrigramIndex {
       .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  private def commitFold(df: DataFrame, dir: String, fold: Long): Unit = {
-    val spark = df.sparkSession
-    val staging = s"$dir/_staging"
-    // small row groups: the search-side pushed `gram IN` prunes at
-    // row-group min/max granularity, and posting reads should cost
-    // the selected grams' lists, not an eighth of the corpus
-    df.write.mode("overwrite")
-      .option("parquet.block.size", (4L << 20).toString)
-      .parquet(staging)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(staging)
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/fold=$fold")
-    val fs = dst.getFileSystem(conf)
-    fs.delete(dst, true) // replayed crashed commit: same bytes, re-rename
-    require(fs.rename(src, dst), s"trigram: fold commit failed: $staging -> $dst")
-  }
+  // small row groups: the search-side pushed `gram IN` prunes at
+  // row-group min/max granularity, and posting reads should cost the
+  // selected grams' lists, not an eighth of the corpus
+  private def commitFold(df: DataFrame, dir: String, fold: Long): Unit =
+    SwapStore.commitFold(df, dir, fold, Map("parquet.block.size" -> (4L << 20).toString))
 
   /** Build the persisted index at `path`: one tokenize pass into fold 0,
     * gram-range-partitioned and sorted so [[search]]'s pushed filter
@@ -454,7 +444,7 @@ object TrigramIndex {
       .groupBy(col("gram")).agg(sum(col("df")).as("df"))
     val tmp = s"$path/_model.next"
     writeModel(spark, tmp, grown, Meta(fold, math.max(batchId, m.lastBatch)))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Continuous ingestion: [[append]] per micro-batch — the live-corpus
@@ -464,7 +454,7 @@ object TrigramIndex {
                    text: Column, path: String): org.apache.spark.sql.streaming.StreamingQuery =
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           append(batch, id, text, path, batchId = bid)
         }
       }
@@ -484,12 +474,12 @@ object TrigramIndex {
     val tmpPost = s"$path/_post.next"
     commitFold(kept.repartitionByRange(col("gram")).sortWithinPartitions(col("gram")),
       tmpPost, fold)
-    IvfIndex.swapDirs(spark, s"$path/_post", tmpPost)
+    SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val tmp = s"$path/_model.next"
     writeModel(spark, tmp,
       readPost(spark, path).groupBy(col("gram")).agg(count(lit(1)).as("df")),
       Meta(fold, m.lastBatch))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Rewrite postings into one fresh fold of `partitions` gram-range
@@ -503,11 +493,11 @@ object TrigramIndex {
     commitFold(readPost(spark, path)
       .repartitionByRange(partitions, col("gram")).sortWithinPartitions(col("gram")),
       tmpPost, fold)
-    IvfIndex.swapDirs(spark, s"$path/_post", tmpPost)
+    SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val tmp = s"$path/_model.next"
     writeModel(spark, tmp, spark.read.parquet(s"$path/_model/df"),
       m.copy(folds = fold))
-    IvfIndex.swapDirs(spark, s"$path/_model", tmp)
+    SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 
   /** Continuous retrieval: [[search]] per micro-batch of patterns — the
@@ -521,7 +511,7 @@ object TrigramIndex {
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(search(spark, batch, qid, qtext, corpus, id, text, path))
         }
       }
@@ -537,7 +527,7 @@ object TrigramIndex {
                        (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IvfIndex.retryingStaleReads() {
+        SwapStore.retryingStaleReads() {
           onBatch(searchRegex(spark, batch, qid, qtext, corpus, id, text, path))
         }
       }

@@ -55,6 +55,27 @@ class ContractSpec extends AnyFunSuite {
     assert(others.isEmpty, s"prefix-sum copies outside PrefixSum.scala: $others")
   }
 
+  test("core/SwapStore is the only parquet-mr codec and directory swap in src/main") {
+    // the crash-safe commit (stage, ledger, swap) and its zero-job
+    // manifest I/O are written once; a second copy would drift from it
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    def src(f: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val swapStore = root.resolve("graft/core/SwapStore.scala")
+    val fenced = Seq("ExampleParquetWriter", "ParquetReader\\s*\\.\\s*builder",
+      "def\\s+swapDirs\\b", "def\\s+retryingStaleReads\\b").map(_.r)
+    def hits(f: java.nio.file.Path) = { val s = src(f); fenced.filter(_.findFirstIn(s).isDefined) }
+    val missed = fenced.diff(hits(swapStore)).map(_.regex)
+    assert(missed.isEmpty, s"the fence no longer matches SwapStore's $missed")
+    val copies = files.filter(_ != swapStore).flatMap(f => hits(f).map(r => s"${root.relativize(f)}: $r"))
+    assert(copies.isEmpty, s"SwapStore's codec or swap outside core/SwapStore.scala: $copies")
+    val fsOfs = files.filter(_.startsWith(root.resolve("graft/core")))
+      .map(f => "def\\s+fsOf\\b".r.findAllIn(src(f)).size).sum
+    assert(fsOfs == 1, s"def fsOf is defined $fsOfs times under core/")
+  }
+
   test("README's query counts match the code") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), "UTF-8")

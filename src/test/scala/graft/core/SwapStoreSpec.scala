@@ -97,6 +97,58 @@ class SwapStoreSpec extends AnyFunSuite {
     assert(missing == 3, "a missing file (even as a cause) retries to exhaustion")
   }
 
+  test("the codec reads what Spark wrote: a two-part manifest and a ledger") {
+    val dir = TempDirs.create("swapstore_codec_read")
+    spark.range(4).select(concat(lit("s"), col("id").cast("string")).as("store"),
+        col("id").as("gen"))
+      .coalesce(2).write.parquet(s"$dir/manifest")
+    val parts = new java.io.File(s"$dir/manifest").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    assert(parts == 2, s"expected a two-part legacy manifest, found $parts part files")
+    assert(SwapStore.readDir(spark, s"$dir/manifest", SwapStore.Pairs).toSet ==
+      (0L until 4L).map(i => (s"s$i", i)).toSet)
+    spark.range(1).select(lit(7L).as("last_batch"))
+      .coalesce(1).write.parquet(s"$dir/ledger")
+    assert(SwapStore.readDir(spark, s"$dir/ledger", SwapStore.Ledger) == Seq(7L))
+  }
+
+  test("Spark reads what the codec wrote: a ledger and a pairs dir") {
+    val dir = TempDirs.create("swapstore_codec_write")
+    val rows = Seq(("a", -1L), ("\u00e9t\u00e9", 3L))
+    SwapStore.writeDir(spark, s"$dir/pairs", SwapStore.Pairs, rows)
+    SwapStore.writeDir(spark, s"$dir/ledger", SwapStore.Ledger, Seq(5L))
+    Seq("pairs", "ledger").foreach(d =>
+      assert(new java.io.File(s"$dir/$d/_SUCCESS").exists(), s"$d has no _SUCCESS marker"))
+    assert(spark.read.parquet(s"$dir/pairs").as[(String, Long)].collect().toSet == rows.toSet)
+    assert(spark.read.parquet(s"$dir/ledger").as[Long].collect().toSeq == Seq(5L))
+  }
+
+  test("manifest and ledger I/O start no Spark job") {
+    val base = TempDirs.create("swapstore_zero_jobs")
+    Catalog.init(base, Map("a" -> Seq((1L, 1L)).toDF("k", "v")))
+    val sc = spark.sparkContext
+    val group = s"swapstore-zero-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, "manifest and ledger I/O")
+    try {
+      assert(Catalog.gens(spark, base) == Map("a" -> -1L))
+      Catalog.savepoint(spark, base, "sp")
+      // Catalog.readAt's manifest read
+      assert(SwapStore.readDir(spark, s"$base/_savepoints/sp/manifest", SwapStore.Pairs) ==
+        Seq(("a", -1L)))
+      // Catalog.ingest's manifest fold (its store writes are Spark jobs by design)
+      SwapStore.foldPairs(spark, s"$base/_manifest", 0L)(_.map { case (n, _) => (n, 0L) })
+      assert(Catalog.lastBatch(spark, base) == 0L)
+      // control: one RDD job in the same group. Job starts reach the
+      // status store in order, so once it shows, any earlier job has too
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      assert(jobs.length == 1, s"expected only the control job, got jobs ${jobs.sorted.mkString(", ")}")
+    } finally sc.clearJobGroup()
+  }
+
   test("compact bounds the data file count and changes neither content nor ledger") {
     val path = TempDirs.create("swapstore_compact")
     SwapStore.init(spark.range(100).toDF("k").repartition(8), path)

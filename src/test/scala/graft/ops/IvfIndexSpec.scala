@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.SwapStore
 import graft.sources.Tables
 
 class IvfIndexSpec extends AnyFunSuite {
@@ -226,7 +227,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("retryingStaleReads: retries the missing-file family, rethrows the rest") {
     // missing-file errors retry until the (simulated) swap completes
     var calls = 0
-    val got = IvfIndex.retryingStaleReads(attempts = 5, backoffMs = 1) {
+    val got = SwapStore.retryingStaleReads(attempts = 5, backoffMs = 1) {
       calls += 1
       if (calls < 3) throw new RuntimeException("wrapped",
         new java.io.FileNotFoundException("part-000.parquet"))
@@ -235,14 +236,14 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(got == 42 && calls == 3)
     // attempts exhausted → the missing-file error surfaces
     intercept[RuntimeException] {
-      IvfIndex.retryingStaleReads(attempts = 2, backoffMs = 1) {
+      SwapStore.retryingStaleReads(attempts = 2, backoffMs = 1) {
         throw new RuntimeException("x", new java.io.FileNotFoundException("y"))
       }
     }
     // a non-missing-file failure must NOT retry
     var other = 0
     intercept[IllegalStateException] {
-      IvfIndex.retryingStaleReads(attempts = 5, backoffMs = 1) {
+      SwapStore.retryingStaleReads(attempts = 5, backoffMs = 1) {
         other += 1; throw new IllegalStateException("boom")
       }
     }
