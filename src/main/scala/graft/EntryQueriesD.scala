@@ -621,7 +621,8 @@ private[graft] object EntryQueriesD {
             col("doc_id"), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage,
             docs.select(col("doc_id"), col("text")).schema)
-          val q = Bm25Index.appendStream(s, stream, col("doc_id"), col("text"), p)
+          val q = Bm25Index.appendStream(s, stream, col("doc_id"), col("text"), p,
+            ephemeralOk = true)
           try q.processAllAvailable() finally q.stop()
         }
         p
@@ -1003,7 +1004,8 @@ private[graft] object EntryQueriesD {
             col("doc_id"), 4)
           val stream = graft.streaming.Replay.orderedStream(s, stage,
             docs.select(col("doc_id"), col("text")).schema)
-          val q = TrigramIndex.appendStream(s, stream, col("doc_id"), col("text"), p)
+          val q = TrigramIndex.appendStream(s, stream, col("doc_id"), col("text"), p,
+            ephemeralOk = true)
           try q.processAllAvailable() finally q.stop()
         }
         p
@@ -1173,7 +1175,7 @@ private[graft] object EntryQueriesD {
         val stage = screenReplayDir(s"$d#q150", inc, col("vec_id"), 2)
         val stream = graft.streaming.Replay.orderedStream(s, stage, inc.schema)
         val q = KMeansIndex.updateStream(s, stream, col("vec_id"),
-          col("embedding"), idx)(_ => ())
+          col("embedding"), idx, ephemeralOk = true)(_ => ())
         try q.processAllAvailable() finally q.stop()
       }
       val cents = KMeansIndex.centroids(s, idx)

@@ -97,8 +97,9 @@ final class JobServer(spark: SparkSession) {
   }
 
   /** [[savepoint]] for a [[graft.core.SwapStore]]-backed INGEST job —
-    * the foreachBatch lifecycle of `Sketches.ingest*Stream`,
-    * `Diff.maintainAggStream` and `Catalog.ingestStream`, which the
+    * the [[graft.core.SwapStore.writerStream]] lifecycle of
+    * `Sketches.ingest*Stream`, `Diff.maintainAggStream` and
+    * `Catalog.ingestStream` (every ledgered stream), which the
     * plain checkpoint copy cannot snapshot alone (their state lives in
     * the store, not the checkpoint). Copies the STOPPED query's
     * checkpoint AND the store's current swap unit under one name; both

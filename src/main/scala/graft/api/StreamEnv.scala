@@ -97,34 +97,23 @@ final case class GraftStream(df: DataFrame) {
     df.writeStream.outputMode(outputMode).format("console").start()
 
   /** CollectionSinkOperator (sinks.py:139-168) — streaming: memory sink.
-    * `asyncProgress` moves the offset/commit logs off the per-batch
-    * critical path (measured ~160 → ~90 ms/batch, `MicroBatchProbe`),
-    * relaxing to at-least-once between checkpoints — the reference's own
-    * flush-on-checkpoint guarantee.
+    * Progress is tracked synchronously, so every batch's offsets commit
+    * before the next batch starts.
     */
-  def toMemorySink(name: String, outputMode: OutputMode = OutputMode.Append(),
-                   asyncProgress: Boolean = false): StreamingQuery = {
-    var w = df.writeStream.outputMode(outputMode).format("memory").queryName(name)
-    if (asyncProgress) w = w.option("asyncProgressTrackingEnabled", "true")
-    w.start()
-  }
+  def toMemorySink(name: String, outputMode: OutputMode = OutputMode.Append()): StreamingQuery =
+    df.writeStream.outputMode(outputMode).format("memory").queryName(name).start()
 
   /** KafkaSinkOperator (sinks.py:19-104) — at-least-once into Kafka with
     * exactly-once state, vs the reference's flush-on-checkpoint
-    * (honest divergence, SURVEY §7.4.5). `asyncProgress` checkpoints
-    * offsets asynchronously (lower per-batch latency, at-least-once
-    * between checkpoints — the reference's guarantee exactly).
+    * (honest divergence, SURVEY §7.4.5).
     */
   def toKafka(bootstrapServers: String, topic: String, checkpoint: String,
-              outputMode: OutputMode = OutputMode.Append(),
-              asyncProgress: Boolean = false): StreamingQuery = {
-    var w = df.writeStream.outputMode(outputMode).format("kafka")
+              outputMode: OutputMode = OutputMode.Append()): StreamingQuery =
+    df.writeStream.outputMode(outputMode).format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .option("checkpointLocation", checkpoint)
-    if (asyncProgress) w = w.option("asyncProgressTrackingEnabled", "true")
-    w.start()
-  }
+      .start()
 
   /** Durable file sink with exactly-once semantics via checkpoint + WAL. */
   def toParquet(path: String, checkpoint: String,

@@ -672,15 +672,9 @@ object Catalog {
                           folds: DataFrame => Seq[(String, (DataFrame, DataFrame) => DataFrame)],
                           checkpoint: Option[String] = None,
                           ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.ops.Sketches.requireDurableCheckpoint(checkpoint, base, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SwapStore.retryingStaleReads() {
-          if (bid > lastBatch(spark, base)) // skip fold planning on re-delivery
-            ingest(spark, base, bid, batch, folds(batch))
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    SwapStore.writerStream(stream, base, checkpoint, ephemeralOk) { (batch, bid) =>
+      if (bid > lastBatch(spark, base)) // skip fold planning on re-delivery
+        ingest(spark, base, bid, batch, folds(batch))
+    }
 }

@@ -3,6 +3,7 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A tiny crash-safe persisted-table lifecycle shared by the continuous
   * folds ([[graft.ops.Diff.maintainAggStream]]'s materialized view,
@@ -23,13 +24,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * re-delivery check, then the same check again under the lease — is
   * likewise written once, for the DataFrame and the pair form.
   *
+  * ONE STREAM PATH: every micro-batch loop over a store in `ops` and
+  * `core` starts through [[writerStream]] (bodies that fold into a
+  * ledgered store: the durable-checkpoint guard runs first, and the
+  * checkpoint keeps batch ids ascending across restarts) or
+  * [[readerStream]] (screens and searches that only read stores). Both
+  * run each trigger inside [[retryingStaleReads]].
+  *
   * Readers racing the swap's visibility window retry via
-  * [[retryingStaleReads]] at the call sites that fold, and a crash
-  * BETWEEN the two renames (no `_store` at all) is rolled forward or
-  * back by [[ensureStore]] on the next read — the staging dir always
-  * holds a complete replacement (its writes finish before any rename
-  * starts), and the first rename parks the previous content at
-  * `_store.old`, so one of the two is always restorable.
+  * [[retryingStaleReads]], and a crash BETWEEN the two renames (no
+  * `_store` at all) is rolled forward or back by [[ensureStore]] on
+  * the next read — the staging dir always holds a complete
+  * replacement (its writes finish before any rename starts), and the
+  * first rename parks the previous content at `_store.old`, so one of
+  * the two is always restorable.
   *
   * SINGLE-WRITER CONTRACT — ENFORCED: commits serialize through the
   * shared `_store.next` staging dir, which is exactly foreachBatch's
@@ -368,4 +376,55 @@ object SwapStore {
                                 rows: Seq[(String, Long)], batchId: Long): Unit =
     commit(spark, path, s"SwapStore.reset($path)", batchId)(
       writeDir(spark, _, Pairs, rows))
+
+  /** Start the micro-batch loop of a stream whose `body` folds into the
+    * ledgered store at `path`, after the durable-checkpoint guard: the
+    * ledger de-duplicates batch ids, so exactly-once needs the ids to
+    * keep ascending across restarts, which only `checkpoint` provides.
+    */
+  def writerStream(stream: DataFrame, path: String, checkpoint: Option[String],
+                   ephemeralOk: Boolean)(body: (DataFrame, Long) => Unit): StreamingQuery = {
+    requireDurableCheckpoint(checkpoint, path, ephemeralOk)
+    microBatches(stream, checkpoint)(body)
+  }
+
+  /** Start the micro-batch loop of a stream whose `body` only reads
+    * stores (screens, searches): a swap landing between triggers is
+    * seen by the next one. No checkpoint, since nothing is folded.
+    */
+  def readerStream(stream: DataFrame)(body: DataFrame => Unit): StreamingQuery =
+    microBatches(stream, None)((batch, _) => body(batch))
+
+  /** The one loop: each trigger runs `body` under [[retryingStaleReads]]
+    * (bodies must be idempotent; Spark replays micro-batches anyway).
+    */
+  private def microBatches(stream: DataFrame, checkpoint: Option[String])
+                          (body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val w = stream.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+      retryingStaleReads()(body(batch, bid))
+    }
+    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
+  /** The silent-data-loss mode made an ERROR: a restarted checkpoint-
+    * less query numbers batches from 0 again and the store ledger
+    * no-ops genuinely new ones. `checkpoint = None` therefore requires
+    * the caller to say `ephemeralOk = true` out loud (single-query
+    * stores: build, read, discard), and even then a warning is logged
+    * so the opt-in shows up in the query's log trail (a warning alone
+    * proved too easy to miss in Spark's log output).
+    */
+  private def requireDurableCheckpoint(checkpoint: Option[String], path: String,
+                                       ephemeralOk: Boolean): Unit =
+    if (checkpoint.isEmpty) {
+      require(ephemeralOk,
+        s"continuous ingest into $path started WITHOUT a durable checkpoint: " +
+          "if this query ever restarts, batch ids reset to 0 and the store's " +
+          "ledger will silently skip new data. Pass checkpoint = Some(dir) for " +
+          "any store that outlives one query, or ephemeralOk = true to " +
+          "explicitly accept a single-query (build, read, discard) store.")
+      org.slf4j.LoggerFactory.getLogger(SwapStore.getClass).warn(
+        s"continuous ingest into $path runs on an EPHEMERAL checkpoint " +
+          "(ephemeralOk = true): the store must not outlive this query.")
+    }
 }

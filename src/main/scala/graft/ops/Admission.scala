@@ -204,7 +204,7 @@ object Admission {
     * shared ledger; a foreachBatch re-delivery returns after one
     * manifest read. The screen plan is lazy, so a replayed batch never
     * executes it. Durable-checkpoint rule as every store ingest
-    * ([[Sketches.requireDurableCheckpoint]]).
+    * ([[graft.core.SwapStore.writerStream]]).
     */
   def ingestStream(spark: SparkSession, catalogBase: String, fpStore: String,
                    stream: DataFrame, id: Column, text: Column,
@@ -214,17 +214,12 @@ object Admission {
                    checkpoint: Option[String] = None,
                    standingBloomFpp: Option[Double] = None,
                    ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Sketches.requireDurableCheckpoint(checkpoint, catalogBase, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          ingest(spark, catalogBase, bid,
-            screen(spark, catalogBase, fpStore, batch, id, text,
-              bench, benchId, benchText, n, threshold, standingBloomFpp),
-            folds)
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(stream, catalogBase, checkpoint, ephemeralOk) {
+      (batch, bid) =>
+        ingest(spark, catalogBase, bid,
+          screen(spark, catalogBase, fpStore, batch, id, text,
+            bench, benchId, benchText, n, threshold, standingBloomFpp),
+          folds)
+    }
 }

@@ -304,13 +304,8 @@ object Bm25Index {
   def searchStream(spark: SparkSession, queryStream: DataFrame, qid: Column,
                    qtext: Column, path: String, k: Int)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(search(spark, batch, qid, qtext, path, k))
-        }
-      }
-      .start()
+    SwapStore.readerStream(queryStream)(batch =>
+      onBatch(search(spark, batch, qid, qtext, path, k)))
 
   /** Fold a new batch of documents in as fold `folds+1` — batch-sized
     * work (batch ids must be NEW documents; postings are per-(term,
@@ -352,18 +347,16 @@ object Bm25Index {
   /** Continuous ingestion: [[append]] per micro-batch of documents with
     * the batch id recorded in the model ledger — EXACTLY-ONCE under
     * replay (a re-delivered batch is skipped; a crashed fold replays
-    * into the same fold dir). The streaming twin of [[searchStream]]:
+    * into the same fold dir), given a durable `checkpoint` for an index
+    * that outlives one query. The streaming twin of [[searchStream]]:
     * together they are live retrieval over a live corpus.
     */
   def appendStream(spark: SparkSession, docStream: DataFrame, id: Column,
-                   text: Column, path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SwapStore.retryingStaleReads() {
-          append(batch, id, text, path, batchId = bid)
-        }
-      }
-      .start()
+                   text: Column, path: String, checkpoint: Option[String] = None,
+                   ephemeralOk: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
+    SwapStore.writerStream(docStream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      append(batch, id, text, path, batchId = bid)
+    }
 
   /** Takedown: drop the given doc ids. Index-sized work, no corpus
     * re-read: postings and registry rewrite through a broadcast anti

@@ -119,11 +119,9 @@ object CosineIndex {
     * — the vector twin of [[DedupIndex.screenStream]] (MinHash) and the
     * admission-control shape for an embedding-deduped corpus: screen a
     * batch, [[append]] the admitted vectors, repeat. The index is
-    * re-read each batch, so appends/removes land across batches; an
-    * [[SwapStore.swapDirs]]-style swap's missing-path window retries via
-    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent
-    * under replay (it must be anyway — Spark replays micro-batches on
-    * failure). Scale shape per batch: batch-sized banding, (band,
+    * re-read each batch, so appends/removes land across batches; a batch
+    * straddling a swap retries ([[SwapStore.readerStream]]), so `onBatch`
+    * must be idempotent. Scale shape per batch: batch-sized banding, (band,
     * bucket) equi-join against the stored bands, only candidate dup
     * vectors fetched — the corpus-sized vec table never exchanges.
     */
@@ -131,11 +129,6 @@ object CosineIndex {
                    path: String, threshold: Double = 0.95,
                    bands: Int = 8, rowsPerBand: Int = 16)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(check(spark, batch, id, vec, path, threshold, bands, rowsPerBand))
-        }
-      }
-      .start()
+    SwapStore.readerStream(stream)(batch =>
+      onBatch(check(spark, batch, id, vec, path, threshold, bands, rowsPerBand)))
 }

@@ -288,28 +288,21 @@ object DedupIndex {
 
   /** Continuous-ingestion screening: run [[check]] over each micro-batch
     * of a streaming document source and hand the verified pairs to
-    * `onBatch` (write to a sink, quarantine, metrics…). foreachBatch —
+    * `onBatch` (write to a sink, quarantine, metrics…). Per batch —
     * not a stream-static join end-to-end — because candidate dedup
     * inside one batch is a plain batch `dropDuplicates`; done in the
     * streaming plan it would accumulate unbounded state. The static
     * index is re-read per batch, so appends/compactions/rebuilds are
-    * picked up across batches; a batch straddling a [[compact]]/
-    * [[IvfIndex.rebuild]]-style swap can hit the swap's momentary
-    * missing-path window and retries via [[SwapStore.retryingStaleReads]]
-    * (`onBatch` must be idempotent — it already must be, Spark replays
-    * micro-batches on failure).
+    * picked up across batches; a batch straddling a swap retries
+    * ([[SwapStore.readerStream]]), so `onBatch` must be idempotent.
     */
   def screenStream(spark: SparkSession, stream: DataFrame, id: Column, text: Column,
                    path: String, threshold: Double = 0.5,
                    shingleN: Int = 3, numHashes: Int = 32,
                    bands: Int = 8, rowsPerBand: Int = 4)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(check(spark, batch, id, text, path, threshold,
-            shingleN, numHashes, bands, rowsPerBand))
-        }
-      }
-      .start()
+    SwapStore.readerStream(stream) { batch =>
+      onBatch(check(spark, batch, id, text, path, threshold,
+        shingleN, numHashes, bands, rowsPerBand))
+    }
 }

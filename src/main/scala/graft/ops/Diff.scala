@@ -287,22 +287,12 @@ object Diff {
                         broadcastDeltas: Boolean = true,
                         checkpoint: Option[String] = None,
                         ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // exactly-once rides on batch ids ascending across restarts — a
-    // view that outlives one query needs a DURABLE checkpoint, else a
-    // fresh query restarts ids at 0 and the ledger silently no-ops new
-    // batches of an advanced source (warned loudly, like the sketch
-    // ingests)
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = changeStream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          applyChangelogBatch(spark, batch, path, keys, opCol, cntCol,
-            sums, bid, broadcastDeltas)
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(changeStream, path, checkpoint, ephemeralOk) {
+      (batch, bid) =>
+        applyChangelogBatch(spark, batch, path, keys, opCol, cntCol,
+          sums, bid, broadcastDeltas)
+    }
 
   /** Build SCD-2 (slowly-changing-dimension type 2) history from a
     * changelog: every version row gets a half-open validity interval —
@@ -404,17 +394,12 @@ object Diff {
                  seqCol: String, broadcastChanges: Boolean = true,
                  checkpoint: Option[String] = None,
                  ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = changeStream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          graft.core.SwapStore.fold(spark, path, bid)(hist =>
-            scd2Apply(hist, batch, keys, seqCol, broadcastChanges))
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(changeStream, path, checkpoint, ephemeralOk) {
+      (batch, bid) =>
+        graft.core.SwapStore.fold(spark, path, bid)(hist =>
+          scd2Apply(hist, batch, keys, seqCol, broadcastChanges))
+    }
 
   /** Continuous point-in-time attach: [[temporalJoin]] per micro-batch
     * of facts against the LIVE persisted dimension history
@@ -434,15 +419,10 @@ object Diff {
                          validTo: String, carry: Seq[String])
                         (onBatch: DataFrame => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    factStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          onBatch(temporalJoin(batch,
-            graft.core.SwapStore.read(spark, dimPath),
-            keys, factTs, validFrom, validTo, carry))
-        }
-      }
-      .start()
+    graft.core.SwapStore.readerStream(factStream) { batch =>
+      onBatch(temporalJoin(batch, graft.core.SwapStore.read(spark, dimPath),
+        keys, factTs, validFrom, validTo, carry))
+    }
 
   /** Look up the dimension version valid at each fact's time: for every
     * fact row, the dim row with the greatest `validFrom` ≤ fact ts that

@@ -83,13 +83,7 @@ object DsirModel {
   def scoreStream(spark: SparkSession, stream: DataFrame, id: Column, text: Column,
                   path: String)
                  (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(score(spark, batch, id, text, path))
-        }
-      }
-      .start()
+    SwapStore.readerStream(stream)(batch => onBatch(score(spark, batch, id, text, path)))
 
   /** Admit a raw batch into the model: fold its bucket counts into
     * `_rc` (batch-sized work — counts are additive, so the result is

@@ -94,15 +94,9 @@ object Frontier {
                     maxCol: String, minCol: String, path: String,
                     checkpoint: Option[String] = None,
                     ephemeralOk: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          graft.core.SwapStore.fold(spark, path, bid)(cur =>
-            skyline2d(cur.unionByName(batch), groupCols, maxCol, minCol))
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(stream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      graft.core.SwapStore.fold(spark, path, bid)(cur =>
+        skyline2d(cur.unionByName(batch), groupCols, maxCol, minCol))
+    }
 }

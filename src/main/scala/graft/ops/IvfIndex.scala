@@ -175,20 +175,14 @@ object IvfIndex {
     * query routing, streaming dedup-by-retrieval, online recommendation
     * lookups). Each batch re-reads the index path, so an [[append]] /
     * [[remove]] / [[rebuild]] / [[compact]] swap is picked up across
-    * batches; the swap's missing-path window retries via
-    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent under
-    * replay. Scale shape per batch: probes broadcast (batch-sized),
-    * DPP prunes the scan to probed cells' files — the corpus-sized
-    * index never exchanges.
+    * batches; a batch straddling a swap retries ([[SwapStore.readerStream]]),
+    * so `onBatch` must be idempotent. Scale shape per batch: probes
+    * broadcast (batch-sized), DPP prunes the scan to probed cells' files
+    * — the corpus-sized index never exchanges.
     */
   def searchStream(spark: SparkSession, queryStream: DataFrame, queryId: Column,
                    queryVec: Column, path: String, k: Int, nProbe: Int = 4)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe))
-        }
-      }
-      .start()
+    SwapStore.readerStream(queryStream)(batch =>
+      onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe)))
 }

@@ -142,11 +142,6 @@ object IvfPqIndex {
   def searchStream(spark: SparkSession, queryStream: DataFrame, queryId: Column,
                    queryVec: Column, path: String, k: Int, nProbe: Int = 4)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe))
-        }
-      }
-      .start()
+    SwapStore.readerStream(queryStream)(batch =>
+      onBatch(query(spark, path, batch, queryId, queryVec, k, nProbe)))
 }

@@ -328,8 +328,8 @@ object JoinView {
     } finally { dl.unpersist(); dr.unpersist(); dv.unpersist() }
   }
 
-  /** [[ingestCdc]] as a continuous stream (foreachBatch; the shared
-    * ledger makes replays exactly-once, as everywhere).
+  /** [[ingestCdc]] as a continuous stream (the shared ledger makes
+    * replays exactly-once, as everywhere).
     */
   def ingestCdcStream(spark: SparkSession, stream: DataFrame, base: String,
                       isLeft: Column, opCol: String,
@@ -337,16 +337,10 @@ object JoinView {
                       checkpoint: Option[String] = None,
                       ephemeralOk: Boolean = false,
                       derived: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Nil)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    graft.ops.Sketches.requireDurableCheckpoint(checkpoint, base, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          ingestCdc(spark, base, bid, b, isLeft, opCol, leftProj, rightProj, derived)
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(stream, base, checkpoint, ephemeralOk) { (b, bid) =>
+      ingestCdc(spark, base, bid, b, isLeft, opCol, leftProj, rightProj, derived)
+    }
 
   /** The current view with counts — one row per DISTINCT joined row
     * plus its multiplicity (reads prune nothing: the view is all

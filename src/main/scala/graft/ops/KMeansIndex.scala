@@ -119,13 +119,7 @@ object KMeansIndex {
   def assignStream(spark: SparkSession, stream: DataFrame, id: Column, vec: Column,
                    path: String)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(assign(spark, batch, id, vec, path))
-        }
-      }
-      .start()
+    SwapStore.readerStream(stream)(batch => onBatch(assign(spark, batch, id, vec, path)))
 
   /** The per-row `(id, cell)` assignment ledger: every indexed row at the
     * cell its statistics were folded into. Reads only the two narrow
@@ -291,19 +285,17 @@ object KMeansIndex {
     * replays batches on failure), and a sum fold is NOT naturally
     * idempotent, so the model records the last folded batch id and
     * [[update]] skips re-deliveries — the fold lands exactly once per
-    * batch id. `onBatch` receives each batch's (id, cell) assignment
+    * batch id, given a durable `checkpoint` for a model that outlives
+    * one query. `onBatch` receives each batch's (id, cell) assignment
     * against the pre-update centroids.
     */
   def updateStream(spark: SparkSession, stream: DataFrame, id: Column, vec: Column,
-                   path: String)
+                   path: String, checkpoint: Option[String] = None,
+                   ephemeralOk: Boolean = false)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SwapStore.retryingStaleReads() {
-          val pinned = batch.localCheckpoint()
-          onBatch(assign(spark, pinned, id, vec, path))
-          update(spark, pinned, id, vec, path, batchId = bid)
-        }
-      }
-      .start()
+    SwapStore.writerStream(stream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      val pinned = batch.localCheckpoint()
+      onBatch(assign(spark, pinned, id, vec, path))
+      update(spark, pinned, id, vec, path, batchId = bid)
+    }
 }

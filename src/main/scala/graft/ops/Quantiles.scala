@@ -671,15 +671,10 @@ object Quantiles {
                        ephemeralOk: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     require(k >= 0, s"madMonitorStream: k must be non-negative, got $k")
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          graft.core.SwapStore.fold(spark, path, bid)(cur =>
-            foldMadMonitor(cur, batch, keys, value, k))
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+    graft.core.SwapStore.writerStream(stream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      graft.core.SwapStore.fold(spark, path, bid)(cur =>
+        foldMadMonitor(cur, batch, keys, value, k))
+    }
   }
 
   /** The monitor's current state: (keys..., median, mad, n_seen,

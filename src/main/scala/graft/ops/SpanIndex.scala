@@ -210,23 +210,15 @@ object SpanIndex {
       check(spark, newDocs, id, text, path, n))
 
   /** Continuous-ingestion screening: [[check]] per micro-batch, verified
-    * spans handed to `onBatch`. foreachBatch for the same reasons as
+    * spans handed to `onBatch`. Per-batch for the same reasons as
     * [[DedupIndex.screenStream]] — the span merge is a batch window, and
     * the static gram table is re-read per batch, so appends and
-    * compactions are picked up across batches. A batch that straddles a
-    * [[compact]] swap can hit the swap's momentary missing-path window
-    * ([[SwapStore.swapDirs]]); the batch retries via
-    * [[SwapStore.retryingStaleReads]], so `onBatch` must be idempotent
-    * (it already must be — Spark replays micro-batches on failure).
+    * compactions are picked up across batches. A batch straddling a
+    * [[compact]] swap retries ([[SwapStore.readerStream]]), so `onBatch`
+    * must be idempotent.
     */
   def screenStream(spark: SparkSession, stream: DataFrame, id: Column, text: Column,
                    path: String, n: Int = 8)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(check(spark, batch, id, text, path, n))
-        }
-      }
-      .start()
+    SwapStore.readerStream(stream)(batch => onBatch(check(spark, batch, id, text, path, n)))
 }

@@ -249,15 +249,10 @@ object Timeseries {
                   ephemeralOk: Boolean = false)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     requireIntegralValue(stream, value, "cusumStream")
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          graft.core.SwapStore.fold(spark, path, bid)(cur =>
-            foldCusum(cur, batch, keys, ts, tieBreak, value, target, threshold))
-        }
-      }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+    graft.core.SwapStore.writerStream(stream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      graft.core.SwapStore.fold(spark, path, bid)(cur =>
+        foldCusum(cur, batch, keys, ts, tieBreak, value, target, threshold))
+    }
   }
 
   /** Exact rolling distinct actives — the DAU/WAU/MAU curve: for every

@@ -448,17 +448,15 @@ object TrigramIndex {
   }
 
   /** Continuous ingestion: [[append]] per micro-batch — the live-corpus
-    * twin of [[searchStream]], exactly-once under replay.
+    * twin of [[searchStream]], exactly-once under replay given a durable
+    * `checkpoint` for an index that outlives one query.
     */
   def appendStream(spark: SparkSession, docStream: DataFrame, id: Column,
-                   text: Column, path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SwapStore.retryingStaleReads() {
-          append(batch, id, text, path, batchId = bid)
-        }
-      }
-      .start()
+                   text: Column, path: String, checkpoint: Option[String] = None,
+                   ephemeralOk: Boolean = false): org.apache.spark.sql.streaming.StreamingQuery =
+    SwapStore.writerStream(docStream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      append(batch, id, text, path, batchId = bid)
+    }
 
   /** Takedown: drop the given doc ids. Index-sized work, no corpus
     * re-read — postings rewrite through a broadcast anti join into one
@@ -509,13 +507,8 @@ object TrigramIndex {
                    qtext: Column, corpus: DataFrame, id: Column, text: Column,
                    path: String)
                   (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(search(spark, batch, qid, qtext, corpus, id, text, path))
-        }
-      }
-      .start()
+    SwapStore.readerStream(queryStream)(batch =>
+      onBatch(search(spark, batch, qid, qtext, corpus, id, text, path)))
 
   /** [[searchRegex]] per arriving micro-batch of patterns against the
     * standing index — the alerting/standing-grep form of the regex
@@ -525,11 +518,6 @@ object TrigramIndex {
                         qtext: Column, corpus: DataFrame, id: Column, text: Column,
                         path: String)
                        (onBatch: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    queryStream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        SwapStore.retryingStaleReads() {
-          onBatch(searchRegex(spark, batch, qid, qtext, corpus, id, text, path))
-        }
-      }
-      .start()
+    SwapStore.readerStream(queryStream)(batch =>
+      onBatch(searchRegex(spark, batch, qid, qtext, corpus, id, text, path)))
 }

@@ -152,20 +152,14 @@ object EventTimeWindows {
                        checkpoint: Option[String] = None,
                        ephemeralOk: Boolean = false)
                       (onBatch: DataFrame => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    Sketches.requireDurableCheckpoint(checkpoint, path, ephemeralOk)
-    val w = stream.writeStream
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.core.SwapStore.retryingStaleReads() {
-          graft.core.SwapStore.fold(spark, path, bid) { cur =>
-            val (out, next) = foldSessionize(cur, batch, keys, ts, tie, gapMs)
-            onBatch(out)
-            next
-          }
-        }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    graft.core.SwapStore.writerStream(stream, path, checkpoint, ephemeralOk) { (batch, bid) =>
+      graft.core.SwapStore.fold(spark, path, bid) { cur =>
+        val (out, next) = foldSessionize(cur, batch, keys, ts, tie, gapMs)
+        onBatch(out)
+        next
       }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+    }
 
   def sessionize(df: DataFrame, keys: Seq[String], ts: Column, tie: Column,
                  gapMs: Long): DataFrame = {

@@ -76,6 +76,35 @@ class ContractSpec extends AnyFunSuite {
     assert(fsOfs == 1, s"def fsOf is defined $fsOfs times under core/")
   }
 
+  test("core/SwapStore owns the micro-batch loop and checkpoint guard of ops and core") {
+    // every store-touching stream starts through SwapStore.writerStream
+    // (durable-checkpoint guard first) or readerStream; a hand-written
+    // foreachBatch could skip the guard and lose batches after a restart
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = Seq("ops", "core").flatMap(d => java.nio.file.Files.walk(root.resolve(d))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq)
+    def count(re: String) = files.map { f =>
+      root.relativize(f).toString ->
+        re.r.findAllIn(new String(java.nio.file.Files.readAllBytes(f), "UTF-8")).size
+    }.filter(_._2 > 0).toMap
+    val swapStore = "core/SwapStore.scala"
+    // the three streams that read no store or take no checkpoint on purpose
+    val allowed = Map(swapStore -> 1, "ops/Dedup.scala" -> 1,
+      "ops/Decontamination.scala" -> 1, "core/Catalog.scala" -> 1)
+    val loops = count("\\.foreachBatch\\b")
+    assert(loops.get(swapStore).contains(1),
+      s"the fence no longer matches SwapStore's loop: $loops")
+    val extra = loops.filter { case (f, n) => n > allowed.getOrElse(f, 0) }
+    assert(extra.isEmpty, s".foreachBatch outside SwapStore's stream entry points: $extra")
+    for (re <- Seq("checkpointLocation", "def\\s+requireDurableCheckpoint\\b")) {
+      val hits = count(re)
+      assert(hits.contains(swapStore), s"the fence no longer matches SwapStore's $re")
+      assert(hits.keySet == Set(swapStore),
+        s"$re outside core/SwapStore.scala: ${hits - swapStore}")
+    }
+  }
+
   test("README's query counts match the code") {
     val readme = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("README.md")), "UTF-8")

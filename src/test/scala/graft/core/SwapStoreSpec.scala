@@ -149,6 +149,69 @@ class SwapStoreSpec extends AnyFunSuite {
     } finally sc.clearJobGroup()
   }
 
+  test("every ledgered stream refuses to start without a durable checkpoint") {
+    // the guard runs inside SwapStore.writerStream before any query
+    // starts: checkpoint = None without ephemeralOk is an error for all
+    // sixteen ledgered entry points, and leaves no job and no stream
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.ops._
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[(String, Long, Long)].toDF().toDF("k", "n", "v")
+    val (c, p) = (col("v"), "/nonexistent/swapstore_guard")
+    val folds = Seq("s" -> ((cur: DataFrame, _: DataFrame) => cur))
+    val entries: Seq[(String, () => Any)] = Seq(
+      "Admission.ingestStream" -> (() => Admission.ingestStream(spark, p, p, in, c,
+        col("k"), in, c, col("k"), folds)),
+      "EventTimeWindows.sessionizeStream" -> (() =>
+        EventTimeWindows.sessionizeStream(spark, in, Seq("k"), c, c, 1000L, p)(_ => ())),
+      "Timeseries.cusumStream" -> (() =>
+        Timeseries.cusumStream(spark, in, Seq("k"), c, c, c, 0L, 1L, p)),
+      "JoinView.ingestCdcStream" -> (() =>
+        JoinView.ingestCdcStream(spark, in, p, c > 0, "k", Seq(c), Seq(c))),
+      "Sketches.ingestThetaStream" -> (() =>
+        Sketches.ingestThetaStream(spark, in, Seq(col("k")), col("n"), c, p)),
+      "Sketches.ingestKllStream" -> (() =>
+        Sketches.ingestKllStream(spark, in, Seq(col("k")), col("n"), c, p)),
+      "Sketches.ingestTopKStream" -> (() =>
+        Sketches.ingestTopKStream(spark, in, Seq(col("k")), col("n"), c, p)),
+      "Frontier.skylineStream" -> (() =>
+        Frontier.skylineStream(spark, in, Seq("k"), "n", "v", p)),
+      "Diff.maintainAggStream" -> (() =>
+        Diff.maintainAggStream(spark, in, p, Seq("k"), "k", "n", Seq("v" -> "v"))),
+      "Diff.scd2Stream" -> (() => Diff.scd2Stream(spark, in, p, Seq("k"), "n")),
+      "Quantiles.madMonitorStream" -> (() =>
+        Quantiles.madMonitorStream(spark, in, Seq("k"), c, p)),
+      "Catalog.ingestStream" -> (() => Catalog.ingestStream(spark, in, p, folds)),
+      "Catalog.ingestStreamDynamic" -> (() =>
+        Catalog.ingestStreamDynamic(spark, in, p, _ => folds)),
+      "Bm25Index.appendStream" -> (() => Bm25Index.appendStream(spark, in, c, col("k"), p)),
+      "TrigramIndex.appendStream" -> (() =>
+        TrigramIndex.appendStream(spark, in, c, col("k"), p)),
+      "KMeansIndex.updateStream" -> (() =>
+        KMeansIndex.updateStream(spark, in, c, c, p)(_ => ())))
+    assert(entries.map(_._1).distinct.size == 16)
+    val sc = spark.sparkContext
+    val group = s"swapstore-guard-${System.nanoTime()}"
+    val activeBefore = spark.streams.active.map(_.id).toSet
+    sc.setJobGroup(group, "durable-checkpoint guard")
+    try {
+      for ((name, start) <- entries) {
+        val e = intercept[IllegalArgumentException](start())
+        assert(e.getMessage.contains("WITHOUT a durable checkpoint"), name)
+        assert(e.getMessage.contains("ephemeralOk"), name)
+      }
+      assert(spark.streams.active.map(_.id).toSet == activeBefore, "a guarded stream started")
+      // control job, as in the zero-job manifest test above
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getJobIdsForGroup(group).isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val jobs = sc.statusTracker.getJobIdsForGroup(group)
+      assert(jobs.length == 1, s"expected only the control job, got jobs ${jobs.sorted.mkString(", ")}")
+    } finally sc.clearJobGroup()
+  }
+
   test("compact bounds the data file count and changes neither content nor ledger") {
     val path = TempDirs.create("swapstore_compact")
     SwapStore.init(spark.range(100).toDF("k").repartition(8), path)

@@ -201,7 +201,7 @@ class Bm25IndexSpec extends AnyFunSuite {
     Bm25Index.build(docs.where(col("doc_id") < 250), col("doc_id"), col("text"), dir)
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)](spark)
     val q = Bm25Index.appendStream(spark, in.toDF().toDF("doc_id", "text"),
-      col("doc_id"), col("text"), dir)
+      col("doc_id"), col("text"), dir, ephemeralOk = true)
     val rest = docs.where(col("doc_id") >= 250)
       .select(col("doc_id"), col("text")).as[(Long, String)].collect()
     in.addData(rest.filter(_._1 < 400).toSeq)
@@ -213,6 +213,36 @@ class Bm25IndexSpec extends AnyFunSuite {
     Bm25Index.build(docs, col("doc_id"), col("text"), d2)
     assert(results(Bm25Index.search(spark, queriesDf, col("qid"), col("qtext"), dir, 10)) ==
       results(Bm25Index.search(spark, queriesDf, col("qid"), col("qtext"), d2, 10)))
+  }
+
+  test("appendStream restart on a durable checkpoint: docs added while down become searchable") {
+    // the ledger skips batch ids <= last_batch, so a restarted query
+    // must continue the ids — the same checkpoint keeps them ascending
+    val docs = Tables(spark, sf).documents.select(col("doc_id"), col("text"))
+    val stage = graft.core.TempDirs.create("graft_bm25_restart")
+    graft.streaming.Replay.writeOrderedSlices(
+      docs.where(col("doc_id") >= 250 && col("doc_id") < 400), col("doc_id"), stage, 2)
+    val dir = graft.core.TempDirs.create("graft_bm25_restart_idx") + "/idx"
+    val ckpt = graft.core.TempDirs.create("graft_bm25_restart_ckpt")
+    Bm25Index.build(docs.where(col("doc_id") < 250), col("doc_id"), col("text"), dir)
+    // the first batch id this query run executed
+    def run(): Long = {
+      val q = Bm25Index.appendStream(spark,
+        graft.streaming.Replay.orderedStream(spark, stage, docs.schema),
+        col("doc_id"), col("text"), dir, checkpoint = Some(ckpt))
+      try { q.processAllAvailable(); q.recentProgress.map(_.batchId).min } finally q.stop()
+    }
+    def lastBatch() = spark.read.parquet(s"$dir/_model/meta").head.getAs[Long]("last_batch")
+    assert(run() == 0L)
+    assert(lastBatch() == 1L)
+    // new docs arrive while the query is down, then it restarts
+    graft.streaming.Replay.appendSlice(stage, docs.where(col("doc_id") >= 400), 2)
+    assert(run() == 2L, "the restart must resume batch ids from the checkpoint")
+    assert(lastBatch() == 2L)
+    val full = graft.core.TempDirs.create("graft_bm25_restart_full") + "/idx"
+    Bm25Index.build(docs, col("doc_id"), col("text"), full)
+    assert(results(Bm25Index.search(spark, queriesDf, col("qid"), col("qtext"), dir, 10)) ==
+      results(Bm25Index.search(spark, queriesDf, col("qid"), col("qtext"), full, 10)))
   }
 
   test("zero-token and unmatched docs: registry counts them, results skip them") {

@@ -90,7 +90,7 @@ class KMeansIndexSpec extends AnyFunSuite {
     val q = KMeansIndex.updateStream(spark,
       source.toDF().toDF("vid")
         .join(emb, col("vid") === col("vec_id")),
-      col("vec_id"), col("embedding"), dir) { out =>
+      col("vec_id"), col("embedding"), dir, ephemeralOk = true) { out =>
       assignedCount.addAndGet(out.count())
     }
     try {

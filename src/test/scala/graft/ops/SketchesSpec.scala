@@ -177,19 +177,6 @@ class SketchesSpec extends AnyFunSuite {
     assert(o1 == o2)
   }
 
-  test("continuous ingest without a durable checkpoint is an error unless ephemeralOk is explicit") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val ctx = spark.sqlContext
-    val path = graft.core.TempDirs.create("graft_theta_ephemeral")
-    val in = MemoryStream[(String, Long, Long)]
-    val e = intercept[IllegalArgumentException] {
-      Sketches.ingestThetaStream(spark, in.toDF().toDF("g", "b", "v"),
-        Seq(col("g")), col("b"), col("v"), path)
-    }
-    assert(e.getMessage.contains("WITHOUT a durable checkpoint"))
-    assert(e.getMessage.contains("ephemeralOk"))
-  }
-
   test("ingestThetaStream: micro-batches grow the standing store; equals one-shot build; replays are no-ops") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val ctx = spark.sqlContext
