@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * a single-partition sort that caps out at one executor. The prefix is
   * [[PrefixSum.exclusive]] over the slim (ord, n_tok) pairs: one range
   * shuffle carries just those pairs (the documents never move), and
-  * only per-partition totals go through a window. Range boundaries
-  * affect only WHERE the sum is computed, never its value, so the bin
-  * assignment is deterministic across partitionings and engines.
+  * only per-partition totals reach the driver, with no window. Range
+  * boundaries affect only WHERE the sum is computed, never its value, so
+  * the bin assignment is deterministic across partitionings and engines.
   */
 object Packing {
 

@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** The engine's one distributed prefix sum (the two-phase scan,
   * Blelloch 1990): every row's EXCLUSIVE running sum of a long value
@@ -15,19 +16,15 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * The naive form is `sum(v) OVER (PARTITION BY g ORDER BY o ROWS
   * UNBOUNDED PRECEDING) - v`: one partition per group, or the whole
   * input in ONE partition without a group. Here it runs at full
-  * parallelism:
-  *   1. one range shuffle by (group, order) — ascending partition ids
-  *      hold ascending key ranges, each group's rows contiguous — then
-  *      a narrow per-partition running sum. The partition id is the
-  *      task's, assigned in the job of an EAGER `localCheckpoint`, so
-  *      it is pinned before any downstream operator runs: a later
-  *      `coalesce(1)` (Verify's write path) folds partitions into one
-  *      task, and an id computed there would collapse to 0 and zero
-  *      every offset.
-  *   2. per-(partition, group) totals — partial-aggregated to one row
-  *      per partition and group before their exchange — get their own
-  *      exclusive prefix in the ONLY window, over #partitions × #groups
-  *      rows, and broadcast-join back to the rows as offsets.
+  * parallelism as two passes over the map output of ONE range shuffle
+  * by (group, order), which leaves each group's rows contiguous:
+  *   1. each partition returns its total per run (its stretch of one
+  *      group); the driver, holding #partitions × #groups values, turns
+  *      them into each run's exclusive offset within its group;
+  *   2. a narrow pass appends offset + running sum to every row, finding
+  *      its offsets by RDD split index: a downstream `coalesce(1)`
+  *      (Verify's write path) runs every partition in one task, whose
+  *      `TaskContext.getPartitionId()` is 0.
   * Range boundaries decide only WHERE a sum is computed, never its
   * value, so the result is the same at any partitioning.
   *
@@ -42,47 +39,60 @@ object PrefixSum {
   /** `slim`'s columns plus `prefix_excl`: the sum of `value` over the
     * rows before this one in (`group`, `order`) order, within the same
     * `group`. `order` must be unique and totally ordered within a
-    * group; `value` a non-null long; `group` an atomic column (a null
-    * group is a group of its own). `numPartitions` ≤ 0 takes the
-    * session's shuffle partition count.
+    * group; `value` a non-null long (else an error); `group` an atomic,
+    * non-floating column compared by bytes (a null group is a group of
+    * its own). `numPartitions` ≤ 0 takes the session's shuffle partitions.
     */
   def exclusive(slim: DataFrame, order: Seq[String], value: String,
                 group: Option[String] = None, numPartitions: Int = 0): DataFrame = {
-    val parts =
-      if (numPartitions > 0) numPartitions
+    val schema = slim.schema
+    require(schema(value).dataType == LongType,
+      s"PrefixSum value `$value` must be a long, got ${schema(value).dataType.simpleString}")
+    val parts = if (numPartitions > 0) numPartitions
       else slim.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val keys = (group.toSeq ++ order).map(col)
-    val ranged = slim.localCheckpoint()
+    val rows = slim.localCheckpoint()
       .repartitionByRange(parts, keys: _*)
       .sortWithinPartitions(keys: _*)
-    val vi = ranged.schema.fieldIndex(value)
-    val gi = group.map(ranged.schema.fieldIndex).getOrElse(-1)
-    val local = ranged.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      var cum = 0L
-      var prev: Any = new Object // equals no group value
-      it.map { r =>
-        val g = if (gi >= 0) r.get(gi) else null
-        if (g != prev) { cum = 0L; prev = g } // a group's rows are contiguous
-        val excl = cum
-        cum += r.getLong(vi)
-        Row.fromSeq(r.toSeq :+ pid :+ excl)
-      }
-    }(Encoders.row(StructType(ranged.schema.fields ++ Seq(
-      StructField("__pid", IntegerType, nullable = false),
-      StructField("__cum", LongType, nullable = false)))))
-      .localCheckpoint()
-
-    val gs = group.toSeq.map(col)
-    val offsets = local.groupBy(col("__pid") +: gs: _*)
-      .agg(sum(col(value)).as("__tot"))
-      .select(col("__pid").as("__opid") +: group.toSeq.map(g => col(g).as("__og")) :+
-        coalesce(sum(col("__tot")).over(Window.partitionBy(gs: _*).orderBy(col("__pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)).as("__off"): _*)
-    val on = group.foldLeft(col("__pid") === col("__opid")) { (c, g) =>
-      c && (col(g) <=> col("__og"))
+      .queryExecution.toRdd
+    val vi = schema.fieldIndex(value)
+    val groupRef = group.map(g => BoundReference(schema.fieldIndex(g), schema(g).dataType, true)).toSeq
+    // the group where a row starts a run, else null: a copied UnsafeRow,
+    // whose byte equality is safe for nulls, strings, binaries, decimals
+    def runHead(): InternalRow => UnsafeRow = {
+      val proj = UnsafeProjection.create(groupRef)
+      var cur: UnsafeRow = null
+      r => { val k = proj(r); if (cur != null && k == cur) null else { cur = k.copy(); cur } }
     }
-    local.join(broadcast(offsets), on)
-      .select(slim.columns.map(col) :+ (col("__off") + col("__cum")).as("prefix_excl"): _*)
+    val totals = rows.mapPartitions { it =>
+      val (head, sums) = (runHead(), collection.mutable.ArrayBuffer.empty[(UnsafeRow, Long)])
+      var (key, sum) = (null: UnsafeRow, 0L)
+      it.foreach { r =>
+        if (r.isNullAt(vi)) throw new IllegalArgumentException(s"PrefixSum value `$value` is null")
+        val k = head(r)
+        if (k != null) { if (key != null) sums += key -> sum; key = k; sum = 0L }
+        sum += r.getLong(vi)
+      }
+      if (key != null) sums += key -> sum
+      Iterator(sums.toArray)
+    }.collect()
+    var (prev, acc) = (null: UnsafeRow, 0L) // a group's runs are adjacent
+    val offsets = totals.map(_.map { case (k, sum) =>
+      if (k != prev) { prev = k; acc = 0L }
+      acc += sum; acc - sum
+    })
+    val outSchema = schema.add(StructField("prefix_excl", LongType, nullable = false))
+    val out = rows.mapPartitionsWithIndex[InternalRow] { (split, it) =>
+      val (head, proj) = (runHead(), UnsafeProjection.create(outSchema))
+      val (tail, joined) = (new GenericInternalRow(1), new JoinedRow)
+      var (run, cum) = (-1, 0L)
+      it.map { r =>
+        if (head(r) != null) { run += 1; cum = offsets(split)(run) }
+        tail.setLong(0, cum)
+        cum += r.getLong(vi)
+        proj(joined(r, tail))
+      }
+    }
+    ColumnBridge.internalDataFrame(slim.sparkSession, out, outSchema)
   }
 }

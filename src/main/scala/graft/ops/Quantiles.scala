@@ -448,10 +448,9 @@ object Quantiles {
     val vals = df.where(value.isNotNull)
     val ranked = Sampling.rankBy(vals, key, value)
     // N from the RANK frame, not a separate corpus count: rankBy drops
-    // exactly the null-value rows `vals` filters, so max(rank) == N,
-    // and the rank frame is checkpoint-backed inside rankBy — this is
-    // a partition-count-sized job instead of one more full corpus scan
-    // (at any scale: the old count() re-read the table once per call)
+    // exactly the null-value rows `vals` filters, so max(rank) == N, and
+    // the rank frame reads the range shuffle rankBy already wrote — a
+    // pass over slim (key, value) rows, not one more corpus scan
     val nRow = ranked.agg(max(col("rank"))).head
     require(!nRow.isNullAt(0), "quantileBins: no rows with a non-null value")
     val n = nRow.getLong(0)

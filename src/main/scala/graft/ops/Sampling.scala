@@ -92,8 +92,8 @@ object Sampling {
 
   /** The general form of [[shuffleRank]]: every row's 1-based position
     * in (`order`, `key`) order — [[PrefixSum.exclusive]] of a constant 1,
-    * plus one: one range shuffle, only the #partitions counts through a
-    * window, never a global single-partition sort. `key` must be unique
+    * plus one: one range shuffle, only the #partitions counts through the
+    * driver, never a global single-partition sort. `key` must be unique
     * and non-null (the deterministic tie-break); rows with a null
     * `order` are dropped (they have no place in a total order). Returns
     * (key, <rankName>).
@@ -122,8 +122,8 @@ object Sampling {
     * pathological when one domain is most of a 100 TB corpus. Here the
     * prefix is [[PrefixSum.exclusive]] grouped by domain over the slim
     * (key, dom, n_tok, hash) rows: each domain spans contiguous range
-    * partitions, and only the per-(partition, domain) totals go through
-    * the per-domain offset window. The data shuffles once.
+    * partitions; only per-(partition, domain) totals go through the
+    * driver, which turns them into offsets. The data shuffles once.
     *
     * `key` must be unique and non-null (it defines the deterministic
     * order); a null domain falls to `defaultBudget`. Returns

@@ -309,9 +309,9 @@ object Timeseries {
     *
     * Scale shape: the interval-sized data collapses map-side into the
     * distinct-tick frame (one hash aggregate); the running delta over
-    * it is [[PrefixSum.exclusive]] — one range shuffle of the ticks,
-    * no single-partition window over them at any tick count — and the
-    * struct-max is a partial aggregate. Output one row:
+    * it is [[PrefixSum.exclusive]] — one range shuffle of the ticks and
+    * no window over them at any tick count, only per-partition totals
+    * through the driver — and the struct-max is a partial aggregate. Output one row:
     * (max_concurrent, at_tick); empty input yields (0, null).
     * Intervals with end < start fail loudly.
     */

@@ -1,11 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** The ONE place graft touches Spark-internal (non-public) API. Everything
-  * else in the engine builds on the stable public surface; the two escape
+  * else in the engine builds on the stable public surface; the three escape
   * hatches here each have a pinned contract that must be re-verified on a
   * Spark upgrade (written against Spark 4.1.x):
   *
@@ -25,6 +26,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *     If an upgrade breaks it, the fallback is a window row_number <= k
   *     (correct, but shuffles every candidate row) — swap inside
   *     [[collectBottomK]] only, callers are insulated.
+  *
+  *  3. `classic.SparkSession.internalCreateDataFrame` (private[sql]): an
+  *     `RDD[InternalRow]` as a DataFrame, unconverted. Contract relied on:
+  *     nothing checks the rows, so each must match the schema; the plan is
+  *     a `LogicalRDD` scanning the RDD as is. Fallback: `createDataFrame`
+  *     over encoder-converted rows, inside [[internalDataFrame]] only.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -48,4 +55,8 @@ object ColumnBridge {
   def collectBottomK(c: Column, k: Int): Column =
     column(new org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK(
       expression(c), k, true).toAggregateExpression())
+
+  def internalDataFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[InternalRow],
+                        schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

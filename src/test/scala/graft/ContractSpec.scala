@@ -48,11 +48,30 @@ class ContractSpec extends AnyFunSuite {
       val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
       src.contains("mapPartitionsWithIndex") || offsetWindow.findFirstIn(src).isDefined
     }
-    assert(copies(root.resolve("PrefixSum.scala")), "the fence no longer matches PrefixSum's offset window")
+    assert(copies(root.resolve("PrefixSum.scala")), "the fence no longer matches PrefixSum's passes")
     val others = java.nio.file.Files.walk(root).iterator().asScala
       .filter(f => f.toString.endsWith(".scala") && f.getFileName.toString != "PrefixSum.scala")
       .filter(copies).map(root.relativize(_).toString).toSeq
     assert(others.isEmpty, s"prefix-sum copies outside PrefixSum.scala: $others")
+  }
+
+  test("catalyst-row DataFrames only in graftbridge and ops/PrefixSum") {
+    // a DataFrame over an RDD[InternalRow] skips every row check; the
+    // bridge holds the private call, PrefixSum its one caller
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val allowed = (f: String) =>
+      f.startsWith("org/apache/spark/sql/graftbridge/") || f == "graft/ops/PrefixSum.scala"
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+        Seq("internalCreateDataFrame", "queryExecution.toRdd").filter(src.contains)
+          .map(root.relativize(f).toString -> _)
+      }.toSeq
+    assert(hits.map(_._2).toSet == Set("internalCreateDataFrame", "queryExecution.toRdd"),
+      s"the fence no longer matches the bridge and PrefixSum: $hits")
+    val outside = hits.filterNot(h => allowed(h._1))
+    assert(outside.isEmpty, s"catalyst-row DataFrame outside the bridge and PrefixSum: $outside")
   }
 
   test("core/SwapStore is the only parquet-mr codec and directory swap in src/main") {

@@ -201,8 +201,10 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("PrefixSum property: equals the naive per-group window sum minus value, through coalesce(1)") {
     // sum(v) over (partition by g order by o rows unbounded preceding) - v
     // is the contract; random values (zeros and negatives included), a
-    // null group, several partitionings, and a downstream coalesce(1)
-    // that folds every partition into one task
+    // null group, string, long and binary groups, one group spanning
+    // every partition, several partitionings (empty partitions among
+    // them), an empty input, and a downstream coalesce(1) that folds
+    // every partition into one task as well as a repartition(5)
     import org.apache.spark.sql.expressions.Window
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
@@ -214,23 +216,70 @@ class PipelineOpsSpec extends AnyFunSuite {
       g.apply(Gen.Parameters.default, Seed(300 + i))
     }
     assert(cases.nonEmpty)
-    for (rows <- cases) {
-      // sparse, negative-including order keys, fed in a scrambled order
-      val all: Seq[(Option[String], Long)] = (None, 0L) +: (Some("a"), 0L) +: rows
-      val df = all.zipWithIndex
-        .map { case ((g, v), i) => ((i * 7919L) % 1009L - 500L, g, v) }
+    // sparse, negative-including order keys, fed in a scrambled order;
+    // five rows leave some of 8 partitions empty, and Nil is no rows
+    val inputs = cases.map(rows => (None, 0L) +: (Some("a"), 0L) +: rows) ++
+      Seq(cases.head.take(5), Nil)
+    val frames = inputs.map { all =>
+      all.zipWithIndex.map { case ((g, v), i) => ((i * 7919L) % 1009L - 500L, g, v) }
         .reverse.toDF("o", "g", "v")
-      for (grouped <- Seq(false, true); parts <- Seq(1, 3, 8)) {
-        val group = if (grouped) Some("g") else None
-        val w = Window.partitionBy(group.toSeq.map(col): _*).orderBy(col("o"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val want = df.select(col("o"), (sum(col("v")).over(w) - col("v")).as("p"))
-          .as[(Long, Long)].collect().toMap
-        val got = PrefixSum.exclusive(df, Seq("o"), "v", group, parts)
-          .coalesce(1).select("o", "prefix_excl").as[(Long, Long)].collect().toMap
-        assert(got == want, s"grouped=$grouped parts=$parts")
+        .withColumn("gl", ascii(col("g")).cast("long"))
+        .withColumn("gb", col("g").cast("binary"))
+        .withColumn("one", lit("x"))
+    }
+    for (df <- frames; group <- Seq(None, Some("g"), Some("gl"), Some("gb"), Some("one"));
+         parts <- Seq(1, 3, 8)) {
+      val w = Window.partitionBy(group.toSeq.map(col): _*).orderBy(col("o"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val want = df.select(col("o"), (sum(col("v")).over(w) - col("v")).as("p"))
+        .as[(Long, Long)].collect().toMap
+      val got = PrefixSum.exclusive(df, Seq("o"), "v", group, parts)
+      for (down <- Seq(got.coalesce(1), got.repartition(5))) {
+        val seen = down.select("o", "prefix_excl").as[(Long, Long)].collect().toMap
+        assert(seen == want, s"group=$group parts=$parts n=${want.size}")
       }
     }
+  }
+
+  test("PrefixSum budget: at most 5 jobs per exclusive(...).collect(), one pinned RDD") {
+    // the input pin, range sampling, the shuffle map, pass 1's collect
+    // and the caller's job: pass 2 reads the same map output, and no
+    // second checkpoint, window or broadcast join starts a job of its own
+    val sc = spark.sparkContext
+    val df = (0 until 400).map(i => ((i * 7919L) % 1009L, s"g${i % 3}", i.toLong))
+      .toDF("o", "g", "v")
+    val group = s"prefix-sum-budget-${System.nanoTime()}"
+    val pinnedBefore = sc.getPersistentRDDs.keySet
+    sc.setJobGroup(group, "PrefixSum job budget")
+    try {
+      val out = PrefixSum.exclusive(df, Seq("o"), "v", Some("g"), 4)
+      val pinned = sc.getPersistentRDDs.keySet -- pinnedBefore
+      assert(pinned.size == 1, s"exclusive pinned ${pinned.size} RDDs, expected only its input")
+      assert(out.collect().length == 400)
+    } finally sc.clearJobGroup()
+    // job starts reach the status tracker in order: once a later job
+    // shows, every job of the group has been counted
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, "PrefixSum job budget marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.nanoTime() < deadline)
+      Thread.sleep(10)
+    val jobs = sc.statusTracker.getJobIdsForGroup(group)
+    assert(jobs.nonEmpty && jobs.length <= 5,
+      s"exclusive(...).collect() ran ${jobs.length} jobs: ${jobs.sorted.mkString(", ")}")
+  }
+
+  test("PrefixSum contract: a value column that is not a long is refused before planning") {
+    val ints = Seq((1L, 1), (2L, 2)).toDF("o", "v")
+    val e = intercept[IllegalArgumentException](PrefixSum.exclusive(ints, Seq("o"), "v"))
+    assert(e.getMessage.contains("must be a long, got int"), e.getMessage)
+  }
+
+  test("PrefixSum contract: a null value is an error, not a zero") {
+    val nulls = Seq((1L, Some(4L)), (2L, None), (3L, Some(5L))).toDF("o", "v")
+    val e = intercept[org.apache.spark.SparkException](PrefixSum.exclusive(nulls, Seq("o"), "v"))
+    assert(e.getMessage.contains("PrefixSum value `v` is null"), e.getMessage)
   }
 
   test("connectedComponents property: random graphs match union-find") {

@@ -191,22 +191,24 @@ class PlanQualitySpec extends AnyFunSuite {
       s"scoring scan reads more than (doc_id, text):\n$p")
   }
 
-  test("q59: packing shuffles the data once (range) — cumsum is narrow, windows tiny") {
+  test("q59: packing range-shuffles the data once and plans no window") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.window.WindowExec
     val df = graft.SparkEntry.queries("q59_seq_packing")(spark, sf)
-    val p = df.queryExecution.executedPlan.toString
-    // the only window is phase 2's exclusive prefix over per-partition
-    // TOTALS (#partitions rows) — a window over the data (ord_key/n_tok
-    // cumsum) would mean a global or re-shuffled sort of the dataset
-    val winLines = p.linesIterator.filter(_.contains("windowspecdefinition")).toSeq
-    assert(winLines.nonEmpty && winLines.forall(_.contains("sum(__tot")),
-      s"window over the data instead of partition totals:\n${winLines.mkString("\n")}")
+    val p = df.queryExecution.executedPlan
+    // PrefixSum's two passes and their driver-side offsets replace every
+    // window — a window over the data (ord_key/n_tok cumsum) would mean
+    // a global or re-shuffled sort of the dataset
+    val root = p match { case a: AdaptiveSparkPlanExec => a.inputPlan; case o => o }
+    val windows = root.collect { case w: WindowExec => w }
+    assert(windows.isEmpty, s"window in q59's plan:\n${windows.mkString("\n")}")
     // the data's one range shuffle lives in the shared RDD lineage
-    // (consumed by both phases); SQL-level hash exchanges may carry only
-    // the partially-aggregated (pid, total) rows — never the data
-    val hashEx = p.linesIterator.filter(_.contains("Exchange hashpartitioning")).toSeq
-    assert(hashEx.forall(l => l.contains("pid#") && !l.contains("ord_key")),
+    // (consumed by both passes); no SQL-level exchange carries the data
+    val lines = p.toString.linesIterator.toSeq
+    val hashEx = lines.filter(_.contains("Exchange hashpartitioning"))
+    assert(hashEx.forall(!_.contains("ord_key")),
       s"data re-shuffled beyond the range partition:\n${hashEx.mkString("\n")}")
-    assert(!p.contains("Exchange rangepartitioning"),
+    assert(!lines.exists(_.contains("Exchange rangepartitioning")),
       s"second SQL-level range shuffle of the data:\n$p")
   }
 
@@ -232,9 +234,9 @@ class PlanQualitySpec extends AnyFunSuite {
         "the projection feeding repartitionByRange ran more than once (unpinned)")
   }
 
-  test("q217: no single-partition window over the ticks — only PrefixSum's over partition totals") {
-    // a window with no partition spec runs in ONE partition; the only one
-    // allowed is PrefixSum's exclusive prefix over per-partition totals
+  test("q217: no single-partition window anywhere in the plan") {
+    // a window with no partition spec runs in ONE partition; PrefixSum
+    // sums the ticks in two passes and needs none
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     import org.apache.spark.sql.execution.window.WindowExec
@@ -244,7 +246,6 @@ class PlanQualitySpec extends AnyFunSuite {
       val root = p match { case a: AdaptiveSparkPlanExec => a.inputPlan; case o => o }
       root.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
         .map(_.windowExpression.mkString(", "))
-        .filterNot(_.contains("sum(__tot"))
     }
     val p = graft.SparkEntry.queries("q217_peak_sessions")(spark, sf).queryExecution.executedPlan
     assert(globalWindows(p).isEmpty, s"single-partition window over the ticks:\n$p")
