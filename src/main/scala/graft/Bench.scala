@@ -22,7 +22,7 @@ object Bench {
     // Warm the JVM, codegen cache and parquet footer reads so the first
     // timed query doesn't absorb session startup.
     spark.range(1000000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").write.format("noop").mode("overwrite").save()
+    graft.sources.Tables(spark, sfDir).lineitem.write.format("noop").mode("overwrite").save()
     // A failed run must fail LOUDLY — recording the elapsed time of a
     // broken query would masquerade as a suspiciously fast measurement.
     // Per-query: first failure aborts that query's remaining runs, its

@@ -108,7 +108,7 @@ object Catalog {
   def read(spark: SparkSession, base: String, store: String): DataFrame = {
     val g = gens(spark, base).getOrElse(store,
       throw new IllegalArgumentException(s"Catalog: no store '$store' under $base"))
-    spark.read.parquet(genDir(base, store, g))
+    SwapStore.readParquet(spark, genDir(base, store, g))
   }
 
   /** Every store's current table, resolved through ONE manifest read —
@@ -117,7 +117,7 @@ object Catalog {
     */
   def readAll(spark: SparkSession, base: String): Map[String, DataFrame] =
     gens(spark, base).map { case (n, g) =>
-      n -> spark.read.parquet(genDir(base, n, g))
+      n -> SwapStore.readParquet(spark, genDir(base, n, g))
     }
 
   /** The named stores' current tables, resolved through ONE manifest
@@ -132,7 +132,7 @@ object Catalog {
     names.map { n =>
       require(g.contains(n),
         s"Catalog: no store '$n' under $base")
-      n -> spark.read.parquet(genDir(base, n, g(n)))
+      n -> SwapStore.readParquet(spark, genDir(base, n, g(n)))
     }.toMap
   }
 
@@ -250,7 +250,7 @@ object Catalog {
       s"Catalog.readAt: no savepoint '$name' under $base")
     SwapStore.readDir(spark, s"$sp/manifest", SwapStore.Pairs)
       .map { case (n, g) =>
-        n -> spark.read.parquet(genDir(base, n, g))
+        n -> SwapStore.readParquet(spark, genDir(base, n, g))
       }.toMap
   }
 
@@ -327,7 +327,7 @@ object Catalog {
       if (i >= failAfter)
         throw new IllegalStateException(
           s"Catalog: injected crash after $i of ${folds.size} store writes")
-      val current = spark.read.parquet(genDir(base, name, cur(name)))
+      val current = SwapStore.readParquet(spark, genDir(base, name, cur(name)))
       fold(current, batch).write.mode("overwrite")
         .parquet(genDir(base, name, batchId))
     }
@@ -500,7 +500,7 @@ object Catalog {
       val done = !full &&
         rfs.exists(new org.apache.hadoop.fs.Path(s"$dst/_SUCCESS"))
       if (!done) {
-        spark.read.parquet(genDir(primary, name, g))
+        SwapStore.readParquet(spark, genDir(primary, name, g))
           .write.mode("overwrite").parquet(dst)
         copied += (name -> g)
       }

@@ -1,8 +1,13 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** A tiny crash-safe persisted-table lifecycle shared by the continuous
@@ -127,6 +132,45 @@ object SwapStore {
         .withConf(conf).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).map(codec.get).toList
       finally reader.close()
+    }
+  }
+
+  /** The parquet table at `path`, read with the schema of ONE footer
+    * read here on the driver: the file Spark's inference would pick
+    * (`_common_metadata`, then `_metadata`, then the first data file by
+    * path), converted the way inference converts it (ColumnBridge
+    * contract #4). Inference reads that same footer in a one-task Spark
+    * job whose closure ships the session's whole Hadoop conf; this
+    * starts no job. Nothing is cached: every call reads the footer of
+    * what is on disk now. `path` is a file or a directory, not a glob.
+    * A missing path raises Spark's own `PATH_NOT_FOUND`, and a
+    * directory with no data file is left to Spark's inference, which
+    * raises its own error for it.
+    */
+  private[graft] def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val summaries = Seq("_common_metadata", "_metadata")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filter(s => ColumnBridge.listedByFileIndex(s.getPath.getName)).flatMap(leaves)
+    val files = (try leaves(fs.getFileStatus(root)) catch {
+      case _: java.io.FileNotFoundException if !fs.exists(root) =>
+        throw ColumnBridge.pathNotFound(fs.makeQualified(root).toString)
+    }).sortBy(_.getPath.toString)
+    val footerFile = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+    footerFile match {
+      case Some(f) =>
+        val options = HadoopReadOptions.builder(conf, f.getPath)
+          .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build()
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), options)
+        val footer = try reader.getFooter finally reader.close()
+        spark.read.schema(ColumnBridge.parquetSchema(spark, new Footer(f.getPath, footer)))
+          .parquet(path)
+      case None => spark.read.parquet(path)
     }
   }
 
@@ -310,7 +354,7 @@ object SwapStore {
   /** The current table. */
   def read(spark: SparkSession, path: String): DataFrame = {
     ensureStore(spark, path)
-    spark.read.parquet(s"${store(path)}/data")
+    readParquet(spark, s"${store(path)}/data")
   }
 
   /** The last applied batch id (-1 after [[init]]). */

@@ -161,7 +161,7 @@ object Bm25Index {
   private case class Meta(nDocs: Long, totTokens: Long, folds: Long, lastBatch: Long)
 
   private def meta(spark: SparkSession, path: String): Meta = {
-    val m = spark.read.parquet(s"$path/_model/meta")
+    val m = SwapStore.readParquet(spark, s"$path/_model/meta")
       .select(col("n_docs"), col("tot_tokens"), col("folds"), col("last_batch")).head
     Meta(m.getLong(0), m.getLong(1), m.getLong(2), m.getLong(3))
   }
@@ -230,7 +230,7 @@ object Bm25Index {
         s"maxQueryTerms=$maxQueryTerms — raise the cap or batch the queries")
     val m = meta(spark, path)
     val post = readPost(spark, path).where(col("term").isin(terms.toSeq: _*))
-    val df = spark.read.parquet(s"$path/_model/df")
+    val df = SwapStore.readParquet(spark, s"$path/_model/df")
       .where(col("term").isin(terms.toSeq: _*))
     rank(scores(post, qt, df, m.nDocs,
       math.max(1L, if (m.nDocs == 0) 1L else m.totTokens / m.nDocs)), k)
@@ -335,7 +335,7 @@ object Bm25Index {
     val fPost = spark.read.schema(postSchema).parquet(s"$path/_post/fold=$fold")
     val fLen = spark.read.schema(lenSchema).parquet(s"$path/_len/fold=$fold")
     val (bn, btot) = lenStats(fLen)
-    val grown = spark.read.parquet(s"$path/_model/df")
+    val grown = SwapStore.readParquet(spark, s"$path/_model/df")
       .unionByName(fPost.groupBy(col("term")).agg(count(lit(1)).as("df")))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val tmp = s"$path/_model.next"
@@ -400,7 +400,7 @@ object Bm25Index {
       tmpPost, fold)
     SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val tmp = s"$path/_model.next"
-    writeModel(tmp, spark.read.parquet(s"$path/_model/df"), m.copy(folds = fold))
+    writeModel(tmp, SwapStore.readParquet(spark, s"$path/_model/df"), m.copy(folds = fold))
     SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }
 }

@@ -27,7 +27,7 @@ object CosineIndex {
             bands: Int = 8, rowsPerBand: Int = 16): Unit = {
     df.select(id.as("id"), vec.as("v"))
       .write.mode("overwrite").parquet(s"$path/vecs")
-    bandsOf(df.sparkSession.read.parquet(s"$path/vecs"), bands, rowsPerBand)
+    bandsOf(SwapStore.readParquet(df.sparkSession, s"$path/vecs"), bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/bands")
   }
 
@@ -56,10 +56,10 @@ object CosineIndex {
   def remove(spark: SparkSession, path: String, ids: DataFrame, idCol: Column): Unit = {
     val tmp = s"$path.remove"
     val rm = ids.select(idCol.as("id"))
-    spark.read.parquet(s"$path/vecs")
+    SwapStore.readParquet(spark, s"$path/vecs")
       .join(org.apache.spark.sql.functions.broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/vecs")
-    spark.read.parquet(s"$path/bands")
+    SwapStore.readParquet(spark, s"$path/bands")
       .join(org.apache.spark.sql.functions.broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/bands")
     SwapStore.swapDirs(spark, path, tmp)
@@ -83,8 +83,8 @@ object CosineIndex {
     */
   def pairs(spark: SparkSession, path: String, threshold: Double = 0.95): DataFrame =
     Banding.verifyPairs(
-      Banding.candidatePairs(spark.read.parquet(s"$path/bands")),
-      spark.read.parquet(s"$path/vecs").select(col("id"), col("v").as("p")),
+      Banding.candidatePairs(SwapStore.readParquet(spark, s"$path/bands")),
+      SwapStore.readParquet(spark, s"$path/vecs").select(col("id"), col("v").as("p")),
       Similarity.cosine, "cos", threshold)
 
   /** Screen a batch of new vectors against the index: (new_id, dup_id, cos)
@@ -96,7 +96,7 @@ object CosineIndex {
   def check(spark: SparkSession, newVecs: DataFrame, id: Column, vec: Column,
             path: String, threshold: Double = 0.95,
             bands: Int = 8, rowsPerBand: Int = 16): DataFrame = {
-    val indexBands = spark.read.parquet(s"$path/bands")
+    val indexBands = SwapStore.readParquet(spark, s"$path/bands")
       .select(col("band"), col("bucket"), col("id").as("dup_id"))
     // one pass over the batch: band and carry the vector, no self-join
     val fresh = newVecs.select(id.as("new_id"), vec.as("nv"))
@@ -107,7 +107,7 @@ object CosineIndex {
     val cand = fresh.join(indexBands, Seq("band", "bucket"))
       .select(col("new_id"), col("dup_id"), col("nv"))
       .dropDuplicates("new_id", "dup_id")
-    val candVec = spark.read.parquet(s"$path/vecs")
+    val candVec = SwapStore.readParquet(spark, s"$path/vecs")
       .select(col("id").as("dup_id"), col("v").as("dv"))
     cand.join(candVec, Seq("dup_id"))
       .select(col("new_id"), col("dup_id"),

@@ -41,7 +41,7 @@ object DedupIndex {
     df.select(id.as("id"), Dedup.shingles(text, shingleN).as("sh"))
       .where(size(col("sh")) > 0)
       .write.mode("overwrite").parquet(s"$path/shingles")
-    bandsOf(df.sparkSession.read.parquet(s"$path/shingles"), numHashes, bands, rowsPerBand)
+    bandsOf(SwapStore.readParquet(df.sparkSession, s"$path/shingles"), numHashes, bands, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/bands")
   }
 
@@ -81,9 +81,9 @@ object DedupIndex {
   def compact(spark: SparkSession, path: String, filesPerTable: Int = 8): Unit = {
     require(filesPerTable > 0, "filesPerTable must be positive")
     val tmp = s"$path.compact"
-    spark.read.parquet(s"$path/shingles").coalesce(filesPerTable)
+    SwapStore.readParquet(spark, s"$path/shingles").coalesce(filesPerTable)
       .write.mode("overwrite").parquet(s"$tmp/shingles")
-    spark.read.parquet(s"$path/bands").coalesce(filesPerTable)
+    SwapStore.readParquet(spark, s"$path/bands").coalesce(filesPerTable)
       .write.mode("overwrite").parquet(s"$tmp/bands")
     SwapStore.swapDirs(spark, path, tmp)
   }
@@ -99,10 +99,10 @@ object DedupIndex {
   def remove(spark: SparkSession, path: String, ids: DataFrame, idCol: Column): Unit = {
     val tmp = s"$path.remove"
     val rm = ids.select(idCol.as("id"))
-    spark.read.parquet(s"$path/shingles")
+    SwapStore.readParquet(spark, s"$path/shingles")
       .join(broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/shingles")
-    spark.read.parquet(s"$path/bands")
+    SwapStore.readParquet(spark, s"$path/bands")
       .join(broadcast(rm), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/bands")
     SwapStore.swapDirs(spark, path, tmp)
@@ -125,8 +125,8 @@ object DedupIndex {
     */
   def pairs(spark: SparkSession, path: String, threshold: Double = 0.5): DataFrame =
     Banding.verifyPairs(
-      Banding.candidatePairs(spark.read.parquet(s"$path/bands")),
-      spark.read.parquet(s"$path/shingles").select(col("id"), col("sh").as("p")),
+      Banding.candidatePairs(SwapStore.readParquet(spark, s"$path/bands")),
+      SwapStore.readParquet(spark, s"$path/shingles").select(col("id"), col("sh").as("p")),
       Dedup.jaccard, "jaccard", threshold)
 
   /** Cross-corpus near-dup pairs between TWO standing indexes — the
@@ -142,10 +142,10 @@ object DedupIndex {
                  threshold: Double = 0.5): DataFrame =
     Banding.verifyPairsAcross(
       Banding.candidatePairsAcross(
-        spark.read.parquet(s"$pathA/bands"),
-        spark.read.parquet(s"$pathB/bands")),
-      spark.read.parquet(s"$pathA/shingles").select(col("id"), col("sh").as("p")),
-      spark.read.parquet(s"$pathB/shingles").select(col("id"), col("sh").as("p")),
+        SwapStore.readParquet(spark, s"$pathA/bands"),
+        SwapStore.readParquet(spark, s"$pathB/bands")),
+      SwapStore.readParquet(spark, s"$pathA/shingles").select(col("id"), col("sh").as("p")),
+      SwapStore.readParquet(spark, s"$pathB/shingles").select(col("id"), col("sh").as("p")),
       Dedup.jaccard, "jaccard", threshold)
 
   /** Screen a batch of new documents against the index: returns
@@ -158,8 +158,8 @@ object DedupIndex {
             shingleN: Int = 3, numHashes: Int = 32,
             bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
     checkImpl(
-      spark.read.parquet(s"$path/bands"),
-      spark.read.parquet(s"$path/shingles"),
+      SwapStore.readParquet(spark, s"$path/bands"),
+      SwapStore.readParquet(spark, s"$path/shingles"),
       newDocs, id, text, threshold, shingleN, numHashes, bands, rowsPerBand)
 
   private def checkImpl(bandsTable: DataFrame, shinglesTable: DataFrame,

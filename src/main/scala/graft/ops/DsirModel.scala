@@ -44,8 +44,8 @@ object DsirModel {
   }
 
   private def writeMeta(spark: SparkSession, path: String, buckets: Int): Unit = {
-    val nt = total(spark.read.parquet(s"$path/_tc"))
-    val nr = total(spark.read.parquet(s"$path/_rc"))
+    val nt = total(SwapStore.readParquet(spark, s"$path/_tc"))
+    val nr = total(SwapStore.readParquet(spark, s"$path/_rc"))
     spark.range(1)
       .select(lit(buckets).as("buckets"), lit(nt).as("nt"), lit(nr).as("nr"))
       .write.mode("overwrite").parquet(s"$path/_meta")
@@ -57,7 +57,7 @@ object DsirModel {
   }
 
   private def meta(spark: SparkSession, path: String): (Int, Long, Long) = {
-    val m = spark.read.parquet(s"$path/_meta")
+    val m = SwapStore.readParquet(spark, s"$path/_meta")
       .select(col("buckets"), col("nt"), col("nr")).head
     (m.getInt(0), m.getLong(1), m.getLong(2))
   }
@@ -71,7 +71,7 @@ object DsirModel {
             path: String): DataFrame = {
     val (buckets, nt, nr) = meta(spark, path)
     Sampling.scoreAgainst(df, id, text, buckets,
-      spark.read.parquet(s"$path/_tc"), spark.read.parquet(s"$path/_rc"),
+      SwapStore.readParquet(spark, s"$path/_tc"), SwapStore.readParquet(spark, s"$path/_rc"),
       nt, nr)
   }
 
@@ -114,15 +114,15 @@ object DsirModel {
     val delta = Sampling.featureCounts(docs, text, buckets)
       .select(col("b"), (col("c") * sign).as("c"))
     val tmp = s"$path.fold"
-    spark.read.parquet(s"$path/_rc")
+    SwapStore.readParquet(spark, s"$path/_rc")
       .unionByName(delta)
       .groupBy(col("b"))
       .agg(greatest(sum(col("c")), lit(0L)).as("c"))
       .where(col("c") > 0)
       .write.mode("overwrite").parquet(s"$tmp/_rc")
-    spark.read.parquet(s"$path/_tc").write.mode("overwrite").parquet(s"$tmp/_tc")
-    val nt = total(spark.read.parquet(s"$tmp/_tc"))
-    val nr = total(spark.read.parquet(s"$tmp/_rc"))
+    SwapStore.readParquet(spark, s"$path/_tc").write.mode("overwrite").parquet(s"$tmp/_tc")
+    val nt = total(SwapStore.readParquet(spark, s"$tmp/_tc"))
+    val nr = total(SwapStore.readParquet(spark, s"$tmp/_rc"))
     spark.range(1)
       .select(lit(buckets).as("buckets"), lit(nt).as("nt"), lit(nr).as("nr"))
       .write.mode("overwrite").parquet(s"$tmp/_meta")

@@ -59,7 +59,7 @@ object IvfIndex {
     */
   def append(spark: SparkSession, newVecs: DataFrame, id: Column, vec: Column,
              path: String): Unit = {
-    val centArr = spark.read.parquet(s"$path/_centroids")
+    val centArr = SwapStore.readParquet(spark, s"$path/_centroids")
     val c = newVecs.select(id.as("cand_id"), vec.as("cv"))
     Similarity.assignCells(c, centArr)
       .write.mode("append").partitionBy("cell").parquet(path)
@@ -77,7 +77,7 @@ object IvfIndex {
     * centroid array — includes cells that are currently empty).
     */
   def numCells(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/_centroids")
+    SwapStore.readParquet(spark, s"$path/_centroids")
       .select(size(col("cents"))).head.getInt(0)
 
   /** True when the fullest cell holds more than `skewFactor` times the
@@ -103,7 +103,7 @@ object IvfIndex {
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame, idCol: Column): Unit = {
     val tmp = s"$path.remove"
-    val cents = spark.read.parquet(s"$path/_centroids")
+    val cents = SwapStore.readParquet(spark, s"$path/_centroids")
     spark.read.parquet(path).select(col("cand_id"), col("cv"), col("cell"))
       .join(broadcast(ids.select(idCol.as("cand_id"))), Seq("cand_id"), "left_anti")
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
@@ -143,7 +143,7 @@ object IvfIndex {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val tmp = s"$path.compact"
-    val cents = spark.read.parquet(s"$path/_centroids")
+    val cents = SwapStore.readParquet(spark, s"$path/_centroids")
     spark.read.parquet(path).select(col("cand_id"), col("cv"), col("cell"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
@@ -157,7 +157,7 @@ object IvfIndex {
   def query(spark: SparkSession, path: String,
             queries: DataFrame, queryId: Column, queryVec: Column,
             k: Int, nProbe: Int = 4): DataFrame = {
-    val centArr = spark.read.parquet(s"$path/_centroids")
+    val centArr = SwapStore.readParquet(spark, s"$path/_centroids")
     val q = queries.select(queryId.as("query_id"), queryVec.as("qv"))
     val probes = Similarity.probeCells(q, centArr, nProbe)
     val indexed = spark.read.parquet(path) // (cand_id, cv, cell=partition)

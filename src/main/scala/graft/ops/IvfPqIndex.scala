@@ -70,8 +70,8 @@ object IvfPqIndex {
     */
   def append(spark: SparkSession, newVecs: DataFrame, id: Column, vec: Column,
              path: String): Unit = {
-    val coarse = spark.read.parquet(s"$path/_centroids")
-    val bookRow = spark.read.parquet(s"$path/_codebook")
+    val coarse = SwapStore.readParquet(spark, s"$path/_centroids")
+    val bookRow = SwapStore.readParquet(spark, s"$path/_codebook")
     val meta = bookRow.select(col("m"), col("dim")).head
     val (m, dim) = (meta.getInt(0), meta.getInt(1))
     val c = newVecs.select(id.as("cand_id"),
@@ -92,8 +92,8 @@ object IvfPqIndex {
     */
   def compact(spark: SparkSession, path: String): Unit = {
     val tmp = s"$path.compact"
-    val cents = spark.read.parquet(s"$path/_centroids")
-    val book = spark.read.parquet(s"$path/_codebook")
+    val cents = SwapStore.readParquet(spark, s"$path/_centroids")
+    val book = SwapStore.readParquet(spark, s"$path/_codebook")
     spark.read.parquet(path).select(col("cand_id"), col("codes"), col("cell"))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(tmp)
@@ -110,8 +110,8 @@ object IvfPqIndex {
   def query(spark: SparkSession, path: String,
             queries: DataFrame, queryId: Column, queryVec: Column,
             k: Int, nProbe: Int = 4): DataFrame = {
-    val coarse = spark.read.parquet(s"$path/_centroids")
-    val bookRow = spark.read.parquet(s"$path/_codebook")
+    val coarse = SwapStore.readParquet(spark, s"$path/_centroids")
+    val bookRow = SwapStore.readParquet(spark, s"$path/_codebook")
     val meta = bookRow.select(col("m"), col("dim")).head
     val (m, dim) = (meta.getInt(0), meta.getInt(1))
     val book = bookRow.select(col("cents"))

@@ -99,7 +99,7 @@ object KMeansIndex {
     * [[KMeans.centroidsAsDouble]] for the IVF plumbing).
     */
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/_model/_centroids")
+    SwapStore.readParquet(spark, s"$path/_model/_centroids")
 
   /** Assign rows against the CURRENT stored centroids. */
   def assign(spark: SparkSession, df: DataFrame, id: Column, vec: Column,
@@ -146,7 +146,7 @@ object KMeansIndex {
     meta(spark, path).lastBatch
 
   private def meta(spark: SparkSession, path: String): Meta = {
-    val m = spark.read.parquet(s"$path/_model/_meta")
+    val m = SwapStore.readParquet(spark, s"$path/_model/_meta")
       .select(col("q"), col("k"), col("dim"), col("last_batch"),
         col("folds"), col("gen"), col("side_schema")).head
     Meta(m.getLong(0), m.getInt(1), m.getInt(2), m.getLong(3),
@@ -199,7 +199,7 @@ object KMeansIndex {
       val r = df.agg(max(abs(col("s")))).head
       if (r.isNullAt(0)) 0L else r.getLong(0)
     }
-    val stored = spark.read.parquet(s"$path/_model/_stats")
+    val stored = SwapStore.readParquet(spark, s"$path/_model/_stats")
     val (sStored, sBatch) = (maxAbsS(stored), maxAbsS(batchStats))
     require(sBatch <= Long.MaxValue - sStored,
       s"folding this batch (max |s|=$sBatch) into the accumulated " +
@@ -256,7 +256,7 @@ object KMeansIndex {
       .select(col("cell"), posexplode(col("xq")).as(Seq("d", "x")))
       .groupBy(col("cell"), col("d"))
       .agg(sum(col("x")).as("rs"), count(lit(1)).as("rn"))
-    val newStats = spark.read.parquet(s"$path/_model/_stats")
+    val newStats = SwapStore.readParquet(spark, s"$path/_model/_stats")
       .join(removedStats, Seq("cell", "d"), "left_outer")
       .select(col("cell"), col("d"),
         (col("s") - coalesce(col("rs"), lit(0L))).as("s"),

@@ -53,7 +53,7 @@ object SpanIndex {
     */
   def remove(spark: SparkSession, path: String, ids: DataFrame, idCol: Column): Unit = {
     val tmp = s"$path.remove"
-    spark.read.parquet(s"$path/grams")
+    SwapStore.readParquet(spark, s"$path/grams")
       .join(broadcast(ids.select(idCol.as("id"))), Seq("id"), "left_anti")
       .write.mode("overwrite").parquet(s"$tmp/grams")
     SwapStore.swapDirs(spark, path, tmp)
@@ -66,7 +66,7 @@ object SpanIndex {
   def compact(spark: SparkSession, path: String, filesPerTable: Int = 8): Unit = {
     require(filesPerTable > 0, "filesPerTable must be positive")
     val tmp = s"$path.compact"
-    spark.read.parquet(s"$path/grams").coalesce(filesPerTable)
+    SwapStore.readParquet(spark, s"$path/grams").coalesce(filesPerTable)
       .write.mode("overwrite").parquet(s"$tmp/grams")
     SwapStore.swapDirs(spark, path, tmp)
   }
@@ -161,7 +161,7 @@ object SpanIndex {
     // boilerplate would otherwise explode an inner join), and no
     // index-wide distinct per batch
     val hits = SpanDedup.grams(newDocs, id, text, n)
-      .join(spark.read.parquet(s"$path/grams").select(col("gram")),
+      .join(SwapStore.readParquet(spark, s"$path/grams").select(col("gram")),
         Seq("gram"), "left_semi")
       .select(col("id"), col("pos"))
     SpanDedup.mergeSpans(hits, n)
@@ -178,7 +178,7 @@ object SpanIndex {
                minDocs: Int = 2): DataFrame = {
     require(n > 0, "gram length n must be positive")
     require(minDocs >= 2, "a span duplicated across < 2 docs is not a duplicate")
-    SpanDedup.duplicateSpansFromGrams(spark.read.parquet(s"$path/grams"), n, minDocs)
+    SpanDedup.duplicateSpansFromGrams(SwapStore.readParquet(spark, s"$path/grams"), n, minDocs)
   }
 
   /** Corpus-vs-corpus span audit from TWO standing indexes, zero text
@@ -191,8 +191,8 @@ object SpanIndex {
   def crossSpans(spark: SparkSession, pathIncoming: String, pathCorpus: String,
                  n: Int = 8): DataFrame = {
     require(n > 0, "gram length n must be positive")
-    val hits = spark.read.parquet(s"$pathIncoming/grams")
-      .join(spark.read.parquet(s"$pathCorpus/grams").select(col("gram")),
+    val hits = SwapStore.readParquet(spark, s"$pathIncoming/grams")
+      .join(SwapStore.readParquet(spark, s"$pathCorpus/grams").select(col("gram")),
         Seq("gram"), "left_semi")
       .select(col("id"), col("pos"))
     SpanDedup.mergeSpans(hits, n)

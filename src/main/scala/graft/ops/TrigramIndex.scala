@@ -70,7 +70,7 @@ object TrigramIndex {
   private case class Meta(folds: Long, lastBatch: Long)
 
   private def meta(spark: SparkSession, path: String): Meta = {
-    val m = spark.read.parquet(s"$path/_model/meta")
+    val m = SwapStore.readParquet(spark, s"$path/_model/meta")
       .select(col("folds"), col("last_batch")).head
     Meta(m.getLong(0), m.getLong(1))
   }
@@ -348,7 +348,7 @@ object TrigramIndex {
     // rarest-k selection from the (query-vocabulary-pruned) df table;
     // a gram the index has never seen has df 0 — maximally selective,
     // and correctly yields zero candidates for its query
-    val dfMap = spark.read.parquet(s"$path/_model/df")
+    val dfMap = SwapStore.readParquet(spark, s"$path/_model/df")
       .where(col("gram").isin(allGs: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val sel = qgAll.groupBy(_._1).iterator.flatMap { case (q, gs) =>
@@ -439,7 +439,7 @@ object TrigramIndex {
     // df grows from the WRITTEN fold (materialize-once: a replay into
     // the same fold dir recomputes the identical increment)
     val fPost = spark.read.schema(postSchema).parquet(s"$path/_post/fold=$fold")
-    val grown = spark.read.parquet(s"$path/_model/df")
+    val grown = SwapStore.readParquet(spark, s"$path/_model/df")
       .unionByName(fPost.groupBy(col("gram")).agg(count(lit(1)).as("df")))
       .groupBy(col("gram")).agg(sum(col("df")).as("df"))
     val tmp = s"$path/_model.next"
@@ -493,7 +493,7 @@ object TrigramIndex {
       tmpPost, fold)
     SwapStore.swapDirs(spark, s"$path/_post", tmpPost)
     val tmp = s"$path/_model.next"
-    writeModel(spark, tmp, spark.read.parquet(s"$path/_model/df"),
+    writeModel(spark, tmp, SwapStore.readParquet(spark, s"$path/_model/df"),
       m.copy(folds = fold))
     SwapStore.swapDirs(spark, s"$path/_model", tmp)
   }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.core.SwapStore
+
 /** Batch file sources.
   *
   * Covers the reference's file-ingest surface (reference: gui/app_gcp.py:244-264
@@ -16,10 +18,12 @@ final case class Tables(spark: SparkSession, dir: String) {
   // Spark's parquet reader rejects that type unless
   // spark.sql.legacy.parquet.nanosAsLong=true. That conf is
   // session-construction state, not read-path state — GraftSession.local
-  // sets it; externally-built sessions must too.
+  // sets it; externally-built sessions must too. It reaches the reader
+  // through `sessionState.conf`: SwapStore.readParquet converts the
+  // footer schema with a converter built from it, as inference does.
   // (Newer generations write timestamp[us]; [[events]] adapts per schema.)
   def table(name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    SwapStore.readParquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame    = table("region")
   def nation: DataFrame    = table("nation")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** The ONE place graft touches Spark-internal (non-public) API. Everything
-  * else in the engine builds on the stable public surface; the three escape
+  * else in the engine builds on the stable public surface; the four escape
   * hatches here each have a pinned contract that must be re-verified on a
   * Spark upgrade (written against Spark 4.1.x):
   *
@@ -32,6 +32,20 @@ import org.apache.spark.sql.classic.ExpressionUtils
   *     nothing checks the rows, so each must match the schema; the plan is
   *     a `LogicalRDD` scanning the RDD as is. Fallback: `createDataFrame`
   *     over encoder-converted rows, inside [[internalDataFrame]] only.
+  *
+  *  4. `ParquetFileFormat.readSchemaFromFooter` with a
+  *     `ParquetToSparkSchemaConverter(sessionState.conf)`: the schema
+  *     Spark's own parquet inference derives from one footer, without
+  *     the one-task job that inference runs to read it. Contract relied
+  *     on: inference without `mergeSchema` converts exactly one footer
+  *     with a converter built from the same session flags (binary as
+  *     string, INT96, timestamp NTZ, `nanosAsLong`), preferring the
+  *     Spark schema stored in the footer's key-value metadata; the file
+  *     index lists the names `HadoopFSUtils.shouldFilterOutPathName`
+  *     keeps; and a missing path raises
+  *     `QueryCompilationErrors.dataPathNotExistError` (`PATH_NOT_FOUND`).
+  *     Fallback: `spark.read.parquet(path).schema`, inside
+  *     [[graft.core.SwapStore.readParquet]] only.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -59,4 +73,23 @@ object ColumnBridge {
   def internalDataFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[InternalRow],
                         schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+
+  /** The Spark schema of a parquet footer, as inference reads it
+    * (contract #4).
+    */
+  def parquetSchema(spark: SparkSession,
+                    footer: org.apache.parquet.hadoop.Footer): org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat.readSchemaFromFooter(
+      footer, new org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        spark.asInstanceOf[classic.SparkSession].sessionState.conf))
+
+  /** True when Spark's file index lists a file or dir named `name`
+    * (contract #4).
+    */
+  def listedByFileIndex(name: String): Boolean =
+    !org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Spark's own `[PATH_NOT_FOUND]` error for a read of `path` (contract #4). */
+  def pathNotFound(path: String): Throwable =
+    org.apache.spark.sql.errors.QueryCompilationErrors.dataPathNotExistError(path)
 }

@@ -95,6 +95,30 @@ class ContractSpec extends AnyFunSuite {
     assert(fsOfs == 1, s"def fsOf is defined $fsOfs times under core/")
   }
 
+  test("core, sources and ops read parquet with a schema or through SwapStore.readParquet") {
+    // a bare read infers its schema in a one-task Spark job that ships
+    // the session's Hadoop conf; readParquet takes it from the footer
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = Seq("core", "sources", "ops").flatMap(d => java.nio.file.Files.walk(root.resolve(d))
+      .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq)
+    val comments = "(?s)/\\*.*?\\*/|//[^\\n]*".r
+    val bare = "read\\s*\\.\\s*parquet\\s*\\(\\s*([^)]*?)\\s*\\)".r
+    val hits = files.flatMap { f =>
+      val code = comments.replaceAllIn(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"), "")
+      bare.findAllMatchIn(code).map(m => (root.relativize(f).toString, m.group(1)))
+    }
+    // the helper's own fallback, and the index roots whose `cell=`
+    // partition dirs are not a flat layout
+    val allowed = Set(("core/SwapStore.scala", "path"), ("ops/IvfIndex.scala", "path"),
+      ("ops/IvfPqIndex.scala", "path"))
+    assert(hits.contains(("core/SwapStore.scala", "path")),
+      s"the fence no longer matches SwapStore.readParquet's fallback: $hits")
+    assert(bare.findFirstIn("spark.read\n  .parquet(s\"$dir/x\")").isDefined)
+    val outside = hits.filterNot(allowed)
+    assert(outside.isEmpty, s"read.parquet without a schema outside SwapStore.readParquet: $outside")
+  }
+
   test("core/SwapStore owns the micro-batch loop and checkpoint guard of ops and core") {
     // every store-touching stream starts through SwapStore.writerStream
     // (durable-checkpoint guard first) or readerStream; a hand-written
